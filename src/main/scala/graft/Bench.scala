@@ -161,8 +161,10 @@ object Bench {
         log.filter(col("seq") === 1), s"$rtmp/in", 0)
       graft.streaming.StreamingOps.writeWave(
         log.filter(col("seq") > 1), s"$rtmp/in", 1)
-      graft.streaming.StreamingOps.runCdcPass(spark, log.schema,
-        s"$rtmp/in", s"$rtmp/ckpt", s"$rtmp/state")
+      graft.streaming.StreamingOps.runCdcPass(spark,
+        graft.sources.FileCdcSource(log.schema, s"$rtmp/in"), s"$rtmp/ckpt",
+        graft.streaming.PassSpec(
+          graft.streaming.OneTable(s"$rtmp/state")))
       graft.streaming.StreamingOps.compactState(spark, s"$rtmp/state")
       // MIN-OF-3 like the calibration probe and the index probes: these
       // reads are pure (no index append), and a single-shot timing at
@@ -216,8 +218,10 @@ object Bench {
         rep.filter(col("seq") === 1), s"$rtmp/in", 0)
       graft.streaming.StreamingOps.writeWave(
         rep.filter(col("seq") > 1), s"$rtmp/in", 1)
-      graft.streaming.StreamingOps.runCdcPass(spark, log.schema,
-        s"$rtmp/in", s"$rtmp/ckpt", s"$rtmp/state")
+      graft.streaming.StreamingOps.runCdcPass(spark,
+        graft.sources.FileCdcSource(log.schema, s"$rtmp/in"), s"$rtmp/ckpt",
+        graft.streaming.PassSpec(
+          graft.streaming.OneTable(s"$rtmp/state")))
       graft.streaming.StreamingOps.compactState(spark, s"$rtmp/state")
       // MIN-OF-3 like the calibration probe and the index probes: these
       // reads are pure (no index append), and a single-shot timing at

@@ -106,7 +106,7 @@ object ProfileQueries {
         .map { case (s, xs) => (s, xs.map(_._2).sum, xs.size) }
         .toSeq.sortBy(-_._2)
       val jobSum = bySite.map(_._2).sum
-      println(f"== $name%s wall=$wall%.2fs jobs=$jobSum%.2fs (driver-gap=${wall - jobSum}%.2fs)")
+      println(f"== $name%s njobs=${done.size}%d wall=$wall%.2fs jobs=$jobSum%.2fs (driver-gap=${wall - jobSum}%.2fs)")
       println(f"   tasks n=${taskAgg.get(4)}%d run=${taskAgg.get(0) / 1e3}%.2fs gc=${taskAgg.get(1) / 1e3}%.2fs ser=${taskAgg.get(2) / 1e3}%.2fs dur=${taskAgg.get(3) / 1e3}%.2fs fetch=${taskAgg.get(5) / 1e3}%.2fs")
       bySite.take(18).foreach { case (s, t, n) =>
         println(f"   $t%7.3fs x$n%-3d $s%s")

@@ -183,7 +183,7 @@ object Replication {
     * `partialImageCol` names the columns-present list of a
     * `binlog_row_image=MINIMAL` stream: each batch completes into full
     * row images against the prior state at apply time (see
-    * StreamingOps.completePartialImages), so the replica and every
+    * StreamingOps.completePartialImagesMulti), so the replica and every
     * downstream consumer hold full rows. */
   /** `ddlSql` is the RAW-TEXT alternative to the structured DDL
     * arguments: the gap's `QueryEvent` statements as the binlog ships
@@ -221,6 +221,12 @@ object Replication {
       ddlSql: Seq[(Long, String)] = Seq.empty,
       ddlTable: Option[String] = None)
       : SyncProgress = {
+    require(strictBefore.isEmpty || conflictDlq.isDefined,
+      "strictBefore without a conflictDlq would DISCARD conflicted " +
+        "events with no record anywhere — declare the dead-letter dir")
+    require(conflictDlq.isEmpty || strictBefore.isDefined,
+      "a conflict DLQ without a strict-before declaration is dead " +
+        "config — declare strictBefore or drop the DLQ dir")
     val (renames2, truncate2, defaults2, drops2) =
       if (ddlSql.isEmpty) (renameCols, truncateAtSeq, defaultCols, dropCols)
       else {
@@ -279,16 +285,19 @@ object Replication {
         }
         (cfg.renameCols, cfg.truncateAtSeq, cfg.defaultCols, cfg.dropCols)
       }
-    val (rows, epochs, lastSeq, pending, srcMax) =
-      streaming.StreamingOps.runCdcPass(
-        spark, schema, inDir, ckptDir, stateDir, trackSeq = true,
-        startAfterSeq = fromSeq, txnCol = txnCol, renameCols = renames2,
-        truncateAtSeq = truncate2, defaultCols = defaults2,
-        rowFilter = rowFilter, maskCols = maskCols, keyCols = keyCols,
-        dropCols = drops2, keepHistory = keepHistory,
-        computedCols = computedCols, partialImageCol = partialImageCol,
-        heartbeats = heartbeats, strictBefore = strictBefore,
-        conflictDlq = conflictDlq)
+    import streaming.{Ddl, OneTable, PassSpec, StrictBefore}
+    def perTable[V](v: Option[V]): Map[String, V] =
+      v.map(OneTable.Table -> _).toMap
+    val r = streaming.StreamingOps.runCdcPass(spark,
+      sources.FileCdcSource(schema, inDir), ckptDir,
+      PassSpec(OneTable(stateDir, keyCols), txnCol, fromSeq,
+        Ddl(renames2, perTable(truncate2), defaults2, drops2),
+        perTable(rowFilter), perTable(Some(maskCols).filter(_.nonEmpty)),
+        computedCols, keepHistory, partialImageCol, heartbeats,
+        strictBefore.map { case (pc, bc) =>
+          StrictBefore(pc, bc, conflictDlq.get) },
+        trackSeq = true))
+    val lastSeq = r.resolvedSeq
     if (deltaCount(stateDir) > compactEvery)
       streaming.StreamingOps.compactState(spark, stateDir, tombstoneGc)
     // the connector reported this pass's horizon under its own dialect:
@@ -297,7 +306,8 @@ object Replication {
     // horizon is whatever the previous pass already recorded)
     for (t <- positionToken; sq <- lastSeq)
       PositionCatalog.record(ckptDir, t, sq)
-    SyncProgress(rows, epochs, lastSeq, pending, srcMax)
+    SyncProgress(r.rowsConsumed, r.epochs(), lastSeq, r.pendingRows,
+      r.seenSeq)
   }
 
   /** Incremental sync that ALSO keeps an aggregate VIEW in step — the
@@ -978,7 +988,7 @@ object Replication {
     * tables whose PKs differ — a header table keyed by order id next
     * to a lines table keyed by (order id, line no) — and the single
     * fan-out job collapses each table under its own key (see
-    * StreamingOps.runCdcPassMultiSource). */
+    * StreamingOps.runCdcPass). */
   /** `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
     * [[incrementalSync]]'s: the gap's QueryEvents fold through
     * [[streaming.DdlSql.foldTopology]] scoped to the replicated set —
@@ -1063,17 +1073,19 @@ object Replication {
         }
         (cfg.renameCols, truncates, cfg.defaultCols, cfg.dropCols)
       }
-    val (stats, pending, srcMax) = streaming.StreamingOps.runCdcPassMulti(
-      spark, schema, inDir, ckptDir, stateDirs, txnCol, renames2, truncate2,
-      defaults2, rowFilters, maskCols, keyCols, trackSourceSeq = true,
-      keyColsByTable = keyColsByTable, dropCols = drops2,
-      keepHistory = keepHistory)
+    import streaming.{Ddl, FanOut, PassSpec}
+    val r = streaming.StreamingOps.runCdcPass(spark,
+      sources.FileCdcSource(schema, inDir), ckptDir,
+      PassSpec(FanOut(stateDirs, keyCols, keyColsByTable), txnCol,
+        ddl = Ddl(renames2, truncate2, defaults2, drops2),
+        rowFilters = rowFilters, maskCols = maskCols,
+        keepHistory = keepHistory, trackSeq = true))
     // the topology shares ONE binlog, so its position catalog entry is
     // topology-level: the newest seq any table applied (the binlog is
     // applied up to there; a table absent from this pass's waves simply
     // had no events below it)
     for (tk <- positionToken;
-         mx <- stats.values.map(_._3).maxOption)
+         mx <- r.tables.values.flatMap(_.maxSeq).maxOption)
       PositionCatalog.record(ckptDir, tk, mx)
     stateDirs.map { case (t, dir) =>
       if (deltaCount(dir) > compactEvery)
@@ -1081,10 +1093,8 @@ object Replication {
           // the topology-level pending tail, not the (absent) per-table
           // one, must hold down each table's purge floor
           pendingRoot = if (txnCol.isDefined) Some(ckptDir) else None)
-      t -> stats.get(t)
-        .map { case (rows, epochs, mx) =>
-          SyncProgress(rows, epochs, Some(mx), pending, srcMax) }
-        .getOrElse(SyncProgress(0L, 0L, None, pending, srcMax))
+      val a = r.tables.getOrElse(t, streaming.Applied(0L, 0L, None))
+      t -> SyncProgress(a.rows, a.epochs, a.maxSeq, r.pendingRows, r.seenSeq)
     }
   }
 

@@ -3546,7 +3546,7 @@ object BinlogBinary {
     * in ONE distributed per-file decode (a single dump relation in the
     * returned plan; only the GTID index — one tiny row per transaction
     * — is an eager driver-side collect, to build the broadcast).
-    * Exactly the shape `runCdcPass(txnCol = …)` consumes: an
+    * Exactly the shape `PassSpec(txnCol = …)` consumes: an
     * uncommitted trailing transaction (GTID event and rows, no Xid)
     * arrives marker-less and is held back by the gate. */
   def parseTxn(spark: SparkSession, dir: String,

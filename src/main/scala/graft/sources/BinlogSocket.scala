@@ -192,7 +192,7 @@ object BinlogSocket {
       changedCol: Option[String] = None,
       hints: Map[String, BinlogBinary.WireHint] = Map.empty,
       /** Surface the master's type-27 keep-alives as `op = "H"`
-        * position-only rows (the `runCdcPass(heartbeats = true)`
+        * position-only rows (the `PassSpec(heartbeats = true)`
         * feed) — heartbeats exist ONLY on the socket, which makes
         * this transport their natural source; skipped (the file
         * transports' posture) unless opted in. */

@@ -146,8 +146,8 @@ object BinlogText {
     * `beforeCols` additionally surfaces the WHERE image — the BEFORE
     * image a `binlog_row_image=FULL` dump carries for updates and
     * deletes — as `before_<col>` columns (NULL on inserts), exactly the
-    * shape [[graft.streaming.StreamingOps.runCdcPass]]'s `strictBefore`
-    * gate consumes: the strict slave-exec discipline straight from the
+    * shape [[graft.streaming.PassSpec]]'s `strictBefore` gate
+    * consumes: the strict slave-exec discipline straight from the
     * dump text, no connector in between.
     *
     * `changedCol` names a columns-present list to surface: under
@@ -158,7 +158,7 @@ object BinlogText {
     * their WHERE positions, because a MINIMAL delete's before image is
     * PK-ONLY, not full — harmless to the collapse (delete payloads are
     * null by design) but visible to history/audit consumers. This is
-    * the shape `runCdcPass(partialImageCol = …)`'s completion-at-apply
+    * the shape `PassSpec(partialImageCol = …)`'s completion-at-apply
     * consumes, so a MINIMAL dump replays correctly with no connector
     * in between either. */
   def parse(spark: SparkSession, dir: String,
@@ -505,7 +505,7 @@ object BinlogText {
       require(beforeCols.isEmpty,
         "beforeCols and changedCol are mutually exclusive — MINIMAL row " +
           "images carry no before images by definition (the same rule " +
-          "as runCdcPass's strictBefore vs partialImageCol)")
+          "as PassSpec's strictBefore vs partialImageCol)")
     }
     val schema = StructType(
       Seq(StructField("op", StringType, nullable = false),
@@ -527,7 +527,7 @@ object BinlogText {
     * column list, and lands in the SHARED envelope `(op, seq, ts,
     * <tableCol>, <union of all tables' columns>)` with the columns a
     * table does not carry left NULL — exactly the one-envelope shape
-    * [[graft.streaming.StreamingOps.runCdcPassMulti]] fans out (its
+    * a [[graft.streaming.FanOut]] pass fans out (its
     * per-table state dirs, filters, and keys all dispatch on the same
     * table column). Overlapping column names must agree on type (one
     * envelope column serves them all); same-named columns at different
@@ -1245,7 +1245,7 @@ object BinlogText {
     * GTID (`txnCol` = `uuid:n`, from the deepest GTID stamp at or
     * below each event's position) plus one `op = "C"` commit-marker
     * row per Xid event, positioned and time-stamped by the Xid's own
-    * header — exactly the shape `runCdcPass(txnCol = …)` consumes. An
+    * header — exactly the shape `PassSpec(txnCol = …)` consumes. An
     * uncommitted TRAILING transaction (GTID stamp and row events, no
     * Xid yet) therefore arrives marker-less and is held back by the
     * gate, and because the header times ride the envelope's `ts`, a
@@ -1271,7 +1271,7 @@ object BinlogText {
 
   /** [[parseTxn]] over a MULTI-TABLE dump ([[parseMulti]] + the GTID/
     * Xid machinery): the cross-table transaction shape —
-    * `runCdcPassMulti(txnCol)`'s input — straight from dump bytes. One
+    * a txn-gated `FanOut` pass's input — straight from dump bytes. One
     * transaction's events may span tables; its single Xid closes them
     * all at once (the marker is TOPOLOGY-level: its `tableCol` reads
     * the `_ctl` placeholder — markers are consumed by the gate, never

@@ -5,7 +5,8 @@ import org.apache.spark.sql.types.StructType
 
 /** Streaming-ingest abstraction (SURVEY.md §1.2): the reference tails a
   * MySQL binlog (prod: Kafka+Debezium); the harness plays parquet waves
-  * through a file stream. Every `runCdcPass*` topology consumes its
+  * through a file stream. Every CDC pass (`StreamingOps.runCdcPass`,
+  * one table or a fan-out topology) consumes its
   * change events through this trait, so swapping the transport — file,
   * in-memory test stream, Kafka — is a constructor argument, not a
   * rewrite of the apply machinery. Mirrors the batch side's
@@ -39,7 +40,7 @@ final case class FileCdcSource(schema: StructType, path: String)
   * natural arrival unit; blocks are self-positioned so arrival order
   * never matters). The decode is [[BinlogText.parse]]'s, unchanged —
   * `cols` is the TABLE_MAP column list, `beforeCols`/`changedCol` the
-  * FULL/MINIMAL image surfaces — so every `runCdcPass*` topology
+  * FULL/MINIMAL image surfaces — so every `runCdcPass` topology
   * consumes dump bytes through the same trait plug as parquet waves,
   * MemoryStream, or Kafka: the transport is a constructor argument,
   * not a rewrite. */
@@ -64,14 +65,14 @@ final case class BinlogTextCdcSource(dir: String,
   * carries N tables' interleaved row events (the reference's actual
   * topology), each block dispatching on its verb line's table under
   * [[BinlogText.parseMulti]]'s rules — the natural feed for
-  * `runCdcPassMultiSource`'s per-table fan-out. */
+  * `runCdcPass`'s per-table fan-out (a `FanOut` topology). */
 final case class BinlogTextMultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],
     ignoreTables: Set[String] = Set.empty,
     changedCol: Option[String] = None,
     /** See [[BinlogTextCdcSource.requireTerminator]]. */
     requireTerminator: Boolean = true) extends CdcSource {
-  // the table column is PINNED to "table": runCdcPassMulti* dispatches
+  // the table column is PINNED to "table": a FanOut pass dispatches
   // on exactly that name (groupBy/partitionBy/filters), so a
   // configurable name here would either break analysis or — if a
   // payload column happened to be named 'table' — silently mis-dispatch
@@ -89,7 +90,7 @@ final case class BinlogTextMultiCdcSource(dir: String,
   * — one file per micro-batch, the tail's natural arrival unit, no
   * mysqlbinlog in between. The decode is [[BinlogBinary.parse]]'s,
   * unchanged (CRC-verified, TABLE_MAP-validated), so every
-  * `runCdcPass*` topology consumes raw wire bytes through the same
+  * `runCdcPass` topology consumes raw wire bytes through the same
   * trait plug as parquet waves, dump text, or Kafka. */
 final case class BinlogBinaryCdcSource(dir: String,
     cols: Seq[(String, org.apache.spark.sql.types.DataType)],
@@ -146,7 +147,7 @@ final case class BinlogSocketCdcSource(dir: String,
   * dir carries N tables' interleaved row events, each dispatching on
   * the table name its TABLE_MAP carries on the wire under
   * [[BinlogBinary.parseMulti]]'s rules — the natural raw-bytes feed
-  * for `runCdcPassMultiSource`'s per-table fan-out. */
+  * for `runCdcPass`'s per-table fan-out (a `FanOut` topology). */
 final case class BinlogBinaryMultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],
     ignoreTables: Set[String] = Set.empty,
@@ -190,7 +191,7 @@ final case class BinlogBase64CdcSource(dir: String,
 
 /** [[BinlogBase64CdcSource]] for a MULTI-TABLE non-verbose dump: one
   * tailed dir, N tables dispatched on the TABLE_MAP names the base64
-  * payloads carry on the wire — `runCdcPassMultiSource`'s fan-out
+  * payloads carry on the wire — a `FanOut` pass's fan-out
   * from the default mysqlbinlog output. */
 final case class BinlogBase64MultiCdcSource(dir: String,
     colsByTable: Map[String, Seq[(String, org.apache.spark.sql.types.DataType)]],

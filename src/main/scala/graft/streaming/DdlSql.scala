@@ -6,8 +6,8 @@ package graft.streaming
   * statement text the client ran (`ALTER TABLE orders ADD COLUMN note
   * VARCHAR(32) DEFAULT 'none'`) as a QueryEvent at a binlog position.
   * Every DDL behavior in this engine already exists as a structured
-  * declaration ([[StreamingOps.runCdcPass]]'s `renameCols` /
-  * `defaultCols` / `dropCols` / `truncateAtSeq`,
+  * declaration ([[PassSpec]]'s `ddl`: `renames` / `defaults` /
+  * `drops` / `truncateAt`,
   * `graft.Replication.renameTables`); this object is the missing
   * mapping from the wire text onto those verbs, so a binlog feed
   * survives DDL without an operator translating statements by hand.
@@ -93,7 +93,7 @@ object DdlSql {
 
   /** The structured configuration one resumed pass takes — the fold of
     * every QueryEvent in the gap between two passes. Feed the fields
-    * straight into [[StreamingOps.runCdcPass]]; apply `tableRenames`
+    * straight into a [[PassSpec]]'s `ddl`; apply `tableRenames`
     * BEFORE the pass via [[graft.Replication.renameTables]] (they
     * rebind state dirs, not columns). */
   final case class DdlConfig(
@@ -841,8 +841,8 @@ object DdlSql {
       keepPair = { case (a, b) => tableFilter.forall(t =>
         a.equalsIgnoreCase(t) || b.equalsIgnoreCase(t)) })._1
 
-  /** [[fold]] for the MULTI-TABLE topology ([[StreamingOps
-    * .runCdcPassMulti]]'s config shape): scope = membership in the
+  /** [[fold]] for the MULTI-TABLE topology (a [[FanOut]] pass's
+    * config shape): scope = membership in the
     * replicated set. Column verbs fold ENVELOPE-WIDE exactly as the
     * multi pass applies them — one binlog, one shared envelope, one
     * fan-out: a rename declared on any replicated table renames the

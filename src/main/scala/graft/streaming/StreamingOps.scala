@@ -216,7 +216,10 @@ object StreamingOps {
     * (table, encoded key), and struct comparison treats the padded
     * NULLs exactly as grouping treated the JSON encode. `schema`
     * supplies the padded fields' types (both sides of a join must
-    * build the same struct type). */
+    * build the same struct type). Grouping and joining on the struct
+    * normalize floating-point fields, exactly as on bare key columns:
+    * `-0.0` and `0.0` key values collapse to one key, and so do all
+    * `NaN`s. */
   private def tableKeyStruct(keyFor: Map[String, Seq[String]],
       schema: org.apache.spark.sql.types.StructType): Column = {
     val allKeys = keyFor.values.flatten.toSeq.distinct.sorted
@@ -225,19 +228,6 @@ object StreamingOps {
       (if (owners.size == keyFor.size) col(c)
        else when(col("table").isin(owners: _*), col(c))
          .otherwise(lit(null).cast(schema(c).dataType))).as(c)
-    }: _*)
-  }
-
-  /** [[tableKeyStruct]] for a frame holding ONE table's rows (the
-    * per-table prior-image reads): same field set, same types, the
-    * non-key fields padded NULL unconditionally. */
-  private def tableKeyStructFor(keyFor: Map[String, Seq[String]],
-      t: String,
-      schema: org.apache.spark.sql.types.StructType): Column = {
-    val allKeys = keyFor.values.flatten.toSeq.distinct.sorted
-    struct(allKeys.map { c =>
-      (if (keyFor(t).contains(c)) col(c)
-       else lit(null).cast(schema(c).dataType)).as(c)
     }: _*)
   }
 
@@ -718,7 +708,8 @@ object StreamingOps {
     writeWave(env, in, 0)
     val dirs = Map("t_even" -> s"$tmp/state_even",
       "t_odd" -> s"$tmp/state_odd")
-    runCdcPassMulti(s, env.schema, in, s"$tmp/ckpt", dirs)
+    runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+      PassSpec(FanOut(dirs)))
     dirs.toSeq.sortBy(_._1).map { case (t, d) =>
       readLatestState(s, d).withColumn("tbl", lit(t))
     }.reduce(_.unionByName(_))
@@ -753,7 +744,8 @@ object StreamingOps {
     render(v1, cols1, s"$tmp/binlog1")
     val env1 = parse(s"$tmp/binlog1", cols1)
     writeWave(env1, in, 0)
-    runCdcPass(s, env1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(env1.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     // rotation 2: DDL statements at position 1, then evolved rows
     val cols2: BCols = Seq(
       "okey" -> LongType, "price" -> DoubleType,
@@ -773,9 +765,11 @@ object StreamingOps {
       tableFilter = Some("orders"))
     val env2 = parse(s"$tmp/binlog2", cols2)
     writeWave(env2, in, 1)
-    runCdcPass(s, env2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-      renameCols = cfg.renameCols, defaultCols = cfg.defaultCols,
-      dropCols = cfg.dropCols, truncateAtSeq = cfg.truncateAtSeq)
+    runCdcPass(s, FileCdcSource(env2.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state"),
+        ddl = Ddl(cfg.renameCols,
+          cfg.truncateAtSeq.map(OneTable.Table -> _).toMap,
+          cfg.defaultCols, cfg.dropCols)))
     readLatestState(s, s"$tmp/state")
   }
 
@@ -812,7 +806,8 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     // the S17 closure: the DDL generated from the REPLICATED table's
     // published schema must map every exercised type correctly
     val payload = org.apache.spark.sql.types.StructType(
@@ -844,7 +839,8 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     val payload = org.apache.spark.sql.types.StructType(
       readStateSchema(s"$tmp/state").get.fields
         .filterNot(f => Seq("op", "seq").contains(f.name)))
@@ -896,7 +892,8 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     val payload = org.apache.spark.sql.types.StructType(
       readStateSchema(s"$tmp/state").get.fields
         .filterNot(f => Seq("op", "seq").contains(f.name)))
@@ -934,7 +931,8 @@ object StreamingOps {
     val in = s"$tmp/in"
     writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
       Seq(col("okey")))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     readLatestState(s, s"$tmp/state")
       .select(col("okey"), col("op"), col("price"), col("status"),
         col("ts"), col("name"))
@@ -971,8 +969,8 @@ object StreamingOps {
     val envTxn = parseTxn(s"$tmp/binlog")
     val in = s"$tmp/in"
     writeWave(envTxn, in, 0)
-    runCdcPass(s, envTxn.schema, in, s"$tmp/ckpt", s"$tmp/state",
-      txnCol = Some("txn"))
+    runCdcPass(s, FileCdcSource(envTxn.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state"), txnCol = Some("txn")))
     readLatestState(s, s"$tmp/state")
       .select(col("okey"), col("op"), col("price"), col("status"),
         col("ts"))
@@ -1141,70 +1139,53 @@ object StreamingOps {
     writeWaves(ev, in, waveCol, ranges.size, Seq(col("event_id")))
   }
 
-  /** One streaming pass over the files currently in `in`: each micro-batch
-    * is collapsed to its own per-key latest rows and written as a DELTA
-    * under an epoch-keyed dir. O(batch) I/O per epoch (never O(total
-    * state)), overwrite-per-epoch makes replay idempotent, and ALL state
-    * lives on disk — a restarted query resumes from the checkpoint with no
-    * driver-side memory to lose. At production scale the same topology
-    * appends deltas to a ReplacingMergeTree-style table and lets the A8
-    * collapse run at read/merge time.
-    */
-  /** Shared ingest scaffold: play the change stream opened by `source`
-    * as micro-batches into `apply`, then return (rowsApplied,
-    * dataBatches). The transport is a [[CdcSource]] plug — the file
-    * impl in the harness, MemoryStream in StreamingSpec, Kafka+Debezium
-    * in production — the apply machinery never changes. Progress is
-    * free: StreamingQueryProgress already carries per-batch input row
-    * counts — no extra job runs on the timed path. (The buffer is
-    * bounded — spark.sql.streaming.numRecentProgressUpdates, default
-    * 100 — plenty for the harness's ≤4-wave passes; a long-lived
-    * production stream would consume a StreamingQueryListener instead.) */
   /** Fold a frame's max(`seq`) into a running horizon — the ONE
     * trackSeq position-bookkeeping primitive shared by the CDC passes
     * and both MV passes (one 1-row aggregate per call; the contract
-    * notes live on runCdcPassSource). */
+    * notes live on runCdcPass). */
   private def foldMaxSeq(df: DataFrame, into: Option[Long]): Option[Long] = {
     val r = df.agg(max(col("seq"))).collect()(0)
     if (r.isNullAt(0)) into
     else Some(into.fold(r.getLong(0))(math.max(_, r.getLong(0))))
   }
 
-  /** [[foldMaxSeq]] plus the event-TIME horizon in the SAME 1-row
-    * aggregate (zero extra jobs): max seq and max `ts` (as epoch
-    * micros), each max-merged into its accumulator. The ts horizon
-    * feeds the `Seconds_Behind_Master` analogue ([[readLagMarks]]) —
-    * the wall-clock gap between what the source last stamped and what
-    * the destination last resolved. */
-  private def foldMaxSeqTs(df: DataFrame, intoSeq: Option[Long],
-      intoTs: Option[Long]): (Option[Long], Option[Long]) = {
-    val tsCol = df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.TimestampType =>
-        Some(unix_micros(max(col("ts"))))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // sessions here run UTC (build.sbt forks with UTC), so the
-        // NTZ→TZ cast is the identity mapping onto epoch micros
-        Some(unix_micros(max(col("ts"))
-          .cast(org.apache.spark.sql.types.TimestampType)))
-      case _ =>
-        // pre-decoded NUMERIC envelope: the unit is unknowable here
-        // (a seconds-unit feed recorded as-is would read 10^6 off in
-        // the µs-based lag math) — leave the time horizon UNRECORDED;
-        // seq tracking is unaffected and secondsBehindSource honestly
-        // reports None instead of a silently wrong number
-        None
-    }
-    tsCol match {
-      case None =>
-        (foldMaxSeq(df, intoSeq), intoTs)
-      case Some(tc) =>
-        val r = df.agg(max(col("seq")), tc).collect()(0)
-        val s2 = if (r.isNullAt(0)) intoSeq
-          else Some(intoSeq.fold(r.getLong(0))(math.max(_, r.getLong(0))))
-        val t2 = if (r.isNullAt(1)) intoTs
-          else Some(intoTs.fold(r.getLong(1))(math.max(_, r.getLong(1))))
-        (s2, t2)
-    }
+  /** A replication position: max `seq` and max event time (`ts` as
+    * epoch micros), each None until a row carries one. */
+  private final case class Horizon(seq: Option[Long], ts: Option[Long]) {
+    def max(o: Horizon): Horizon =
+      Horizon((seq ++ o.seq).maxOption, (ts ++ o.ts).maxOption)
+  }
+  private val NoHorizon = Horizon(None, None)
+
+  /** `ts` as epoch micros. A pre-decoded NUMERIC envelope's unit is
+    * unknowable here (a seconds-unit feed recorded as-is would read 10^6
+    * off in the µs-based lag math), so its time horizon stays
+    * UNRECORDED and secondsBehindSource honestly reports None. */
+  private def eventMicros(schema: org.apache.spark.sql.types.StructType)
+      : Option[Column] = schema("ts").dataType match {
+    case org.apache.spark.sql.types.TimestampType =>
+      Some(unix_micros(col("ts")))
+    case org.apache.spark.sql.types.TimestampNTZType =>
+      // sessions here run UTC (build.sbt forks with UTC), so the
+      // NTZ→TZ cast is the identity mapping onto epoch micros
+      Some(unix_micros(
+        col("ts").cast(org.apache.spark.sql.types.TimestampType)))
+    case _ => None
+  }
+
+  /** The [[Horizon]] of the rows matching each of `conds`, all in ONE
+    * 1-row aggregate — one job however many conditions. The time
+    * horizon feeds the `Seconds_Behind_Master` analogue
+    * ([[readLagMarks]]). */
+  private def horizons(df: DataFrame, conds: Seq[Column]): Seq[Horizon] = {
+    val ts = eventMicros(df.schema)
+    val aggs = conds.flatMap(c =>
+      max(when(c, col("seq"))) +: ts.map(t => max(when(c, t))).toSeq)
+    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val w = aggs.size / conds.size
+    def at(i: Int) = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    conds.indices.map(i =>
+      Horizon(at(i * w), if (w == 2) at(i * w + 1) else None))
   }
 
   /** TIME-LAG MARKS (`_lag`: one tab-separated line,
@@ -1284,6 +1265,16 @@ object StreamingOps {
     withConfs(s, "spark.sql.shuffle.partitions" -> sized)(body)
   }
 
+  /** Shared ingest scaffold: play the change stream opened by `source`
+    * as micro-batches into `apply`, then return (rowsApplied,
+    * dataBatches). The transport is a [[CdcSource]] plug — the file
+    * impl in the harness, MemoryStream in StreamingSpec, Kafka+Debezium
+    * in production — the apply machinery never changes. Progress is
+    * free: StreamingQueryProgress already carries per-batch input row
+    * counts — no extra job runs on the timed path. (The buffer is
+    * bounded — spark.sql.streaming.numRecentProgressUpdates, default
+    * 100 — plenty for the harness's ≤4-wave passes; a long-lived
+    * production stream would consume a StreamingQueryListener instead.) */
   private def runSourcePass(s: SparkSession, source: CdcSource, ckpt: String)(
       apply: (Dataset[Row], Long) => Unit): (Long, Long) = {
     val query = withNoIdleBatch(s) {
@@ -1302,367 +1293,344 @@ object StreamingOps {
     (rows, epochs)
   }
 
-  /** `trackSeq` additionally reports the newest `seq` applied BY THIS
-    * PASS (one tiny 1-row aggregate per batch — only the Replication
-    * facade turns it on; the benchmarked queries never pay it). A batch
-    * consumed by more than one action inside foreachBatch MUST be
-    * persisted first: each extra action otherwise re-reads the file
-    * source, which both doubles the work and inflates the source's
-    * numInputRows metric (observed: rowsApplied exactly 2x).
+  /** THE CDC apply pass (SURVEY §3.1 #2): play the change stream opened
+    * by `source` and apply each micro-batch to the state dirs of
+    * `spec.topology` as one epoch-keyed delta per touched table. A
+    * single table is a one-entry topology ([[OneTable]]); a [[FanOut]]
+    * dispatches on the envelope's `table` column — the reference tool
+    * tails one binlog and applies to N destination tables the same way.
+    * O(batch) I/O per epoch (never O(total state)), and ALL state lives
+    * on disk: a restarted pass resumes from `ckpt` with no driver-side
+    * memory to lose.
     *
-    * `startAfterSeq` is the reference's explicit-position start
-    * (`--position`/GTID): events at or below the position are consumed
-    * from the stream (rowsApplied still reports consumption) but never
-    * applied to state, epochs left fully below the position write no
-    * delta at all, and the returned epoch count is the number of deltas
-    * actually WRITTEN (not batches consumed).
+    * Per batch, in order (each stage sees what the previous one left):
+    *  1. the position skip (`startAfterSeq`), heartbeat rows out, then
+    *     ROUTING (`routes`: one scan-local CASE, so every later step
+    *     speaks destination names);
+    *  2. the TXN GATE ([[txnGate]]): events apply only once their
+    *     `op = "C"` commit marker has arrived — in a topology, every
+    *     touched table applies its slice of a transaction in the SAME
+    *     epoch. The uncommitted tail lives under `state/_pending` for
+    *     a one-table pass and `ckpt/_pending` for a topology; an
+    *     at-least-once replay of epoch k re-reads the snapshot its
+    *     crashed attempt read, so the recomputed delta is identical;
+    *  3. MINIMAL row-image completion ([[completePartialImagesMulti]])
+    *     and the STRICT before-image gate ([[gateBeforeImagesMulti]]),
+    *     each against every table's own prior state, on full rows and
+    *     before filters — a conflict is a property of the source chain
+    *     vs the destination, not of what the replica chooses to ship;
+    *  4. per-table ROW FILTERS (deletes ALWAYS bypass the predicate: a
+    *     tombstone for a never-replicated key is a no-op, a FILTERED one
+    *     would strand a deleted row forever — so filter on effectively-
+    *     immutable columns), column MASKS, then COMPUTED columns (after
+    *     the masks, so a computed value never leaks a masked column).
+    *     Filters run at apply time: the pending tail carries a
+    *     transaction's events unfiltered;
+    *  5. one tiny table-discovery aggregate (per table: rows applied and
+    *     max seq, plus the resolved horizon under `trackSeq`). An
+    *     untracked one-table pass skips it: it probes emptiness where a
+    *     gate, filter or position can empty the batch, and otherwise
+    *     writes every batch;
+    *  6. ONE write job of the per-(table, key) latest-wins collapse
+    *     (skipped under `keepHistory`, and after completion, which
+    *     already yields one row per key). A one-table pass overwrites
+    *     `state/epoch=N` directly; a topology writes a
+    *     `partitionBy("table")` staging dir under the checkpoint and
+    *     renames each `table=` subdir into its state dir (a metadata
+    *     move; a replay deletes and re-renames, so a partially applied
+    *     crash heals).
     *
-    * `txnCol` turns on TRANSACTION-BOUNDARY apply (the GTID/XID
-    * analogue): events carry a transaction id in the named column and a
-    * transaction's end is marked by an `op = "C"` commit row (the binlog
-    * XID event; markers always FOLLOW their transaction's events in seq
-    * order). Each batch applies only events whose commit marker has been
-    * seen; the uncommitted tail is carried in an epoch-keyed pending
-    * snapshot under `state/_pending` (underscore-hidden from state
-    * reads), so a reader of the state dir can never observe a
-    * half-applied transaction — and an at-least-once replay of epoch k
-    * re-reads the SAME pending snapshot (the one written by the last
-    * epoch BELOW k), making the recomputed delta identical to the
-    * crashed attempt's. Commit markers are consumed the batch they
-    * arrive (their events are guaranteed present — in-batch or pending)
-    * and are never applied as rows; the committed-id set per batch is a
-    * handful of ids, so both the ready- and carry-joins broadcast.
+    * A batch consumed by more than one action is persisted first: each
+    * extra action otherwise re-reads the source, which doubles the work
+    * and inflates numInputRows. DDL metadata settles BEFORE the stream
+    * starts: renames carry published history to the new name, drops
+    * shrink it, then the type-change guardrail fires by name rather than
+    * as a mid-pass analysis error after some batches applied.
     *
-    * Returns (rowsConsumed, epochsWritten, maxAppliedSeq, pendingRows,
-    * sourceMaxSeq) — pendingRows is the txn-gated pass's uncommitted
-    * tail size after the pass (0 when gating is off): the operational
-    * signal for an ABANDONED transaction pinning pending state forever.
-    * sourceMaxSeq (tracked under `trackSeq`, like maxAppliedSeq) is the
-    * newest seq the pass SAW — applied or not — so
-    * `sourceMaxSeq - maxAppliedSeq` reads as REPLICATION LAG: it keeps
-    * advancing while a pending transaction, a start position, or a row
-    * filter holds events back from state, exactly the
-    * binlog-position-vs-applied-position gap a replication operator
-    * watches. */
-  private[graft] def runCdcPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String,
-      trackSeq: Boolean = false,
-      startAfterSeq: Option[Long] = None,
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAtSeq: Option[Long] = None,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilter: Option[String] = None,
-      maskCols: Seq[String] = Seq.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      computedCols: Seq[(String, String)] = Seq.empty,
-      partialImageCol: Option[String] = None,
-      heartbeats: Boolean = false,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Long, Long, Option[Long], Long, Option[Long]) =
-    runCdcPassSource(s, FileCdcSource(schema, in), ckpt, state, trackSeq,
-      startAfterSeq, txnCol, renameCols, truncateAtSeq, defaultCols,
-      rowFilter, maskCols, keyCols, dropCols, keepHistory, computedCols,
-      partialImageCol, heartbeats, strictBefore, conflictDlq)
-
-  /** [[runCdcPass]] over an arbitrary [[CdcSource]] transport.
-    * `renameCols` (old → new) declares RENAME COLUMN DDLs this pass's
-    * envelope carries (see [[applyRenameDdl]]): the published column is
-    * renamed in place and its epoch history keeps serving under the new
-    * name. `truncateAtSeq` declares a `TRUNCATE TABLE` QueryEvent at the
-    * given binlog position (see [[applyTruncateDdl]]): every event at or
-    * below it is dead at read time, events after it rebuild the table.
-    * `defaultCols` declares `ADD COLUMN … DEFAULT` clauses (see
-    * [[ColumnDefault]]): pre-DDL rows serve the default instead of NULL.
-    * `rowFilter`/`maskCols` are the single-table forms of the multi
-    * pass's per-table filters ([[runCdcPassMultiSource]]): only matching
-    * events replicate — deletes ALWAYS bypass the predicate — and masked
-    * payload columns ship as NULL. `heartbeats` declares that the
-    * transport emits binlog KEEP-ALIVE rows (`op = "H"`, position-only):
-    * they never reach state, they advance the applied position like a
-    * commit marker (the source's "nothing happened through here"), and a
-    * heartbeat-only batch writes no delta. Under transaction gating the
-    * advance is CAPPED at the oldest still-pending event — a keep-alive
-    * cannot resolve a held transaction, so a connector that interleaves
-    * a heartbeat ahead of events it already shipped cannot fake a
-    * caught-up position that a fresh resume would then skip from.
-    *
-    * `strictBefore` = (payload column, before column) turns on the
-    * STRICT before-image apply gate ([[gateBeforeImages]]): every
-    * UPDATE's declared before image must match what the destination
-    * serves, or the event (and the key's remaining batch chain)
-    * quarantines to `conflictDlq` instead of applying — MySQL's strict
-    * slave-exec discipline against out-of-order applies and second
-    * destination writers. Mutually exclusive with `partialImageCol`
-    * (MINIMAL row images carry no before images by definition). */
-  private[graft] def runCdcPassSource(s: SparkSession, source: CdcSource,
-      ckpt: String, state: String,
-      trackSeq: Boolean = false,
-      startAfterSeq: Option[Long] = None,
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAtSeq: Option[Long] = None,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilter: Option[String] = None,
-      maskCols: Seq[String] = Seq.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      computedCols: Seq[(String, String)] = Seq.empty,
-      partialImageCol: Option[String] = None,
-      heartbeats: Boolean = false,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
-    partialImageCol.foreach { cc =>
-      require(source.schema.fieldNames.contains(cc),
-        s"partial-image column '$cc' absent from the envelope")
-      require(!keepHistory,
-        "partial-image completion folds each batch to full per-key " +
-          "images; keepHistory stores events verbatim — the two modes " +
-          "are mutually exclusive (complete upstream to retain history)")
+    * `trackSeq` folds the SEEN horizon (the raw batch, ahead of every
+    * gate) and, for a one-table pass, the RESOLVED horizon: applied
+    * events plus those resolved without applying — commit markers (their
+    * events are applied by this batch, in-batch or carried), heartbeats
+    * (capped below the oldest still-pending event, so a keep-alive can
+    * never fake a caught-up position past a held transaction),
+    * position-skipped, filter-excluded and quarantined events. Both
+    * horizons carry the event time too, persisted as the one-table
+    * dir's `_lag` marks. */
+  private[graft] def runCdcPass(s: SparkSession, source: CdcSource,
+      ckpt: String, spec: PassSpec): PassResult = {
+    import spec._
+    val stateDirs = topology.stateDirs
+    val keyFor = topology.keyFor
+    // a one-table pass writes its state dir directly, roots the pending
+    // tail there and keeps `_lag` marks beside it
+    val oneState = topology match {
+      case OneTable(state, _) => Some(state)
+      case _ => None
     }
-    strictBefore.foreach { case (pc, bc) =>
-      Seq(pc, bc).foreach(c => require(
-        source.schema.fieldNames.contains(c),
-        s"strict-before column '$c' absent from the envelope"))
-      require(!(Set("op", "seq", "ts") ++ keyCols).contains(pc),
-        s"strict-before checks payload, not bookkeeping: '$pc'")
-      require(partialImageCol.isEmpty,
-        "binlog_row_image=MINIMAL carries no before images — the " +
-          "strict before-image gate and partial-image completion are " +
-          "mutually exclusive by definition")
-      require(conflictDlq.isDefined,
-        "strictBefore without a conflictDlq would DISCARD conflicted " +
-          "events with no record anywhere — declare the dead-letter dir")
-      // a rowFilter INTENTIONALLY diverges destination state from the
-      // source, so a key whose prior update was filter-excluded would
-      // quarantine its later admitted updates as false conflicts —
-      // refuse the composition up front (the partialImageCol treatment)
-      require(rowFilter.isEmpty,
-        "strictBefore checks before images against destination state " +
-          "that a rowFilter has intentionally diverged from the " +
-          "source — filter upstream, or replicate the table strictly " +
-          "and unfiltered")
-    }
-    require(conflictDlq.isEmpty || strictBefore.isDefined,
-      "a conflict DLQ without a strict-before declaration is dead " +
-        "config — declare strictBefore or drop the DLQ dir")
-    require(keyCols.forall(source.schema.fieldNames.contains),
+    val one = oneState.isDefined
+    val fields = source.schema.fieldNames
+    val allKeyCols = keyFor.values.flatten.toSet
+    require(allKeyCols.forall(fields.contains),
       s"key column(s) absent from the envelope: " +
-        keyCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
-    // key columns are identity, not payload: masking one would collapse
-    // unrelated keys together; so they join the unmaskable set
-    val unmaskable = Set("op", "seq", "ts") ++ keyCols ++ txnCol.toSet ++
-      partialImageCol.toSet
-    require(!maskCols.exists(unmaskable),
-      s"mask names bookkeeping column(s): " +
-        maskCols.filter(unmaskable).mkString(", "))
-    require(maskCols.forall(source.schema.fieldNames.contains),
-      s"mask names column(s) absent from the envelope: " +
-        maskCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
-    // DESTINATION COMPUTED COLUMNS (the ClickHouse MATERIALIZED column
-    // analogue): each (name, sql) computes scan-local per event at
-    // apply time — after masks, so a computed value can never leak a
-    // masked source column — and materializes in the delta like any
-    // envelope column. Types derive from one driver-side analysis of
-    // the expression against an empty envelope frame; name collisions
+        allKeyCols.filterNot(fields.contains).mkString(", "))
+    partialImageCol.foreach(cc => require(fields.contains(cc),
+      s"partial-image column '$cc' absent from the envelope"))
+    strictBefore.foreach { sb =>
+      Seq(sb.payloadCol, sb.beforeCol).foreach(c => require(
+        fields.contains(c),
+        s"strict-before column '$c' absent from the envelope"))
+      // a key column is degenerate to check (a PK rides every row image
+      // unchanged) and one table's key is another's payload
+      require(!(Set("op", "seq", "ts", "table") ++ allKeyCols)
+          .contains(sb.payloadCol),
+        s"strict-before checks payload, not bookkeeping or key " +
+          s"columns: '${sb.payloadCol}'")
+    }
+    maskCols.foreach { case (t, cs) =>
+      // identity, not payload: a table's OWN key columns are unmaskable
+      // (another table's key is ordinary payload here)
+      val unmaskable = Set("op", "seq", "ts", "table") ++ keyFor(t) ++
+        txnCol.toSet ++ partialImageCol.toSet
+      val bad = cs.filter(unmaskable)
+      require(bad.isEmpty,
+        s"table '$t' masks bookkeeping column(s): ${bad.mkString(", ")}")
+      val absent = cs.filterNot(fields.contains)
+      require(absent.isEmpty,
+        s"table '$t' masks column(s) absent from the envelope: " +
+          absent.mkString(", "))
+    }
+    // computed columns' types derive from one driver-side analysis of
+    // each expression against an empty envelope frame; name collisions
     // and later-pass expression changes fail loudly via the published
-    // schema (a silently changed expression would fork the column's
-    // history exactly like a type change).
+    // schema (a changed expression would fork the column's history)
     val computedFields = if (computedCols.isEmpty) Seq.empty else {
       val probe = s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), source.schema)
       computedCols.map { case (n, e) =>
-        require(!source.schema.fieldNames.contains(n),
+        require(!fields.contains(n),
           s"computed column '$n' collides with an envelope column")
         org.apache.spark.sql.types.StructField(n,
           probe.selectExpr(e).schema.head.dataType, nullable = true)
       }
     }
-    // DDL metadata settles BEFORE the stream starts: renames carry
-    // published history to the new name, then the type-change guardrail
-    // fires — the r8 open-envelope design absorbs ADD (union) and DROP
-    // (NULL forward), but a changed type must fail by name, not as a
-    // mid-pass analysis error after some batches already applied
+    // every table's state dir shares one envelope schema (one binlog,
+    // one fan-out) — validate/publish each before the stream starts
     val stateSchema = org.apache.spark.sql.types.StructType(
       stateSchemaFor(source.schema, txnCol.toSet ++ partialImageCol.toSet
-        ++ strictBefore.map(_._2)).fields ++ computedFields)
-    ensureKeyCols(state, keyCols)
-    applyRenameDdl(state, renameCols, stateSchema)
+        ++ strictBefore.map(_.beforeCol)).fields ++ computedFields)
+    stateDirs.foreach { case (t, d) => ensureKeyCols(d, keyFor(t)) }
+    stateDirs.values.foreach(applyRenameDdl(_, ddl.renames, stateSchema))
     // drops settle AFTER renames (a rename-then-drop pass drops the NEW
     // name) and BEFORE the schema union — which re-adds exactly the
     // columns the envelope still carries (the compressed-DDL window)
-    applyDropDdl(state, dropCols, stateSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq })
-    ensureStateSchema(state, stateSchema)
-    ensureHistoryMode(state, keepHistory)
-    applyTruncateDdl(state, truncateAtSeq)
-    applyDefaultDdl(state, defaultCols, stateSchema)
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
-    // event-TIME horizons, folded in the same 1-row aggregates as the
-    // seq horizons (foldMaxSeqTs) — the Seconds_Behind_Master record
-    var appliedTs = Option.empty[Long]
-    var srcTs = Option.empty[Long]
-    var written = 0L
-    // a batch consumed by >1 action must be pinned (see the note above);
-    // the position and row filters add an isEmpty probe, so they pin too
-    val multiAction = trackSeq || startAfterSeq.isDefined ||
-      txnCol.isDefined || rowFilter.isDefined ||
-      partialImageCol.isDefined || heartbeats || strictBefore.isDefined
+    stateDirs.values.foreach(applyDropDdl(_, ddl.drops, stateSchema,
+      readds = ddl.defaults.map { case (c, d) => c -> d.atSeq }))
+    stateDirs.values.foreach(ensureStateSchema(_, stateSchema))
+    stateDirs.values.foreach(ensureHistoryMode(_, keepHistory))
+    ddl.truncateAt.foreach { case (t, sq) =>
+      applyTruncateDdl(stateDirs(t), Some(sq)) }
+    stateDirs.values.foreach(applyDefaultDdl(_, ddl.defaults, stateSchema))
+    val pendRoot = oneState.getOrElse(ckpt)
+    val resolve = trackSeq && one
+    // the discovery aggregate (a shuffle: two jobs) runs where its
+    // answers are needed; an untracked one-table pass probes emptiness
+    // only where a gate, filter or position can empty a batch
+    val counted = !one || trackSeq
+    val direct = one && !trackSeq && startAfterSeq.isEmpty &&
+      txnCol.isEmpty && rowFilters.isEmpty && !heartbeats &&
+      strictBefore.isEmpty
+    val acc = scala.collection.mutable.Map.empty[String, Applied]
+      .withDefaultValue(Applied(0L, 0L, None))
+    var seen = NoHorizon
+    var resolved = NoHorizon
+    // staging lives WITH the checkpoint: the ckpt and the state dirs
+    // share a durable filesystem in production, so every staged `table=`
+    // subdir renames into its state dir as a metadata move
+    val stage = s"$ckpt/_staging"
+    val pinBatch = !direct || partialImageCol.isDefined
     val (rows, _) = runSourcePass(s, source, ckpt) { (batch, epochId) =>
-      if (multiAction) batch.persist()
-      var txnFull = Option.empty[DataFrame] // txn path's extra pin
-      var partialPinned = Option.empty[DataFrame]
-      var strictPinned = Option.empty[DataFrame]
+      if (pinBatch) batch.persist()
+      val pins = scala.collection.mutable.ListBuffer.empty[DataFrame]
       try {
+        val raw = batch.toDF()
         val positioned0 = startAfterSeq
-          .map(p => batch.filter(col("seq") > p)).getOrElse(batch)
-        // HEARTBEAT events (the binlog keep-alive rows a long-polling
-        // connector emits on a quiet source): op = "H" rows carry a
-        // position and nothing else — they must never reach state (a
-        // NULL-key phantom row) but DO advance the applied position
-        // below, exactly like a commit marker: the source is declaring
-        // "nothing happened through here", which is the caught-up
-        // signal a replication operator reads. Filtered BEFORE the txn
-        // gate (a heartbeat belongs to no transaction).
-        val positioned = if (!heartbeats) positioned0
-          else positioned0.filter(col("op") =!= "H")
-        val gatedTxn = txnCol match {
-          case None => positioned.toDF()
+          .fold(raw)(p => raw.filter(col("seq") > p))
+        // HEARTBEAT rows (op = "H") carry a position and nothing else:
+        // they never reach state, and a heartbeat belongs to no txn
+        val positioned =
+          if (heartbeats) positioned0.filter(col("op") =!= "H")
+          else positioned0
+        val entry =
+          if (topology.routes.isEmpty) positioned
+          else positioned.withColumn("table",
+            topology.routes.foldLeft(col("table")) {
+              case (acc, (src, dst)) =>
+                when(col("table") === src, lit(dst)).otherwise(acc)
+            })
+        val gated = txnCol match {
+          case None => entry
           case Some(tc) =>
-            // replay-deterministic input: this batch plus the pending
-            // snapshot of the newest epoch BELOW this one (never this
-            // epoch's own — a crashed attempt must re-read what its
-            // first attempt read)
-            val (ready, full) = txnGate(s, positioned.toDF(), tc, state, epochId)
-            txnFull = Some(full)
+            val (ready, full) = txnGate(s, entry, tc, pendRoot, epochId)
+            pins += full
             ready
         }
-        // MINIMAL row images complete BEFORE filters/masks/computed
-        // columns, so every later stage sees FULL rows — a row filter
-        // or computed column referencing an unchanged column must see
-        // its carried value, never a partial event's NULL
-        // pinned: the completed frame feeds the seq fold, the isEmpty
-        // probe, and the epoch write — without the cache each action
-        // re-runs the prior-state read and the completion shuffle
-        val completed = partialImageCol match {
-          case None => gatedTxn
-          case Some(cc) =>
-            val c = completePartialImages(s, state, epochId, gatedTxn,
-              keyCols, cc).persist()
-            partialPinned = Some(c)
-            c
+        // a one-table pass names its rows after the gate, so the pending
+        // tail keeps exactly the stream's own columns
+        val tagged =
+          if (one) gated.withColumn("table", lit(OneTable.Table)) else gated
+        // pinned: completion feeds the discovery aggregate and the write
+        val completed = partialImageCol.fold(tagged) { cc =>
+          val c = completePartialImagesMulti(s, stateDirs, keyFor,
+            epochId, tagged, cc).persist()
+          pins += c
+          c
         }
-        // STRICT BEFORE-IMAGE gate after completion (full rows), before
-        // filters/masks — a conflict is a property of the source chain
-        // vs the destination, not of what this replica chooses to ship
-        val checked = strictBefore match {
-          case None => completed
-          case Some((pc, bc)) =>
-            val (admitted, pin) = gateBeforeImages(s, state, epochId,
-              completed, keyCols, pc, bc, conflictDlq.get)
-            strictPinned = Some(pin)
-            admitted
+        val checked = strictBefore.fold(completed) { sb =>
+          val (adm, pin) = gateBeforeImagesMulti(s, stateDirs, keyFor,
+            epochId, completed, sb, dlqKeepsTable = !one)
+          pins += pin
+          adm
         }
-        // single-table row filter + masks (the multi pass's per-table
-        // forms): one codegen'd filter, one select — deletes bypass
-        val filtered = rowFilter.fold(checked)(p =>
-          checked.filter(col("op") === "D" || expr(p)))
+        // per-table row filters + column masks: ONE codegen'd filter and
+        // ONE select over the batch — never a job per table
+        val keep = rowFilters.foldLeft(lit(true)) { case (acc, (t, pred)) =>
+          acc && (col("table") =!= t || col("op") === "D" || expr(pred))
+        }
+        val filtered = if (rowFilters.isEmpty) checked else checked.filter(keep)
         val masked =
           if (maskCols.isEmpty) filtered
           else filtered.select(filtered.columns.toSeq.map { c =>
-            if (maskCols.contains(c))
-              lit(null).cast(filtered.schema(c).dataType).as(c)
-            else col(c)
+            val maskers = maskCols.collect {
+              case (t, cs) if cs.contains(c) => t }.toSeq
+            if (maskers.isEmpty) col(c)
+            else when(col("table").isin(maskers: _*),
+              lit(null).cast(filtered.schema(c).dataType))
+              .otherwise(col(c)).as(c)
           }: _*)
-        // computed columns AFTER masks (privacy: a computed value must
-        // not leak a masked source column) — scan-local, codegen'd
         val applied = computedCols.foldLeft(masked) {
           case (df, (n, e)) => df.withColumn(n, expr(e))
         }
         if (trackSeq) {
-          def fold(df: DataFrame): Unit = {
-            val (s2, t2) = foldMaxSeqTs(df, maxSeq, appliedTs)
-            maxSeq = s2; appliedTs = t2
-          }
-          fold(applied)
-          // the applied POSITION also advances through RESOLVED events
-          // that never reach state: a commit marker is resolved the
-          // batch it arrives (its txn's events are guaranteed applied by
-          // this batch — in-batch or carried pending), and events the
-          // start position covers are applied by definition. Without
-          // this fold a caught-up destination would read a permanent
-          // phantom lag of one trailing marker.
-          txnCol.foreach(_ => fold(batch.filter(col("op") === "C")))
-          if (heartbeats) {
-            // a heartbeat must never advance the applied position past
-            // HELD events: under the txn gate, only heartbeats below
-            // the oldest still-pending event fold (a faithful binlog
-            // cannot interleave a keep-alive ahead of events it already
-            // shipped — but position integrity must not TRUST the
-            // connector's ordering; a phantom caught-up here would make
-            // a fresh resume skip the held transaction). One 1-row min
-            // over the just-written pending snapshot, only when both
-            // gates are on.
-            val hb = batch.filter(col("op") === "H")
-            val capped =
-              if (txnCol.isEmpty) hb
-              else latestPendingBelow(state, Long.MaxValue) match {
-                case None => hb
-                case Some(p) =>
-                  val r = s.read.parquet(p).agg(min(col("seq"))).collect()(0)
-                  if (r.isNullAt(0)) hb
-                  else hb.filter(col("seq") < r.getLong(0))
-              }
-            fold(capped)
-          }
-          startAfterSeq.foreach(p => fold(batch.filter(col("seq") <= p)))
-          // filter-excluded events are resolved too: the predicate says
-          // they will never apply, which is configuration, not lag
-          rowFilter.foreach(_ => fold(gatedTxn))
-          // quarantined conflicts are resolved the batch they verdict:
-          // they will never apply (the operator reads them in the DLQ),
-          // so the applied position advances past them
-          strictBefore.foreach(_ => fold(completed))
-          // the SEEN horizon reads the raw batch — before the position
-          // skip, the txn gate, and the row filter — so the applied-vs-
-          // seen gap (replication lag) is visible while events are held
-          val (ss, st) = foldMaxSeqTs(batch.toDF(), srcMaxSeq, srcTs)
-          srcMaxSeq = ss; srcTs = st
+          // one aggregate over the raw batch: the SEEN horizon, plus the
+          // events a one-table pass resolves without applying them
+          val hbCap = if (!(resolve && heartbeats) || txnCol.isEmpty) None
+            else latestPendingBelow(pendRoot, Long.MaxValue).flatMap { p =>
+              val r = s.read.parquet(p).agg(min(col("seq"))).collect()(0)
+              if (r.isNullAt(0)) None else Some(r.getLong(0))
+            }
+          val resolvedBy = if (!resolve) Nil else
+            txnCol.map(_ => col("op") === "C").toSeq ++
+              (if (heartbeats) Seq(hbCap.foldLeft(col("op") === "H")(
+                (c, cap) => c && col("seq") < cap)) else Nil) ++
+              startAfterSeq.map(p => col("seq") <= p)
+          val hs = horizons(raw, lit(true) +: resolvedBy)
+          seen = seen.max(hs.head)
+          resolved = hs.tail.foldLeft(resolved)(_ max _)
+          if (resolve && strictBefore.isDefined)
+            resolved = resolved.max(horizons(completed, Seq(lit(true))).head)
         }
-        if ((startAfterSeq.isEmpty && txnCol.isEmpty && rowFilter.isEmpty &&
-            !heartbeats && strictBefore.isEmpty) || !applied.isEmpty) {
-          // default: fold the batch to per-key winners before writing —
-          // the delta then costs O(keys touched), not O(events), and
-          // the read-side collapse is unchanged. keepHistory skips the
-          // fold (events land verbatim) so as-of reads keep EVENT
-          // granularity — the retention trade a time-traveling replica
-          // opts into, exactly like retaining binlogs.
-          bucketed(
-            if (keepHistory || partialImageCol.isDefined) envelope(applied)
-            else collapse(envelope(applied), keyCols), keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          written += 1
+        val admitted: Seq[String] =
+          if (!counted) {
+            if (direct || !applied.isEmpty) Seq(OneTable.Table) else Nil
+          } else {
+            val ts = eventMicros(checked.schema)
+            val aggs = Seq(count(when(keep, lit(1))),
+              max(when(keep, col("seq")))) ++
+              (if (resolve) max(col("seq")) +: ts.map(max(_)).toSeq else Nil)
+            val found = checked.groupBy(col("table"))
+              .agg(aggs.head, aggs.tail: _*).collect()
+              .filter(r => stateDirs.contains(r.getString(0)))
+            if (resolve) found.foreach { r =>
+              def at(i: Int) = if (i >= r.length || r.isNullAt(i)) None
+                else Some(r.getLong(i))
+              resolved = resolved.max(Horizon(at(3), at(4)))
+            }
+            found.filter(_.getLong(1) > 0).map { r =>
+              val t = r.getString(0)
+              val a = acc(t)
+              acc(t) = Applied(a.rows + r.getLong(1), a.epochs,
+                (a.maxSeq.toSeq :+ r.getLong(2)).maxOption)
+              t
+            }.toSeq
+          }
+        if (admitted.nonEmpty) {
+          // a one-table pass drops its constant `table` before the fold
+          val routed =
+            if (one) envelope(applied)
+            else applied
+              .select((envelopeCols ++ extraCols(applied) :+ "table")
+                .map(col): _*)
+              .filter(col("table").isin(admitted: _*))
+          // keepHistory keeps events verbatim (as-of reads keep EVENT
+          // granularity); completion already yields one row per key
+          val out = (if (keepHistory || partialImageCol.isDefined) routed
+            else collapseTables(routed, keyFor))
+            .withColumn(BucketCol, tableBucket(keyFor))
+          oneState match {
+            case Some(state) =>
+              out.write.mode("overwrite").parquet(s"$state/epoch=$epochId")
+            case None =>
+              val epochStage = s"$stage/epoch=$epochId"
+              out.write.mode("overwrite").partitionBy("table")
+                .parquet(epochStage)
+              admitted.foreach { t =>
+                val dest = s"${stateDirs(t)}/epoch=$epochId"
+                StateFs.deleteRecursive(dest) // idempotent replay
+                // the writer percent-escapes special chars in partition
+                // dir names — look the staged dir up under the ESCAPED name
+                StateFs.moveDir(s"$epochStage/table=" +
+                  org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                    .escapePathName(t), dest)
+              }
+              // the moves left only write-job metadata (_SUCCESS)
+              StateFs.deleteRecursive(epochStage)
+          }
+          admitted.foreach { t =>
+            acc(t) = acc(t).copy(epochs = acc(t).epochs + 1)
+          }
         }
       } finally {
-        txnFull.foreach(_.unpersist())
-        partialPinned.foreach(_.unpersist())
-        strictPinned.foreach(_.unpersist())
-        if (multiAction) { batch.unpersist(); () }
+        pins.foreach(_.unpersist())
+        if (pinBatch) { batch.unpersist(); () }
       }
     }
-    // persist the time horizons with the state they describe — read by
-    // replicaStatus as secondsBehindSource (monotone max-merge, so a
-    // re-run pass can only confirm progress, never regress it)
-    if (trackSeq) writeLagMarks(state, appliedTs, srcTs)
-    (rows, written, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
+    // the one-table sync persists its time horizons with the state they
+    // describe — read by replicaStatus as secondsBehindSource (monotone
+    // max-merge, so a re-run pass can only confirm progress)
+    if (resolve) oneState.foreach(writeLagMarks(_, resolved.ts, seen.ts))
+    val tables = if (counted) acc.toMap else acc.toMap.map { case (t, a) =>
+      t -> a.copy(rows = rows) }
+    PassResult(rows, tables, resolved.seq, seen.seq,
+      pendingCount(s, pendRoot, txnCol))
   }
+
+  /** The topology collapse: latest-wins per (table, primary key) — one
+    * shuffle however many tables. A homogeneous topology groups on the
+    * key columns themselves (a frame without `table` is one table's);
+    * heterogeneous PKs group on [[tableKeyStruct]] and carry the FULL
+    * envelope (key columns included — they differ per table) through
+    * the max_by struct. Grouping normalizes floating-point keys: `-0.0`
+    * and `0.0` collapse to one key, and so do all `NaN`s. */
+  private def collapseTables(df: DataFrame,
+      keyFor: Map[String, Seq[String]]): DataFrame =
+    if (keyFor.values.toSet.size == 1)
+      collapse(df, df.columns.filter(_ == "table").toSeq ++ keyFor.values.head)
+    else {
+      val fields = envelopeCols ++ extraCols(df)
+      df.withColumn("__key", tableKeyStruct(keyFor, df.schema))
+        .groupBy(col("table"), col("__key"))
+        .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
+        .select(col("table") +: fields.map(f => col("l." + f).as(f)): _*)
+    }
+
+  /** The physical bucket column ([[bucketOf]]) with each row bucketed
+    * under ITS table's key definition — one scan-local CASE. */
+  private def tableBucket(keyFor: Map[String, Seq[String]]): Column =
+    if (keyFor.size == 1) bucketOf(keyFor.head._2)
+    else keyFor.foldLeft(lit(null).cast(org.apache.spark.sql.types.LongType)) {
+      case (acc, (t, ks)) =>
+        when(col("table") === t, bucketOf(ks)).otherwise(acc)
+    }
 
   /** Size of the uncommitted pending tail after a txn-gated pass (one
     * count over the newest — tiny — snapshot; never the state itself).
@@ -1713,406 +1681,6 @@ object StreamingOps {
     StateFs.epochIds(s"$state/_pending")
       .filter(_ < keepFrom)
       .foreach(e => StateFs.deleteRecursive(s"$state/_pending/epoch=$e"))
-
-  /** Multi-table variant of [[runCdcPass]] (SURVEY §3.1 #2): ONE ordered
-    * change stream whose envelope carries a `table` column fans out to
-    * per-table destination state dirs — the reference tool tails one
-    * binlog and applies to N ClickHouse tables the same way. Each
-    * micro-batch runs one tiny table-discovery aggregate (count + max seq
-    * per table — a handful of rows to the driver, metadata not data),
-    * then ONE `partitionBy("table")` write of the per-(table, key)
-    * collapse into a staging dir — a single Spark job per batch however
-    * many tables are present, never a per-table pass over the batch —
-    * and each staged `table=` subdir is renamed (a metadata move, no
-    * copy) into that table's own state dir; tables not in `stateDirs`
-    * are filtered out before the write (the TableFilter analogue).
-    * Replay safety: an at-least-once re-delivery of an epoch re-stages
-    * and re-renames over the previous attempt (delete-then-rename), so a
-    * partially-applied crash heals on the replay, exactly like the
-    * single-table overwrite. Each per-table state dir keeps the
-    * single-table layout (the partition column is carried by the dir
-    * name, and the staged files hold the standard envelope columns), so
-    * compaction and read-time collapse reuse
-    * [[compactState]]/[[readLatestState]] unchanged.
-    *
-    * `txnCol` turns on TRANSACTION-BOUNDARY apply across the whole
-    * topology — the one-binlog→N-tables GTID case: a transaction's
-    * events may span several tables, its `op = "C"` commit marker is a
-    * single topology-level row, and NO table applies ANY of the txn's
-    * events until the marker arrives — then every touched table applies
-    * its slice in the SAME epoch. A per-table reader can never observe a
-    * transaction's partial effect on that table (the epoch rename is
-    * atomic), and a cross-table reader sees a committed transaction
-    * land in one batch — never one table a batch ahead of another. The
-    * uncommitted tail is ONE topology-level pending snapshot under
-    * `ckpt/_pending`: pending epochs are keyed by the checkpoint's batch
-    * ids, so co-locating them with the checkpoint keeps the two
-    * lifecycles inseparable (delete the checkpoint → epoch ids restart →
-    * the pending tail must reset with it). Replay mechanics are
-    * [[runCdcPass]]'s: a re-delivered epoch re-reads the same snapshot
-    * its crashed attempt read and recomputes the identical ready set.
-    *
-    * Returns (per-table (rowsApplied, epochsWritten, maxSeq),
-    * pendingRows, sourceMaxSeq): under txn gating rowsApplied counts
-    * rows APPLIED to that table (an event consumed in epoch k but
-    * committed in epoch k+2 counts once, at apply time), and pendingRows
-    * is the TOPOLOGY-level uncommitted tail after the pass.
-    * sourceMaxSeq (under `trackSourceSeq`, the facade's flag) is the
-    * newest seq SEEN by the pass — ahead of the txn gate, so
-    * `sourceMaxSeq - maxSeq` reads as per-table replication lag while a
-    * transaction is pending; the binlog has one sequence, so the seen
-    * horizon is one topology-level number. */
-  private[graft] def runCdcPassMulti(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String,
-      stateDirs: Map[String, String],
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAt: Map[String, Long] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilters: Map[String, String] = Map.empty,
-      maskCols: Map[String, Seq[String]] = Map.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      trackSourceSeq: Boolean = false,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      routes: Map[String, String] = Map.empty,
-      partialImageCol: Option[String] = None,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Map[String, (Long, Long, Long)], Long, Option[Long]) =
-    runCdcPassMultiSource(s, FileCdcSource(schema, in), ckpt, stateDirs,
-      txnCol, renameCols, truncateAt, defaultCols, rowFilters, maskCols,
-      keyCols, trackSourceSeq, keyColsByTable, dropCols, keepHistory, routes,
-      partialImageCol, strictBefore, conflictDlq)
-
-  /** [[runCdcPassMulti]] over an arbitrary [[CdcSource]] transport.
-    * `renameCols` declares RENAME COLUMN DDLs exactly as in
-    * [[runCdcPassSource]] — the shared envelope means one rename applies
-    * to EVERY table's state dir (one binlog, one DDL, one fan-out).
-    * `truncateAt` (table → binlog position) declares per-table `TRUNCATE
-    * TABLE` QueryEvents — unlike a rename, a truncate targets ONE table,
-    * so only the named tables' floors advance. `defaultCols` declares
-    * `ADD COLUMN … DEFAULT` clauses — envelope-wide, like a rename.
-    *
-    * `rowFilters` (table → SQL predicate) replicates only matching
-    * events for that table — the sharding/subset config every tool in
-    * this class carries. DELETES ALWAYS REPLICATE regardless of the
-    * predicate: a tombstone for a never-replicated key is a harmless
-    * no-op in the collapse, while a FILTERED tombstone for a key whose
-    * insert matched would leave the destination serving a deleted row
-    * forever. Filter on effectively-immutable columns (key ranges,
-    * tenant/region routing): a row whose payload drifts across the
-    * predicate boundary simply stops receiving updates — the standard
-    * caveat of event-level row filtering.
-    *
-    * `maskCols` (table → payload columns) NULLs the named columns for
-    * that table before anything is staged — the masked values never
-    * leave the source side of the pass (the column-exclusion/masking
-    * config of this tool class, for PII-shaped payloads). Bookkeeping
-    * (`okey`/`op`/`seq`/`ts` and the txn column) cannot be masked.
-    *
-    * Filters run AFTER the txn gate, at apply time: the pending tail
-    * carries a transaction's events UNFILTERED (so the reported
-    * pendingRows counts them), and the predicate/mask applies when the
-    * commit arrives — a filter change between passes therefore applies
-    * to not-yet-committed history, which is the declarative reading.
-    *
-    * `keyColsByTable` declares PER-TABLE primary keys (tables absent
-    * from the map use `keyCols`) — the real topology shape: one binlog
-    * fans out to tables whose PKs differ (a header table keyed by
-    * order id next to a lines table keyed by (order id, line no)).
-    * The fan-out still collapses in ONE job: each row's key tuple is
-    * encoded through a per-table CASE into one canonical string column
-    * (`to_json` of that table's key struct — a scan-local, codegen'd
-    * projection), the collapse groups on (table, encoded key), and the
-    * winning row's full envelope rides the max_by struct so the staged
-    * output carries every real column. Homogeneous topologies skip the
-    * encoding entirely. Each state dir publishes ITS OWN `_keycols`,
-    * so read-time collapse, compaction, and repair are per-table-key
-    * aware with no further plumbing. */
-  private[graft] def runCdcPassMultiSource(s: SparkSession, source: CdcSource,
-      ckpt: String, stateDirs: Map[String, String],
-      txnCol: Option[String] = None,
-      renameCols: Map[String, String] = Map.empty,
-      truncateAt: Map[String, Long] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      rowFilters: Map[String, String] = Map.empty,
-      maskCols: Map[String, Seq[String]] = Map.empty,
-      keyCols: Seq[String] = Seq("okey"),
-      trackSourceSeq: Boolean = false,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty,
-      keepHistory: Boolean = false,
-      routes: Map[String, String] = Map.empty,
-      partialImageCol: Option[String] = None,
-      strictBefore: Option[(String, String)] = None,
-      conflictDlq: Option[String] = None)
-      : (Map[String, (Long, Long, Long)], Long, Option[Long]) = {
-    partialImageCol.foreach { cc =>
-      require(source.schema.fieldNames.contains(cc),
-        s"partial-image column '$cc' absent from the envelope")
-      require(!keepHistory,
-        "partial-image completion folds each batch to full per-key " +
-          "images; keepHistory stores events verbatim — the two modes " +
-          "are mutually exclusive (complete upstream to retain history)")
-    }
-    strictBefore.foreach { case (pc, bc) =>
-      Seq(pc, bc).foreach(c => require(
-        source.schema.fieldNames.contains(c),
-        s"strict-before column '$c' absent from the envelope"))
-      require(partialImageCol.isEmpty,
-        "binlog_row_image=MINIMAL carries no before images — the " +
-          "strict before-image gate and partial-image completion are " +
-          "mutually exclusive by definition")
-      require(conflictDlq.isDefined,
-        "strictBefore without a conflictDlq would DISCARD conflicted " +
-          "events with no record anywhere — declare the dead-letter dir")
-      // same mutual exclusion as the single-table pass: a filtered
-      // table's destination state has intentionally diverged, so its
-      // before-image checks would quarantine false conflicts
-      require(rowFilters.isEmpty,
-        "strictBefore checks before images against destination state " +
-          "that row filters have intentionally diverged from the " +
-          "source — filter upstream, or replicate strictly and " +
-          "unfiltered")
-    }
-    require(conflictDlq.isEmpty || strictBefore.isDefined,
-      "a conflict DLQ without a strict-before declaration is dead " +
-        "config — declare strictBefore or drop the DLQ dir")
-    // TABLE ROUTING (the rename/shard-merge config of this tool class):
-    // `routes` maps SOURCE table names in the envelope onto DESTINATION
-    // table names — N sources routing to one destination merge shards
-    // (the sharded-MySQL → one-mart topology; the caller's contract is
-    // that merged shards' key spaces are disjoint, the standard sharded
-    // setup). Routing applies at batch entry, BEFORE the txn gate, so
-    // every later per-table config (stateDirs, filters, masks, per-table
-    // keys, truncates) is keyed by DESTINATION name — one vocabulary
-    // end to end. Typos fail loudly both ways: a route must land on a
-    // replicated table, and a routed-away source name must not itself be
-    // replicated (its events would silently split between two dirs).
-    require(routes.values.forall(stateDirs.contains),
-      s"route target(s) not replicated: " +
-        routes.values.filterNot(stateDirs.contains).toSeq.distinct.sorted
-          .mkString(", "))
-    require(!routes.keys.exists(stateDirs.contains),
-      s"route source(s) also declared as destination table(s): " +
-        routes.keys.filter(stateDirs.contains).toSeq.sorted.mkString(", "))
-    require(keyColsByTable.keySet.subsetOf(stateDirs.keySet),
-      s"per-table key declared for unreplicated table(s): " +
-        s"${(keyColsByTable.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    val keyFor: Map[String, Seq[String]] =
-      stateDirs.keys.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
-    val allKeyCols = keyFor.values.flatten.toSet
-    require(allKeyCols.forall(source.schema.fieldNames.contains),
-      s"key column(s) absent from the envelope: " +
-        allKeyCols.filterNot(source.schema.fieldNames.contains).mkString(", "))
-    require(truncateAt.keySet.subsetOf(stateDirs.keySet),
-      s"truncate declared for unreplicated table(s): " +
-        s"${(truncateAt.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    require(rowFilters.keySet.subsetOf(stateDirs.keySet),
-      s"row filter declared for unreplicated table(s): " +
-        s"${(rowFilters.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    require(maskCols.keySet.subsetOf(stateDirs.keySet),
-      s"column mask declared for unreplicated table(s): " +
-        s"${(maskCols.keySet -- stateDirs.keySet).toSeq.sorted.mkString(", ")}")
-    maskCols.foreach { case (t, cs) =>
-      // identity, not payload: a table's OWN key columns are unmaskable
-      // (another table's key is ordinary payload here)
-      val unmaskable = Set("op", "seq", "ts") ++ keyFor(t) ++
-        txnCol.toSet ++ partialImageCol.toSet + "table"
-      val bad = cs.filter(unmaskable)
-      require(bad.isEmpty,
-        s"table '$t' masks bookkeeping column(s): ${bad.mkString(", ")}")
-      val absent = cs.filterNot(source.schema.fieldNames.contains)
-      require(absent.isEmpty,
-        s"table '$t' masks column(s) absent from the envelope: " +
-          absent.mkString(", "))
-    }
-    strictBefore.foreach { case (pc, _) =>
-      // a key column is degenerate to check (a PK rides every row image
-      // unchanged) and one table's key is another's payload — refuse the
-      // ambiguity topology-wide
-      require(!(Set("op", "seq", "ts", "table") ++ allKeyCols).contains(pc),
-        s"strict-before checks payload, not bookkeeping or key " +
-          s"columns: '$pc'")
-    }
-    // every table's state dir shares one envelope schema (one binlog,
-    // one fan-out) — validate/publish each before the stream starts
-    val stateSchema = stateSchemaFor(source.schema,
-      txnCol.toSet ++ partialImageCol.toSet ++ strictBefore.map(_._2))
-    stateDirs.foreach { case (t, d) => ensureKeyCols(d, keyFor(t)) }
-    stateDirs.values.foreach(applyRenameDdl(_, renameCols, stateSchema))
-    // a DROP, like a RENAME, is an envelope-wide DDL: the topology
-    // shares one binlog envelope, so the column dies in every table
-    stateDirs.values.foreach(applyDropDdl(_, dropCols, stateSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq }))
-    stateDirs.values.foreach(ensureStateSchema(_, stateSchema))
-    stateDirs.values.foreach(ensureHistoryMode(_, keepHistory))
-    truncateAt.foreach { case (t, sq) =>
-      applyTruncateDdl(stateDirs(t), Some(sq)) }
-    stateDirs.values.foreach(applyDefaultDdl(_, defaultCols, stateSchema))
-    val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-    var srcMaxSeq = Option.empty[Long]
-    // staging lives WITH the checkpoint, not in a local tmp dir: the
-    // ckpt and the state dirs share a durable filesystem in production,
-    // so every staged `table=` subdir renames into its state dir as a
-    // metadata move — staging on local disk would force a copy per
-    // table per epoch
-    val stage = s"$ckpt/_staging"
-    runSourcePass(s, source, ckpt) { (batch, epochId) =>
-      // the batch is consumed by the discovery aggregate plus the staged
-      // write — persist so the file source is read once per trigger (see
-      // runCdcPass's note on multi-action foreachBatch)
-      batch.persist()
-      var txnFull = Option.empty[DataFrame] // txn path's extra pin
-      var partialPinned = Option.empty[DataFrame]
-      var strictPinned = Option.empty[DataFrame]
-      try {
-        if (trackSourceSeq) {
-          // SEEN horizon over the raw topology batch — ahead of the txn
-          // gate, so lag stays visible while a transaction is pending
-          srcMaxSeq = foldMaxSeq(batch.toDF(), srcMaxSeq)
-        }
-        // routing first: one scan-local codegen'd CASE renames source
-        // table names to destinations, so the gate's pending tail and
-        // every per-table step below speak destination names only
-        val entry =
-          if (routes.isEmpty) batch.toDF()
-          else batch.toDF().withColumn("table",
-            routes.foldLeft(col("table")) { case (acc, (src, dst)) =>
-              when(col("table") === src, lit(dst)).otherwise(acc)
-            })
-        val gated = txnCol match {
-          case None => entry
-          case Some(tc) =>
-            // one shared commit gate for the whole topology (the same
-            // ready/carry split as runCdcPass, pending rooted at ckpt)
-            val (ready, full) = txnGate(s, entry, tc, ckpt, epochId)
-            txnFull = Some(full)
-            ready
-        }
-        // MINIMAL row images complete BEFORE the per-table filters and
-        // masks, against each table's OWN prior state — every later
-        // stage sees FULL rows (the single-table pass's rule, applied
-        // per destination)
-        // pinned like the single-table completion: the fan-out's table
-        // discovery aggregate and the staged write both consume it
-        val gatedC = partialImageCol match {
-          case None => gated
-          case Some(cc) =>
-            val c = completePartialImagesMulti(s, stateDirs,
-              keyFor, epochId, gated, cc).persist()
-            partialPinned = Some(c)
-            c
-        }
-        // STRICT BEFORE-IMAGE gate, per destination table against its
-        // own prior state (the single-table pass's rule, fanned out)
-        val checked = strictBefore match {
-          case None => gatedC
-          case Some((pc, bc)) =>
-            val (adm, pin) = gateBeforeImagesMulti(s, stateDirs, keyFor,
-              epochId, gatedC, pc, bc, conflictDlq.get)
-            strictPinned = Some(pin)
-            adm
-        }
-        // per-table row filters + column masks: ONE codegen'd filter and
-        // ONE select over the batch — never a job per table. Deletes
-        // bypass the predicate (see the scaladoc), masks NULL the value
-        // before anything is staged.
-        val filtered =
-          if (rowFilters.isEmpty) checked
-          else checked.filter(rowFilters.foldLeft(lit(true)) {
-            case (acc, (t, pred)) =>
-              acc && (col("table") =!= t || col("op") === "D" || expr(pred))
-          })
-        val applied =
-          if (maskCols.isEmpty) filtered
-          else filtered.select(filtered.columns.toSeq.map { c =>
-            val maskers = maskCols.collect {
-              case (t, cs) if cs.contains(c) => t }.toSeq
-            if (maskers.isEmpty) col(c)
-            else when(col("table").isin(maskers: _*),
-              lit(null).cast(filtered.schema(c).dataType))
-              .otherwise(col(c)).as(c)
-          }: _*)
-        val present = applied.groupBy(col("table"))
-          .agg(count(lit(1)).as("n"), max(col("seq")).as("mx")).collect()
-          .filter(r => stateDirs.contains(r.getString(0)))
-        if (present.nonEmpty) {
-          val admitted = present.map(_.getString(0)).toSeq
-          val epochStage = s"$stage/epoch=$epochId"
-          // evolved envelope columns (mid-stream DDL) ride through the
-          // fan-out exactly as in the single-table pass
-          val routed = applied
-            .select((envelopeCols ++ extraCols(applied) :+ "table").map(col): _*)
-            .filter(col("table").isin(admitted: _*))
-          val collapsed = if (keepHistory) {
-            // retained-history topology: events land verbatim (see the
-            // single-table pass) — the fan-out is the partitionBy alone
-            routed
-          } else if (keyColsByTable.isEmpty) {
-            // homogeneous topology: group on the real key columns
-            val fields = (Seq("op", "price", "status", "ts", "seq") ++
-              extraCols(applied)).filterNot(keyCols.contains)
-            routed.groupBy((col("table") +: keyCols.map(col)): _*)
-              .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
-              .select((col("table") +: keyCols.map(col)) ++
-                fields.map(f => col("l." + f).as(f)): _*)
-          } else {
-            // heterogeneous PKs: ONE job still — encode each row's key
-            // tuple under ITS table's definition (scan-local codegen'd
-            // null-padded struct, [[tableKeyStruct]]), group on (table,
-            // encoded key), and carry the FULL envelope (key columns
-            // included — they differ per table) through the max_by
-            // struct
-            val fields = envelopeCols ++ extraCols(applied)
-            val keyed = routed.withColumn("__key",
-              tableKeyStruct(keyFor, routed.schema))
-            keyed.groupBy(col("table"), col("__key"))
-              .agg(max_by(struct(fields.map(col): _*), col("seq")).as("l"))
-              .select(col("table") +: fields.map(f => col("l." + f).as(f)): _*)
-          }
-          // same physical bucket column as the single-table pass — each
-          // row bucketed under ITS table's key definition (scan-local
-          // CASE, one pass); no per-trigger sort (see [[bucketed]])
-          val bucketCase = keyFor.foldLeft(
-              lit(null).cast(org.apache.spark.sql.types.LongType)) {
-            case (acc, (t, ks)) =>
-              when(col("table") === t,
-                pmod(xxhash64(ks.map(col): _*), lit(StateBuckets)))
-                .otherwise(acc)
-          }
-          collapsed.withColumn(BucketCol, bucketCase)
-            .write.mode("overwrite").partitionBy("table").parquet(epochStage)
-          present.foreach { r =>
-            val t = r.getString(0)
-            val dest = s"${stateDirs(t)}/epoch=$epochId"
-            StateFs.deleteRecursive(dest) // idempotent replay: clear prior attempt
-            // the writer percent-escapes special chars in partition dir
-            // names — look the staged dir up under the ESCAPED name
-            val src = s"$epochStage/table=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(t)
-            StateFs.moveDir(src, dest)
-            val (rows, epochs, mx) = acc.getOrElse(t, (0L, 0L, Long.MinValue))
-            acc(t) = (rows + r.getLong(1), epochs + 1L,
-              math.max(mx, r.getLong(2)))
-          }
-          // the moves emptied the epoch's stage of everything but
-          // write-job metadata (_SUCCESS); drop it
-          StateFs.deleteRecursive(epochStage)
-        }
-      } finally {
-        txnFull.foreach(_.unpersist())
-        partialPinned.foreach(_.unpersist())
-        strictPinned.foreach(_.unpersist())
-        batch.unpersist(); ()
-      }
-    }
-    (acc.toMap, pendingCount(s, ckpt, txnCol), srcMaxSeq)
-  }
 
   /** Compact all existing `epoch=` delta dirs into ONE baseline epoch
     * holding their latest-wins collapse (tombstones KEPT — they must keep
@@ -2509,7 +2077,7 @@ object StreamingOps {
   }
 
   /** Topology-level REPAIR — the multi-table completion of
-    * [[repairState]] at [[runCdcPassMulti]]'s scale: ONE null-safe
+    * [[repairState]] at a [[FanOut]] topology's scale: ONE null-safe
     * full-outer diff over the (table, key) space heals N diverged
     * per-table state dirs in a single call. Per-table truth frames
     * union in with a routing column, the served states union the same
@@ -2518,14 +2086,14 @@ object StreamingOps {
     * receives its own correction epoch (unique negative id) via a
     * metadata rename, exactly the multi-pass staging mechanic. The
     * txn-gated pending tail is consulted ONCE for the whole topology
-    * (`pendingRoot` = the sync's ckpt dir — where runCdcPassMulti
+    * (`pendingRoot` = the sync's ckpt dir — where a FanOut pass
     * roots `_pending`), never once per table, and the correction seq
     * is a single topology-wide number (the binlog has one sequence):
     * max(applied seq over ALL tables, pending seq) + 1. All state dirs
-    * must share one served envelope — the runCdcPassMulti invariant
+    * must share one served envelope — the FanOut invariant
     * (one binlog, one fan-out) — and each table's source must be one
     * row per key, both asserted loudly. Tables may carry DIFFERENT
-    * primary keys (`keyColsByTable`, the runCdcPassMulti declaration):
+    * primary keys (`keyColsByTable`, the [[FanOut]] declaration):
     * the diff joins on a per-table-encoded key tuple, so a header table
     * keyed by order id heals in the same single pass as a lines table
     * keyed by (order id, line no).
@@ -2543,7 +2111,7 @@ object StreamingOps {
         "a topology repair heals every table or none")
     require(stateDirs.nonEmpty, "empty topology")
     val tables = stateDirs.keys.toSeq.sorted
-    // per-table PRIMARY KEYS (the runCdcPassMulti declaration shape):
+    // per-table PRIMARY KEYS (the FanOut declaration shape):
     // each table's declared key must match its state dir's published one
     val keyFor: Map[String, Seq[String]] =
       tables.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
@@ -2575,7 +2143,7 @@ object StreamingOps {
           s"saw: ${gained.mkString(", ")} — replicate the DDL first")
     }
     // each row's key tuple encoded under ITS table's key definition
-    // (scan-local to_json projection — the runCdcPassMulti heterogeneous
+    // (scan-local to_json projection — the fan-out pass's heterogeneous
     // collapse's mechanic), so one join key spans per-table key shapes;
     // null key fields encode distinctly, preserving null-safe matching
     def keyed(df: DataFrame, t: String): DataFrame =
@@ -2722,27 +2290,6 @@ object StreamingOps {
   //     groups carry forward; work is O(batch) + O(Σ dirty-group size).
   // ───────────────────────────────────────────────────────────────────
 
-  /** Complete a `binlog_row_image=MINIMAL` batch into FULL row images
-    * at apply time — the write-side completion that keeps every
-    * downstream path (collapse, compaction, MVs, repair, changelog
-    * export) oblivious to partial images. `changedCol` names an
-    * `array<string>` column listing the payload columns an UPDATE
-    * actually carried (MySQL's columns-present bitmap); INSERTs are
-    * full images by definition (their list is ignored), DELETEs are
-    * tombstones. Per batch, ONE shuffle: prior images of touched keys
-    * (bucket-pruned, key semi-joined — the [[mvImages]] read, DDL
-    * record honored) union the batch under a source tag, and a single
-    * groupBy computes per key the batch winner's bookkeeping, each
-    * payload column's latest in-batch DETERMINER (insert, delete, or a
-    * change-flagged update — an explicit SET c = NULL is a change TO
-    * NULL, never "unchanged", and a change landing before a mid-batch
-    * delete dies with it), and the pre-batch image. The full
-    * image then reads: changed-in-batch value, else prior value, else
-    * NULL (first-seen key — the open-envelope convention). A prior
-    * TOMBSTONE contributes nothing: a key re-touched after its delete
-    * starts from NULLs, exactly like a fresh key. CdcPropertySpec folds
-    * random partial logs over random wave splits against a sequential
-    * per-column reference. */
   /** STRICT BEFORE-IMAGE apply gate (binlog_row_image=FULL carries each
     * update's before image; MySQL's strict slave-exec discipline checks
     * it): an UPDATE whose declared before image does not match what the
@@ -2757,47 +2304,47 @@ object StreamingOps {
     * (deletes bypass the check cross-batch, like the row-filter rule:
     * a tombstone is idempotent repair, never corruption). Expected
     * values: the key's first batch event checks against the PRIOR STATE
-    * image (bucket-pruned, key semi-joined — one metadata-bounded read,
-    * the completePartialImages shape); later events check against their
-    * in-batch predecessor's after image (a predecessor delete resets it
-    * to NULL). One extra shuffle per batch (the per-key window), same
-    * cost shape as partial-image completion. Returns (admitted events
-    * minus the before column, the pinned frame the caller unpersists —
-    * the DLQ write and the admitted read share one computation). */
-  private def gateBeforeImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame, keyCols: Seq[String],
-      checkCol: String, beforeCol: String,
-      dlqDir: String): (DataFrame, DataFrame) = {
-    val t = batch.schema(checkCol).dataType
-    val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
-    val withPrior =
-      if (priorEpochs.isEmpty)
-        batch.withColumn("_cur_op", lit(null).cast("string"))
-          .withColumn("_cur", lit(null).cast(t))
-      else {
-        val prior = readLatestPriorImages(s, state, epochId, batch, keyCols)
-          .groupBy(keyCols.map(col): _*)
-          .agg(max_by(struct(col("op"), col(checkCol)), col("seq")).as("_p"))
-          .select(keyCols.map(col) :+ col("_p.op").as("_cur_op")
-            :+ col(s"_p.$checkCol").as("_cur"): _*)
-        batch.join(prior, keyCols, "left")
-      }
-    verdictBeforeImages(withPrior, keyCols.map(col), t, checkCol,
-      beforeCol, dlqDir, epochId, extraDrop = Seq.empty)
-  }
-
-  /** The one verdict core both gates share (single-table and fan-out
-    * differ only in the chain's PARTITION KEY and the prior lookup):
-    * chain expected values, the conflict test, suffix quarantine, the
-    * DLQ write (skipped when the batch has no conflicts — a healthy
-    * stream must not accrete one empty epoch dir per trigger), and the
-    * admitted filter. Returns (admitted, the pinned frame the caller
-    * unpersists). */
-  private def verdictBeforeImages(withPrior: DataFrame, pk: Seq[Column],
-      t: org.apache.spark.sql.types.DataType, checkCol: String,
-      beforeCol: String, dlqDir: String, epochId: Long,
-      extraDrop: Seq[String]): (DataFrame, DataFrame) = {
+    * image of its table ([[readPriorImages]]); later events check
+    * against their in-batch predecessor's after image (a predecessor
+    * delete resets it to NULL). Rows chain per (table, key) and one
+    * window pass verdicts the whole topology — never a job per table. A topology's DLQ carries the `table` column, so one
+    * dead-letter dir serves every table; a one-table pass leaves it out.
+    * The DLQ write is skipped when the batch has no conflicts — a
+    * healthy stream must not accrete one empty epoch dir per trigger.
+    * Returns (admitted events minus the before column, the pinned frame
+    * the caller unpersists — the DLQ write and the admitted read share
+    * one computation). */
+  private def gateBeforeImagesMulti(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame, sb: StrictBefore,
+      dlqKeepsTable: Boolean): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
+    val StrictBefore(checkCol, beforeCol, dlqDir) = sb
+    val t = batch.schema(checkCol).dataType
+    val b0 = batch.filter(col("table").isin(stateDirs.keys.toSeq: _*))
+    // the chain key: a homogeneous topology chains on its key columns —
+    // the collapse's own grouping, so the write reuses this shuffle — and
+    // a single table needs no `table` in it; heterogeneous keys chain per
+    // (table, [[tableKeyStruct]])
+    val key = (if (stateDirs.size == 1) Nil else Seq("table")) ++
+      (if (keyFor.values.toSet.size == 1) keyFor.values.head else Seq("_k"))
+    def keyOf(df: DataFrame) =
+      if (key.contains("_k"))
+        df.withColumn("_k", tableKeyStruct(keyFor, batch.schema))
+      else df
+    val keyed = keyOf(b0)
+    val withPrior = readPriorImages(s, stateDirs, keyFor, epochId, b0) match {
+      case None =>
+        keyed.withColumn("_cur_op", lit(null).cast("string"))
+          .withColumn("_cur", lit(null).cast(t))
+      case Some(prior) =>
+        keyed.join(keyOf(prior)
+          .groupBy(key.map(col): _*)
+          .agg(max_by(struct(col("op"), col(checkCol)), col("seq")).as("_p"))
+          .select(key.map(col) :+ col("_p.op").as("_cur_op") :+
+            col(s"_p.$checkCol").as("_cur"): _*), key, "left")
+    }
+    val pk = key.map(col)
     val w = Window.partitionBy(pk: _*).orderBy(col("seq"))
     // an event's AFTER image for chaining: a delete resets to NULL
     val after = when(col("op") === "D", lit(null).cast(t))
@@ -2814,15 +2361,14 @@ object StreamingOps {
     val pinned = chained.withColumn("_cseq",
         min(when(conflict, col("seq"))).over(Window.partitionBy(pk: _*)))
       .persist()
-    val book = Seq("_rn", "_prev", "_cur_op", "_cur", "_cseq") ++ extraDrop
+    val book = Seq("_rn", "_prev", "_cur_op", "_cur", "_cseq", "_k")
     val conflicts = pinned
       .filter(col("_cseq").isNotNull && col("seq") >= col("_cseq"))
-      .drop(book: _*)
-    // epoch-keyed overwrite keeps a crash-replayed batch's re-verdict
-    // idempotent; the emptiness probe is one cheap action on the
-    // already-pinned frame. The count sidecar rides the same write so
-    // replicaStatus never re-scans retained DLQ epochs (conflicts are
-    // the rare path — the count() only runs when one actually happened)
+      .drop((if (dlqKeepsTable) book else book :+ "table"): _*)
+    // the emptiness probe is one cheap action on the already-pinned
+    // frame; the count sidecar rides the same write so replicaStatus
+    // never re-scans retained DLQ epochs (the count() only runs when a
+    // conflict actually happened)
     if (!conflicts.isEmpty) {
       conflicts.write.mode("overwrite").parquet(s"$dlqDir/epoch=$epochId")
       writeDlqCount(dlqDir, epochId, conflicts.count())
@@ -2853,170 +2399,70 @@ object StreamingOps {
         p(0).toLong -> p(1).toLong
       }.toMap).getOrElse(Map.empty)
 
-  /** The batch's touched keys' latest-known PRIOR images: the state
-    * dir's rows below `epochId`, bucket-pruned to the batch's key
-    * buckets and semi-joined to its exact keys — the metadata-bounded
-    * prior read shared by partial-image completion and the strict
-    * before-image gate. */
-  private def readLatestPriorImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    val touched = batch.select(bucketOf(keyCols).as(BucketCol))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    readStateDirGated(s, state, buckets = Some(touched))
-      .filter(col("epoch") < epochId).drop("epoch")
-      .join(broadcast(batch.select(keyCols.map(col): _*).distinct()),
-        keyCols, "left_semi")
-  }
-
-  private def completePartialImages(s: SparkSession, state: String,
-      epochId: Long, batch: DataFrame, keyCols: Seq[String],
-      changedCol: String): DataFrame = {
-    val payload = batch.columns.toSeq
-      .filterNot(keyCols.contains)
-      .filterNot(Seq("op", "seq", "ts", changedCol).contains)
-    val b = batch.withColumn("_src", lit("b"))
-    val priorEpochs = StateFs.epochIds(state).filter(_ < epochId)
-    val tagged =
-      if (priorEpochs.isEmpty) b
-      else {
-        val prior = readLatestPriorImages(s, state, epochId, batch, keyCols)
-        b.unionByName(prior.withColumn("_src", lit("p")),
-          allowMissingColumns = true)
-      }
-    // a column's in-batch DETERMINER is the latest event that decided
-    // its value: an INSERT (full image), a DELETE (resets every column
-    // — a change landing BEFORE a mid-batch delete must not survive
-    // it), or an UPDATE whose changed list names the column. The value
-    // a determiner assigns is NULL for the delete, the event's value
-    // otherwise (explicit SET c = NULL included).
-    def det(c: String) =
-      col("_src") === "b" && (col("op") === "I" || col("op") === "D" ||
-        array_contains(col(changedCol), c))
-    val aggs = Seq(
-      max_by(struct(col("op"), col("seq"), col("ts")),
-        when(col("_src") === "b", col("seq"))).as("_top"),
-      max_by(col("op"),
-        when(col("_src") === "p", col("seq"))).as("_oldop")) ++
-      payload.flatMap { c => Seq(
-        max(when(det(c), col("seq"))).as(s"_chg_$c"),
-        max_by(when(col("op") === "D",
-          lit(null).cast(batch.schema(c).dataType)).otherwise(col(c)),
-          when(det(c), col("seq"))).as(s"_new_$c"),
-        max_by(col(c),
-          when(col("_src") === "p", col("seq"))).as(s"_old_$c")) }
-    val agg = tagged.groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-    agg.select((keyCols.map(col) ++ Seq(col("_top.op").as("op"),
-      col("_top.seq").as("seq"), col("_top.ts").as("ts")) ++
-      payload.map { c =>
-        val t = batch.schema(c).dataType
-        when(col("_top.op") === "D", lit(null).cast(t))
-          .when(col(s"_chg_$c").isNotNull, col(s"_new_$c"))
-          .when(col("_oldop").isNull || col("_oldop") === "D",
-            lit(null).cast(t))
-          .otherwise(col(s"_old_$c")).as(c)
-      }): _*)
-  }
-
-  /** [[gateBeforeImages]] for the MULTI-TABLE fan-out: one topology
-    * batch carries before images for N destination tables
-    * (heterogeneous PKs included). The same shape as
-    * [[completePartialImagesMulti]]: each table's prior images read
-    * from its OWN state dir (bucket-pruned under ITS key definition,
-    * key semi-joined to its batch slice), rows chain per (table,
-    * per-table-encoded key), and one window pass verdicts the whole
-    * topology — never a job per table. The DLQ carries the `table`
-    * column, so one dead-letter dir serves the whole topology. */
-  private def gateBeforeImagesMulti(s: SparkSession,
+  /** The batch's touched keys' latest-known PRIOR images, each table
+    * read from its OWN state dir: rows below `epochId`, bucket-pruned to
+    * the batch's key buckets under THAT table's key definition and
+    * semi-joined to its exact keys (the [[mvImages]] read, DDL record
+    * and serving floors honored), tagged with `table`. None when no
+    * table has an epoch below this one — a first batch pays no probe.
+    * Shared by partial-image completion and the strict before-image
+    * gate. */
+  private def readPriorImages(s: SparkSession,
       stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
-      epochId: Long, batch: DataFrame, checkCol: String, beforeCol: String,
-      dlqDir: String): (DataFrame, DataFrame) = {
-    val t = batch.schema(checkCol).dataType
-    val tables = stateDirs.keys.toSeq
-    val b0 = batch.filter(col("table").isin(tables: _*))
-    def bucketCase = keyFor.foldLeft(
-        lit(null).cast(org.apache.spark.sql.types.LongType)) {
-      case (acc, (tb, ks)) =>
-        when(col("table") === tb,
-          pmod(xxhash64(ks.map(col): _*), lit(StateBuckets))).otherwise(acc)
-    }
-    val touched = b0.select(col("table"), bucketCase.as("_b")).distinct()
-      .collect().groupBy(_.getString(0))
-      .map { case (tb, rs) => tb -> rs.map(_.getLong(1)).toSeq }
-    val priors = touched.keys.toSeq.sorted.flatMap { tb =>
-      if (StateFs.epochIds(stateDirs(tb)).forall(_ >= epochId)) None
-      else Some(readStateDirGated(s, stateDirs(tb),
-          buckets = Some(touched(tb)))
-        .filter(col("epoch") < epochId).drop("epoch")
-        .join(broadcast(b0.filter(col("table") === tb)
-          .select(keyFor(tb).map(col): _*).distinct()),
-          keyFor(tb), "left_semi")
-        .select(lit(tb).as("table"),
-          tableKeyStructFor(keyFor, tb, batch.schema).as("_k"),
-          col("op"), col(checkCol), col("seq")))
-    }
-    val keyed = b0.withColumn("_k", tableKeyStruct(keyFor, batch.schema))
-    val withPrior = priors.reduceOption(_.unionByName(_)) match {
-      case None =>
-        keyed.withColumn("_cur_op", lit(null).cast("string"))
-          .withColumn("_cur", lit(null).cast(t))
-      case Some(pall) =>
-        val prior = pall.groupBy(col("table"), col("_k"))
-          .agg(max_by(struct(col("op"), col(checkCol)), col("seq")).as("_p"))
-          .select(col("table"), col("_k"), col("_p.op").as("_cur_op"),
-            col(s"_p.$checkCol").as("_cur"))
-        keyed.join(prior, Seq("table", "_k"), "left")
-    }
-    verdictBeforeImages(withPrior, Seq(col("table"), col("_k")), t,
-      checkCol, beforeCol, dlqDir, epochId, extraDrop = Seq("_k"))
-  }
-
-  /** [[completePartialImages]] for the MULTI-TABLE fan-out: one
-    * topology batch carries partial images for N destination tables
-    * (heterogeneous PKs included). Still ONE shuffle: each table's
-    * prior images (its OWN state dir, bucket-pruned under ITS key
-    * definition, key semi-joined to its batch slice) union the batch
-    * under a source tag, rows group on (table, per-table-encoded key
-    * — the fan-out's `to_json` CASE), and the same per-column
-    * determiner aggregates complete each table's rows. Key columns
-    * bypass the determiner logic: a PK always rides the row image
-    * (MySQL's MINIMAL contract), so each table's key columns read from
-    * the batch winner — one table's key is another's ordinary payload,
-    * and the CASE keeps the two roles straight per row. Rows of tables
-    * outside the topology are dropped here exactly as the fan-out
-    * would drop them. */
-  private def completePartialImagesMulti(s: SparkSession,
-      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
-      epochId: Long, batch: DataFrame, changedCol: String): DataFrame = {
-    val tables = stateDirs.keys.toSeq
-    val b0 = batch.filter(col("table").isin(tables: _*))
-    val cols = batch.columns.toSeq
-      .filterNot(Seq("op", "seq", "ts", "table", changedCol).contains)
-    def bucketCase = keyFor.foldLeft(
-        lit(null).cast(org.apache.spark.sql.types.LongType)) {
-      case (acc, (t, ks)) =>
-        when(col("table") === t,
-          pmod(xxhash64(ks.map(col): _*), lit(StateBuckets))).otherwise(acc)
-    }
+      epochId: Long, b0: DataFrame): Option[DataFrame] = {
+    val withPrior = stateDirs.keySet
+      .filter(t => StateFs.epochIds(stateDirs(t)).exists(_ < epochId))
+    if (withPrior.isEmpty) return None
     // per-table touched buckets in ONE collect (≤ tables × StateBuckets
-    // rows — driver-side metadata, like the fan-out's table discovery)
-    val touched = b0.select(col("table"), bucketCase.as("_b")).distinct()
-      .collect().groupBy(_.getString(0))
+    // rows — driver-side metadata, like the pass's table discovery)
+    val touched = b0.select(col("table"), tableBucket(keyFor).as("_b"))
+      .distinct().collect().groupBy(_.getString(0))
       .map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
-    val b = b0.withColumn("_src", lit("b"))
-    val priors = touched.keys.toSeq.sorted.flatMap { t =>
-      if (StateFs.epochIds(stateDirs(t)).forall(_ >= epochId)) None
-      else Some(readStateDirGated(s, stateDirs(t),
-          buckets = Some(touched(t)))
+    touched.keys.toSeq.sorted.filter(withPrior).map { t =>
+      readStateDirGated(s, stateDirs(t), buckets = Some(touched(t)))
         .filter(col("epoch") < epochId).drop("epoch")
         .join(broadcast(b0.filter(col("table") === t)
           .select(keyFor(t).map(col): _*).distinct()),
           keyFor(t), "left_semi")
-        .withColumn("table", lit(t)))
-    }
-    val tagged = priors.foldLeft(b)((acc, p) =>
-      acc.unionByName(p.withColumn("_src", lit("p")),
+        .withColumn("table", lit(t))
+    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+  }
+
+  /** Complete a `binlog_row_image=MINIMAL` batch into FULL row images
+    * at apply time — the write-side completion that keeps every
+    * downstream path (collapse, compaction, MVs, repair, changelog
+    * export) oblivious to partial images. `changedCol` names an
+    * `array<string>` column listing the payload columns an UPDATE
+    * actually carried (MySQL's columns-present bitmap); INSERTs are
+    * full images by definition (their list is ignored), DELETEs are
+    * tombstones. Per batch, ONE shuffle for the whole topology: every
+    * table's prior images ([[readPriorImages]]) union the batch under a
+    * source tag, and a single groupBy on (table, per-table-encoded key)
+    * computes per key the batch winner's bookkeeping, each payload
+    * column's latest in-batch DETERMINER (insert, delete, or a
+    * change-flagged update — an explicit SET c = NULL is a change TO
+    * NULL, never "unchanged", and a change landing before a mid-batch
+    * delete dies with it), and the pre-batch image. The full image then
+    * reads: changed-in-batch value, else prior value, else NULL
+    * (first-seen key — the open-envelope convention). A prior TOMBSTONE
+    * contributes nothing: a key re-touched after its delete starts from
+    * NULLs, exactly like a fresh key. Key columns bypass the determiner
+    * logic: a PK always rides the row image (MySQL's MINIMAL contract),
+    * so each table's key columns read from the batch winner — one
+    * table's key is another's ordinary payload, and the CASE keeps the
+    * two roles straight per row. Rows of tables outside the topology
+    * are dropped here exactly as the fan-out would drop them.
+    * CdcPropertySpec folds random partial logs over random wave splits
+    * against a sequential per-column reference. */
+  private def completePartialImagesMulti(s: SparkSession,
+      stateDirs: Map[String, String], keyFor: Map[String, Seq[String]],
+      epochId: Long, batch: DataFrame, changedCol: String): DataFrame = {
+    val b0 = batch.filter(col("table").isin(stateDirs.keys.toSeq: _*))
+    val cols = batch.columns.toSeq
+      .filterNot(Seq("op", "seq", "ts", "table", changedCol).contains)
+    val b = b0.withColumn("_src", lit("b"))
+    val tagged = readPriorImages(s, stateDirs, keyFor, epochId, b0)
+      .fold(b)(p => b.unionByName(p.withColumn("_src", lit("p")),
         allowMissingColumns = true))
     def det(c: String) =
       col("_src") === "b" && (col("op") === "I" || col("op") === "D" ||
@@ -3460,7 +2906,7 @@ object StreamingOps {
     ensureKeyCols(state, keyCols)
     val envStateSchema = collapse(envelope(s.createDataFrame(
       new java.util.ArrayList[Row](), envSchema)), keyCols).schema
-    // DDL metadata settles in runCdcPassSource's order: renames first
+    // DDL metadata settles in runCdcPass's order: renames first
     // (carry published history to the new name), then the schema union,
     // then defaults (the column must ride the incoming envelope)
     applyRenameDdl(state, renameCols, envStateSchema)
@@ -4051,7 +3497,8 @@ object StreamingOps {
         own
       } else sharedWaves(dir, "cdclog_3w")(i =>
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
-    runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+    runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+      PassSpec(OneTable(s"$tmp/state")))
     readLatestState(s, s"$tmp/state")
   }
 
@@ -4129,7 +3576,8 @@ object StreamingOps {
       val env = graft.sources.BinlogText.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4154,7 +3602,8 @@ object StreamingOps {
       val env = graft.sources.BinlogBinary.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4180,7 +3629,8 @@ object StreamingOps {
         .where(col("_sql").isNotNull).drop("_sql")
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4211,7 +3661,8 @@ object StreamingOps {
         cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
         .select(col("okey"), col("op"), col("price"), col("status"),
           col("ts"), hex(col("geom")).as("geom_hex"))
@@ -4288,8 +3739,8 @@ object StreamingOps {
           "heartbeat surface is broken")
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        heartbeats = true)
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), heartbeats = true))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4316,8 +3767,8 @@ object StreamingOps {
       val env = graft.sources.BinlogBinary.parse(s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        keyCols = wireKey)
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state", wireKey)))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4344,7 +3795,8 @@ object StreamingOps {
       val env = graft.sources.BinlogSocket.parse(s, s"$tmp/cap", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4371,7 +3823,8 @@ object StreamingOps {
         s, s"$tmp/binlog", cols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4409,7 +3862,7 @@ object StreamingOps {
     // S-BINLOG-BINARY-TXN: the TRANSACTION loop from RAW WIRE BYTES —
     // GTID events (type 33) delimit transactions, Xid events (16) mark
     // their commits, BinlogBinary.parseTxn stamps rows and emits the
-    // 'C' markers in one distributed decode, and runCdcPass(txnCol)
+    // 'C' markers in one distributed decode, and a txn-gated runCdcPass
     // gates exactly as on the text transport: transactions 1-2 commit,
     // transaction 3 — the delete wave — has its GTID event and rows in
     // the dump but NO Xid, so the uncommitted tail holds back and the
@@ -4464,7 +3917,7 @@ object StreamingOps {
     // its declared column plan, skips the declared-excluded audit
     // table with ZERO body work (events are size-addressed), refuses
     // undeclared tables loudly, and fills the SAME union envelope as
-    // the text transport so runCdcPassMulti consumes both without
+    // the text transport so a FanOut pass consumes both without
     // knowing which wire format fed it. Same fixture topology and the
     // SAME oracle as cdc_binlog_text_multi: one decode contract, two
     // wire formats.
@@ -4485,7 +3938,8 @@ object StreamingOps {
         txnScenarioCols)
       val in = s"$tmp/in"
       writeWave(env, in, 0)
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4496,7 +3950,7 @@ object StreamingOps {
     // changed-position lists carry), deletes ship the PK-only before
     // image. BinlogBinary.parse(changedCol) merges the update's
     // identity from the before image, surfaces the changed-name list,
-    // and runCdcPass(partialImageCol) completes the partial rows at
+    // and runCdcPass's partialImageCol completes the partial rows at
     // apply — the same completion the envelope and text paths use,
     // now fed straight from wire bitmaps. Same oracle as
     // stream_cdc_partial_image: one MINIMAL discipline, three feeds.
@@ -4522,8 +3976,8 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(env, in, when(col("seq") <= 1, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        partialImageCol = Some("_changed"))
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), partialImageCol = Some("_changed")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -4610,7 +4064,7 @@ object StreamingOps {
     // block on the table its verb line names, decodes under THAT
     // table's TABLE_MAP, skips the declared-excluded audit events (the
     // TableFilter exclusion, a decision not an accident), and lands
-    // everything in the one shared envelope runCdcPassMulti fans out —
+    // everything in the one shared envelope a FanOut pass fans out —
     // columns a table doesn't carry ride NULL. The union read must
     // equal the per-table collapses.
     "cdc_binlog_text_multi" -> ((s, dir) => binlogMultiScenario(s, dir,
@@ -4623,7 +4077,7 @@ object StreamingOps {
     // S-BINLOG-TEXT-TXN: the TRANSACTION loop from dump text — GTID
     // stamps delimit transactions, Xid events mark their commits, and
     // BinlogText.parseTxn turns both plus the row events into the
-    // txn-gated envelope runCdcPass(txnCol) consumes, with no
+    // txn-gated envelope runCdcPass consumes, with no
     // hand-declared transaction anywhere between the dump and the
     // served state. Transactions 1-2 (the insert and update waves)
     // commit; transaction 3 (the delete wave) has its GTID stamp and
@@ -4723,7 +4177,8 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state", softDelete = true)
     }),
 
@@ -4980,8 +4435,8 @@ object StreamingOps {
       writeWave(log.filter(col("seq") <= 2).unionByName(hb(50L)), in, 0)
       writeWave(log.filter(col("seq") === 3), in, 1)
       writeWave(hb(60L), in, 2)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        heartbeats = true)
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), heartbeats = true))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5072,7 +4527,8 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(env, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, env.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(env.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
         .select(col("okey"), col("op"), col("price"), col("status"),
           col("ts"), col("tny").cast(IntegerType).as("tny"),
@@ -5098,8 +4554,8 @@ object StreamingOps {
       // act 1: live replica at the cutover position (cdcLog seq<=2 era)
       val live = Tables.cdcLog(s, dir).filter(col("seq") <= 2)
       writeWave(live, s"$tmp/in_live", 0)
-      runCdcPass(s, live.schema, s"$tmp/in_live", s"$tmp/ckpt_live",
-        s"$root/orders")
+      runCdcPass(s, FileCdcSource(live.schema, s"$tmp/in_live"),
+        s"$tmp/ckpt_live", PassSpec(OneTable(s"$root/orders")))
       // act 2: the copier's shadow fill (new schema: + price_cents);
       // the new-schema stream keeps ONE checkpoint across the cutover —
       // the resumed pass's batch ids continue, so post-cutover epochs
@@ -5108,7 +4564,8 @@ object StreamingOps {
       val inNew = s"$tmp/in_new"
       val ckptNew = s"$tmp/ckpt_new"
       writeWave(shadow, inNew, 0)
-      runCdcPass(s, shadow.schema, inNew, ckptNew, s"$root/_orders_gho")
+      runCdcPass(s, FileCdcSource(shadow.schema, inNew), ckptNew,
+        PassSpec(OneTable(s"$root/_orders_gho")))
       // act 3: the atomic cutover statement, then the post-cutover
       // binlog resumes under `orders` — the same physical state dir the
       // shadow pass filled, now bound to its post-cutover name
@@ -5116,7 +4573,8 @@ object StreamingOps {
         Seq("orders" -> "_orders_del", "_orders_gho" -> "orders"))
       val post = Tables.cdcLogOscPost(s, dir)
       writeWave(post, inNew, 1)
-      runCdcPass(s, post.schema, inNew, ckptNew, s"$root/orders")
+      runCdcPass(s, FileCdcSource(post.schema, inNew), ckptNew,
+        PassSpec(OneTable(s"$root/orders")))
       val served = readLatestState(s, s"$root/orders")
         .withColumn("tbl", lit("orders"))
       val retired = readLatestState(s, s"$root/_orders_del")
@@ -5143,9 +4601,10 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        strictBefore = Some(("price", "before_price")),
-        conflictDlq = Some(s"$tmp/dlq"))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          strictBefore = Some(
+            StrictBefore("price", "before_price", s"$tmp/dlq"))))
       val confKeys = s.read.parquet(s"$tmp/dlq").select(col("okey"))
         .distinct().withColumn("had_conflict", lit(true))
       readLatestState(s, s"$tmp/state")
@@ -5172,14 +4631,16 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("qty",
         (col("okey") % 1000).cast(org.apache.spark.sql.types.IntegerType))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       val v2 = log.filter(col("seq") >= 2).withColumn("qty_big",
         when(col("op") === "D",
           lit(null).cast(org.apache.spark.sql.types.LongType))
           .otherwise(col("okey") + lit(3000000000L)))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        renameCols = Map("qty" -> "qty_big"))
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(renames = Map("qty" -> "qty_big"))))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5199,9 +4660,8 @@ object StreamingOps {
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"), col("line_no"))))
       val dirs = Map("t_ord" -> s"$tmp/state_ord", "t_line" -> s"$tmp/state_line")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs,
-        keyColsByTable = Map("t_ord" -> Seq("okey"),
-          "t_line" -> Seq("okey", "line_no")))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs, keyColsByTable = Map("t_ord" -> Seq("okey"), "t_line" -> Seq("okey", "line_no")))))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5231,15 +4691,15 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclogcomp_2w")(i =>
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"), col("line_no"))))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        keyCols = Seq("okey", "line_no"))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state", Seq("okey", "line_no"))))
       readLatestState(s, s"$tmp/state")
     }),
 
     // ST11: the reference's one-binlog→N-tables topology, end-to-end
     // under the oracle gate: one ordered stream whose envelope carries a
     // `table` column fans out per-table epoch deltas to per-table state
-    // dirs (runCdcPassMulti); the served result is the union of the
+    // dirs (a FanOut pass); the served result is the union of the
     // per-table read-time collapses. The oracle is the batch latest-wins
     // collapse partitioned by the same table mapping.
     "stream_cdc_multi_table" -> ((s, dir) => {
@@ -5252,7 +4712,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_eo_3w")(i =>
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs)))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5298,7 +4759,8 @@ object StreamingOps {
         byTable)
       writeWave(env1, in, 0)
       val dirs = Map("t_even" -> s"$root/t_even", "t_odd" -> s"$root/t_odd")
-      runCdcPassMulti(s, env1.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPass(s, FileCdcSource(env1.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs)))
       // rotation 2, TXN-DELIMITED (the production shape: one dump
       // carrying lifecycle QueryEvents AND cross-table transactions):
       // transaction 1 SPANS t_even (the seq-2 updates) and t_new (its
@@ -5367,8 +4829,8 @@ object StreamingOps {
       val env2 = graft.sources.BinlogText.parseMultiTxn(s, s"$tmp/binlog2",
         byTable - "t_odd", ignoreTables = Set("t_odd"))
       writeWave(env2, in, 1)
-      runCdcPassMulti(s, env2.schema, in, s"$tmp/ckpt", report.stateDirs,
-        txnCol = Some("txn"))
+      runCdcPass(s, FileCdcSource(env2.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(report.stateDirs), txnCol = Some("txn")))
       // the uncommitted delete wave really is HELD, not lost: the
       // topology's pending tail (rooted under the ckpt dir) is
       // non-empty — a zero here means the gate silently applied or
@@ -5404,7 +4866,8 @@ object StreamingOps {
         writeWaves(log, i, col("seq") - 1, 3, Seq(col("okey"))))
       val dirs = (0 until nShards)
         .map(i => s"shard_$i" -> s"$tmp/state_$i").toMap
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs)
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs)))
       dirs.values.toSeq.sorted
         .map(d => readLatestState(s, d))
         .reduce(_.unionByName(_))
@@ -5426,9 +4889,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_shard_2w")(i =>
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt",
-        Map("t_main" -> s"$tmp/state_main"),
-        routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(Map("t_main" -> s"$tmp/state_main"), routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))))
       readLatestState(s, s"$tmp/state_main")
     }),
 
@@ -5451,9 +4913,9 @@ object StreamingOps {
         writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
           Seq(col("okey"))))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, log.schema, in, s"$tmp/ckpt", dirs,
-        rowFilters = Map("t_even" -> "okey % 4 = 0"),
-        maskCols = Map("t_odd" -> Seq("status")))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs), rowFilters = Map("t_even" -> "okey % 4 = 0"),
+          maskCols = Map("t_odd" -> Seq("status"))))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5482,7 +4944,8 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPass(s, log.schema, in, s"$r/ckpt", s"$r/state")
+        runCdcPass(s, FileCdcSource(log.schema, in), s"$r/ckpt",
+          PassSpec(OneTable(s"$r/state")))
         ()
       }
       val tmp = cloneSynced(root, "state")
@@ -5532,7 +4995,8 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPass(s, log.schema, in, s"$r/ckpt", s"$r/state")
+        runCdcPass(s, FileCdcSource(log.schema, in), s"$r/ckpt",
+          PassSpec(OneTable(s"$r/state")))
         ()
       }
       val tmp = cloneSynced(root, "state")
@@ -5581,8 +5045,8 @@ object StreamingOps {
         val in = sharedWaves(dir, "cdclog_eo_2w")(i =>
           writeWaves(log, i, when(col("seq") <= 2, 0).otherwise(1), 2,
             Seq(col("okey"))))
-        runCdcPassMulti(s, log.schema, in, s"$r/ckpt",
-          Map("t_even" -> s"$r/state_even", "t_odd" -> s"$r/state_odd"))
+        runCdcPass(s, FileCdcSource(log.schema, in), s"$r/ckpt",
+          PassSpec(FanOut(Map("t_even" -> s"$r/state_even", "t_odd" -> s"$r/state_odd"))))
         ()
       }
       val tmp = cloneSynced(root, "state_even", "state_odd")
@@ -5642,15 +5106,17 @@ object StreamingOps {
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("old"), (col("okey") % 4).cast(StringType))))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // post-rename values differ on purpose ("new" prefix): a fork
       // that recomputed instead of carried would hash-mismatch
       val v2 = log.filter(col("seq") >= 2).withColumn("chan",
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("new"), (col("okey") % 4).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        renameCols = Map("channel" -> "chan"))
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(renames = Map("channel" -> "chan"))))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5666,14 +5132,16 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       val v2 = log.filter(col("seq") >= 2).withColumn("channel",
         when(col("op") === "D", lit(null).cast(StringType))
           .otherwise(concat(lit("ch"), (col("okey") % 4).cast(StringType))))
       // one post-DDL wave: the batch boundary that matters is the schema
       // change itself (per-wave semantics are spec-covered elsewhere)
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5698,7 +5166,8 @@ object StreamingOps {
           when(col("op") === "D", lit(null).cast(StringType))
             .otherwise(concat(lit("x"), (col("okey") % 2).cast(StringType))))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // the DDL gap, exactly as the binlog ships it: QueryEvents at
       // position 1 (= everything pass 1 applied), raw SQL text
       val cfg = DdlSql.fold(Seq(
@@ -5717,9 +5186,11 @@ object StreamingOps {
             lit(null).cast(StringType))
             .otherwise(concat(lit("n"), (col("okey") % 3).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        renameCols = cfg.renameCols, defaultCols = cfg.defaultCols,
-        dropCols = cfg.dropCols, truncateAtSeq = cfg.truncateAtSeq)
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(cfg.renameCols,
+          cfg.truncateAtSeq.map(OneTable.Table -> _).toMap,
+          cfg.defaultCols, cfg.dropCols)))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5739,7 +5210,8 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("qty",
         (col("okey") % 1000).cast(org.apache.spark.sql.types.IntegerType))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // one post-DDL wave, as in ST14: the boundary that matters is the
       // type change itself
       val v2 = log.filter(col("seq") >= 2).withColumn("qty",
@@ -5747,7 +5219,8 @@ object StreamingOps {
           lit(null).cast(org.apache.spark.sql.types.LongType))
           .otherwise(col("okey") + lit(3000000000L)))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5780,8 +5253,8 @@ object StreamingOps {
       val in = s"$tmp/in"
       writeWaves(partial, in, when(col("seq") <= 1, 0).otherwise(1), 2,
         Seq(col("okey")))
-      runCdcPass(s, partial.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        partialImageCol = Some("_changed"))
+      runCdcPass(s, FileCdcSource(partial.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), partialImageCol = Some("_changed")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5799,14 +5272,16 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       val v2 = log.filter(col("seq") >= 2).withColumn("channel",
         when(col("op") === "D" || col("okey") % 5 === 0,
           lit(null).cast(StringType))
           .otherwise(concat(lit("ch"), (col("okey") % 4).cast(StringType))))
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        defaultCols = Map("channel" -> ColumnDefault(1L, "'none'")))
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(defaults = Map("channel" -> ColumnDefault(1L, "'none'")))))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5827,12 +5302,14 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWave(log.filter(col("seq") === 1), in, 0)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // one post-truncate wave: the boundary that matters is the
       // truncate itself, not per-wave apply — one less trigger
       writeWave(log.filter(col("seq") >= 2), in, 1)
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        truncateAtSeq = Some(1L))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(truncateAt = Map(OneTable.Table -> 1L))))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5856,7 +5333,8 @@ object StreamingOps {
       val v1 = log.filter(col("seq") === 1).withColumn("channel",
         concat(lit("old"), (col("okey") % 4).cast(StringType)))
       writeWave(v1, in, 0)
-      runCdcPass(s, v1.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(v1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // the compressed-DDL window: DROP at position 1 and RE-ADD with
       // DEFAULT at position 3 both landed while the stream was down —
       // ONE resumed pass declares both; events between the two (seq
@@ -5869,9 +5347,9 @@ object StreamingOps {
         .withColumn("channel", lit(null).cast(StringType))
         .unionByName(upd4)
       writeWave(v2, in, 1)
-      runCdcPass(s, v2.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        dropCols = Map("channel" -> 1L),
-        defaultCols = Map("channel" -> ColumnDefault(3L, "'readd'")))
+      runCdcPass(s, FileCdcSource(v2.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(defaults = Map("channel" -> ColumnDefault(3L, "'readd'")), drops = Map("channel" -> 1L))))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5888,8 +5366,8 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        keepHistory = true)
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), keepHistory = true))
       readLatestState(s, s"$tmp/state", asOfSeq = Some(2L))
     }),
 
@@ -5906,10 +5384,9 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        computedCols = Seq(
-          "price_band" -> "CASE WHEN price < 150000 THEN 'low' ELSE 'high' END",
-          "event_day" -> "CAST(ts AS DATE)"))
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          computedCols = Seq( "price_band" -> "CASE WHEN price < 150000 THEN 'low' ELSE 'high' END", "event_day" -> "CAST(ts AS DATE)")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5927,7 +5404,8 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       readStateChanges(s, s"$tmp/state", 1L)
     }),
 
@@ -5943,8 +5421,8 @@ object StreamingOps {
       val tmp = tmpDir()
       val in = s"$tmp/in"
       writeWaves(log, in, col("seq") - 1, 3, Seq(col("okey")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        keepHistory = true)
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), keepHistory = true))
       readStateChanges(s, s"$tmp/state", 1L, untilSeq = Some(3L))
     }),
 
@@ -6059,7 +5537,8 @@ object StreamingOps {
       // wave 0 (seq 1): inserts; group column still named `grp`, no amt
       val w0 = log.filter(col("seq") === 1).withColumn("grp", grp)
       writeWave(w0, in, 0)
-      runCdcPass(s, w0.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(w0.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       // wave 1 (seq 2): updates + ADD COLUMN amt DEFAULT 5.00 (declared
       // at position 1); okey%5==0 writes an EXPLICIT NULL, which must
       // stay NULL (MySQL backfill semantics, not a blanket coalesce)
@@ -6068,8 +5547,9 @@ object StreamingOps {
           lit(null).cast(DoubleType))
           .otherwise((col("okey") % 89).cast(DoubleType) + lit(0.25)))
       writeWave(w1, in, 1)
-      runCdcPass(s, w1.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        defaultCols = Map("amt" -> ColumnDefault(1L, "5.00")))
+      runCdcPass(s, FileCdcSource(w1.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"),
+          ddl = Ddl(defaults = Map("amt" -> ColumnDefault(1L, "5.00")))))
       // the operator creates the MV over the table AS EVOLVED
       mvAttachSum(s, s"$tmp/state", s"$tmp/mv",
         groupCol = "grp", measureCol = "amt")
@@ -6215,8 +5695,8 @@ object StreamingOps {
         .when(col("seq") === 2 && col("op") =!= "C" && col("okey") % 2 === 0, 0)
         .otherwise(1)
       writeWaves(evLog, in, waveCol, 2, Seq(col("okey"), col("op")))
-      runCdcPass(s, evLog.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        txnCol = Some("txn"))
+      runCdcPass(s, FileCdcSource(evLog.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state"), txnCol = Some("txn")))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -6253,8 +5733,8 @@ object StreamingOps {
         .otherwise(1)
       writeWaves(evLog, in, waveCol, 2, Seq(col("okey"), col("op")))
       val dirs = Map("t_even" -> s"$tmp/state_even", "t_odd" -> s"$tmp/state_odd")
-      runCdcPassMulti(s, evLog.schema, in, s"$tmp/ckpt", dirs,
-        txnCol = Some("txn"))
+      runCdcPass(s, FileCdcSource(evLog.schema, in), s"$tmp/ckpt",
+        PassSpec(FanOut(dirs), txnCol = Some("txn")))
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -6277,7 +5757,8 @@ object StreamingOps {
       // configuration the purge + re-delivery gate must survive
       writeWaves(log, in, when(col("seq") <= 2, 0).otherwise(1), 2,
         Seq(col("okey"), col("seq")))
-      runCdcPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state")
+      runCdcPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        PassSpec(OneTable(s"$tmp/state")))
       compactState(s, s"$tmp/state", tombstoneHorizon = Some(0))
       log.filter(col("seq") === 1).write.mode("overwrite")
         .parquet(s"$tmp/state/epoch=0")

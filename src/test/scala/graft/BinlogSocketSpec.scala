@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.{OneTable, PassSpec}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,8 +175,8 @@ class BinlogSocketSpec extends SparkTestBase {
     val src = BinlogSocketCdcSource(caps, cols)
     assert(src.schema.fieldNames.toSeq ==
       Seq("op", "seq", "ts", "okey", "price", "status"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
-      s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     def served: Map[Long, Double] =
       StreamingOps.readLatestState(spark, s"$base/state")
         .select("okey", "price").collect()
@@ -188,8 +189,8 @@ class BinlogSocketSpec extends SparkTestBase {
     val c2 = new java.io.File(s"$base/cap2").listFiles().head
     java.nio.file.Files.copy(c2.toPath,
       java.nio.file.Paths.get(s"$caps/sock.000001.cap"))
-    StreamingOps.runCdcPassSource(spark, src, s"$base/ckpt",
-      s"$base/state")
+    StreamingOps.runCdcPass(spark, src, s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     assert(served == Map(1L -> 10.0))
     // a TORN capture (EOF packet cut off) refuses the batch
     val base2 = tmp()
@@ -200,9 +201,8 @@ class BinlogSocketSpec extends SparkTestBase {
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     java.nio.file.Files.write(f.toPath, bytes.dropRight(9))
     val e = intercept[Throwable] {
-      StreamingOps.runCdcPassSource(spark,
-        BinlogSocketCdcSource(caps2, cols), s"$base2/ckpt",
-        s"$base2/state")
+      StreamingOps.runCdcPass(spark, BinlogSocketCdcSource(caps2, cols),
+        s"$base2/ckpt", PassSpec(OneTable(s"$base2/state")))
     }
     assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ")

@@ -1,5 +1,8 @@
 package graft
 
+import graft.sources.FileCdcSource
+import graft.streaming.{FanOut, OneTable, PassSpec, StateFs, StreamingOps,
+  StrictBefore}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -52,6 +55,31 @@ class CdcPropertySpec extends SparkTestBase {
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
       .toMap
   }
+
+  /** The two-table input of a property log: even keys land in `t_one`
+    * (keyed by okey), odd keys in `t_two`, keyed by (okey, line) with a
+    * constant okey — only the full tuple tells its keys apart. */
+  private def split(df: org.apache.spark.sql.DataFrame) = df
+    .withColumn("table",
+      when(col("okey") % 2 === 0, "t_one").otherwise("t_two"))
+    .withColumn("line", col("okey"))
+    .withColumn("okey",
+      when(col("okey") % 2 === 0, col("okey")).otherwise(lit(1L)))
+
+  private def splitTopology(base: String) =
+    FanOut(Map("t_one" -> s"$base/s_one", "t_two" -> s"$base/s_two"),
+      keyColsByTable = Map("t_two" -> Seq("okey", "line")))
+
+  /** Both tables' served (price, status), keyed back by the log's key. */
+  private def servedSplit(base: String)
+      : Map[Long, (Option[Double], Option[String])] =
+    Seq("s_one" -> "okey", "s_two" -> "line").flatMap { case (d, k) =>
+      if (StateFs.epochIds(s"$base/$d").isEmpty) Nil
+      else StreamingOps.readLatestState(spark, s"$base/$d")
+        .select(col(k), col("price"), col("status")).collect()
+        .map(r => r.getLong(0) -> ((Option(r.get(1)).map(_.toString.toDouble),
+          Option(r.getString(2)))))
+    }.toMap
 
   test("distributed collapse == sequential replay (15 random logs)") {
     samples(15).foreach { ops =>
@@ -436,7 +464,9 @@ class CdcPropertySpec extends SparkTestBase {
     // boundaries: the apply-time completion composed across batches
     // must equal a sequential per-column fold. The fold's rules ARE the
     // contract: changed column → event value (NULL included); unchanged
-    // → prior image's value; prior absent or tombstoned → NULL.
+    // → prior image's value; prior absent or tombstoned → NULL. Each log
+    // also runs split across a two-table topology with one composite
+    // key: every table must serve the same fold.
     val gen: Gen[List[POp]] = for {
       nKeys <- Gen.choose(1, 6)
       n <- Gen.choose(4, 50)
@@ -488,9 +518,13 @@ class CdcPropertySpec extends SparkTestBase {
             col("key").as("okey"), col("price"), col("status"),
             col("changed"))
         StreamingOps.writeWave(df, s"$base/in", i)
-        StreamingOps.runCdcPass(spark, df.schema, s"$base/in",
-          s"$base/ckpt", s"$base/state",
-          partialImageCol = Some("changed"))
+        StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
+          s"$base/ckpt", PassSpec(OneTable(s"$base/state"),
+            partialImageCol = Some("changed")))
+        StreamingOps.writeWave(split(df), s"$base/fin", i)
+        StreamingOps.runCdcPass(spark,
+          FileCdcSource(split(df).schema, s"$base/fin"), s"$base/fckpt",
+          PassSpec(splitTopology(base), partialImageCol = Some("changed")))
       }
       val served = StreamingOps.readLatestState(spark, s"$base/state")
         .collect().map(r => r.getLong(0) ->
@@ -498,6 +532,8 @@ class CdcPropertySpec extends SparkTestBase {
             Option(r.getString(3))))).toMap
       assert(served == fold(sorted),
         s"partial fold diverged (log $si, ${waves.size} waves): $ops")
+      assert(servedSplit(base) == fold(sorted),
+        s"partial fold diverged in the topology (log $si): $ops")
     }
   }
 
@@ -512,6 +548,9 @@ class CdcPropertySpec extends SparkTestBase {
     // (chain), or the pre-batch applied state for the key's first batch
     // event; a mismatch quarantines the key's remaining batch events;
     // the next batch verdicts against the actual applied state again.
+    // Each log also runs split across a two-table topology with one
+    // composite key: every table must serve the same fold, and the
+    // topology's one DLQ must hold the same verdicts.
     case class Raw(key: Long, op: String, v: Double, st: String,
       lie: Boolean)
     val gen: Gen[List[Raw]] = for {
@@ -583,16 +622,24 @@ class CdcPropertySpec extends SparkTestBase {
             col("key").as("okey"), col("price"), col("status"),
             col("before"))
         StreamingOps.writeWave(df, s"$base/in", i)
-        StreamingOps.runCdcPass(spark, df.schema, s"$base/in",
-          s"$base/ckpt", s"$base/state",
-          strictBefore = Some(("price", "before")),
-          conflictDlq = Some(s"$base/dlq"))
+        StreamingOps.runCdcPass(spark, FileCdcSource(df.schema, s"$base/in"),
+          s"$base/ckpt", PassSpec(OneTable(s"$base/state"),
+            strictBefore = Some(StrictBefore("price", "before", s"$base/dlq"))))
+        StreamingOps.writeWave(split(df), s"$base/fin", i)
+        StreamingOps.runCdcPass(spark,
+          FileCdcSource(split(df).schema, s"$base/fin"), s"$base/fckpt",
+          PassSpec(splitTopology(base),
+            strictBefore =
+              Some(StrictBefore("price", "before", s"$base/fdlq"))))
       }
       val served = StreamingOps.readLatestState(spark, s"$base/state")
         .collect().map(r => r.getLong(0) ->
           ((r.get(2).toString.toDouble, r.getString(3)))).toMap
       assert(served == state,
         s"strict fold diverged (log $si, ${evWaves.size} waves): $evList")
+      assert(servedSplit(base) == state.map { case (k, (p, st)) =>
+          k -> ((Some(p), Some(st))) },
+        s"strict fold diverged in the topology (log $si): $evList")
       // a conflict-free run never creates the DLQ dir (the gate skips
       // empty epoch writes) — absent reads as the empty verdict set
       val dlqImpl =
@@ -601,6 +648,13 @@ class CdcPropertySpec extends SparkTestBase {
           .select(col("seq")).collect().map(_.getLong(0)).toSet
       assert(dlqImpl == dlqModel.toSet,
         s"DLQ diverged (log $si, ${evWaves.size} waves): $evList")
+      // the topology's one DLQ holds the same verdicts
+      val topoDlq =
+        if (!StateFs.exists(s"$base/fdlq")) Set.empty[Long]
+        else spark.read.parquet(s"$base/fdlq")
+          .select(col("seq")).collect().map(_.getLong(0)).toSet
+      assert(topoDlq == dlqModel.toSet,
+        s"topology DLQ diverged (log $si): $evList")
     }
   }
 
@@ -634,14 +688,15 @@ class CdcPropertySpec extends SparkTestBase {
       if (narrow.nonEmpty) {
         StreamingOps.writeWave(toDf(narrow, wide = false), s"$base/in", w)
         StreamingOps.runCdcPass(spark,
-          toDf(narrow, wide = false).schema, s"$base/in", s"$base/ckpt",
-          s"$base/state")
+          FileCdcSource(toDf(narrow, wide = false).schema, s"$base/in"),
+          s"$base/ckpt", PassSpec(OneTable(s"$base/state")))
         w += 1
       }
       if (wide.nonEmpty) {
         StreamingOps.writeWave(toDf(wide, wide = true), s"$base/in", w)
-        StreamingOps.runCdcPass(spark, toDf(wide, wide = true).schema,
-          s"$base/in", s"$base/ckpt", s"$base/state")
+        StreamingOps.runCdcPass(spark,
+          FileCdcSource(toDf(wide, wide = true).schema, s"$base/in"),
+          s"$base/ckpt", PassSpec(OneTable(s"$base/state")))
       }
       val served = StreamingOps.readLatestState(spark, s"$base/state")
         .select(col("okey"), col("qty")).collect()

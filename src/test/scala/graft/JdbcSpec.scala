@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.FileCdcSource
+import graft.streaming.{OneTable, PassSpec}
 import java.sql.DriverManager
 
 import graft.sources.{EpochParquetSink, JdbcBatchSink, JdbcSource}
@@ -124,8 +126,9 @@ class JdbcSpec extends SparkTestBase {
       .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
         col("status"))
     graft.streaming.StreamingOps.writeWave(ev, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, ev.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state")
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(ev.schema, s"$base/in"), s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     // export = the collapse WITH tombstones + seq (the changes shape)
     val changes = graft.streaming.StreamingOps
       .readStateChanges(spark, s"$base/state", sinceSeq = 0L)

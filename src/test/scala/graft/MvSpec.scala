@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.FileCdcSource
+import graft.streaming.{Ddl, FanOut, OneTable, PassSpec}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -293,8 +295,8 @@ class MvSpec extends SparkTestBase {
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
     val dirs = (0 until nShards).map(i => s"shard_$i" -> s"$base/s_$i").toMap
-    StreamingOps.runCdcPassMulti(spark, log.schema, s"$base/in",
-      s"$base/ckpt", dirs)
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, s"$base/in"),
+      s"$base/ckpt", PassSpec(FanOut(dirs)))
     // per-shard views seeded from each shard's served slice
     dirs.values.foreach { d =>
       StreamingOps.mvSeedSum(spark,
@@ -382,8 +384,8 @@ class MvSpec extends SparkTestBase {
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
     val dirs = (0 until nShards).map(i => s"shard_$i" -> s"$base/s_$i").toMap
-    StreamingOps.runCdcPassMulti(spark, log.schema, s"$base/in",
-      s"$base/ckpt", dirs)
+    StreamingOps.runCdcPass(spark, FileCdcSource(log.schema, s"$base/in"),
+      s"$base/ckpt", PassSpec(FanOut(dirs)))
     def union() = dirs.values.toSeq.sorted
       .map(d => StreamingOps.readLatestState(spark, d))
       .reduce(_.unionByName(_)).orderBy(col("okey"))
@@ -716,11 +718,13 @@ class MvSpec extends SparkTestBase {
     val e2 = Seq(MvEv("U", 4, 2, 40.00, "A"))
     val base = tmp()
     writeEpochs(base, Seq(e1))
-    StreamingOps.runCdcPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"), s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     StreamingOps.writeWave(evDf(e2), s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state")
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(evDf(Seq.empty).schema, s"$base/in"), s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     StreamingOps.mvAttachMinMax(spark, s"$base/state", s"$base/snap",
       s"$base/mv")
     assert(servedMinMax(s"$base/mv") == refMinMax(e1 ++ e2),
@@ -979,17 +983,18 @@ class MvSpec extends SparkTestBase {
       ev("I", 3, 3, "g2", null), ev("I", 4, 5, "g2", null)),
       "grp", withAmt = false)
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runCdcPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state")
+    StreamingOps.runCdcPass(spark, FileCdcSource(w0.schema, s"$base/in"),
+      s"$base/ckpt", PassSpec(OneTable(s"$base/state")))
     // pass 2: ADD COLUMN amt DEFAULT 7.50 at position 4; k2 writes 2.00,
     // k3 writes an explicit NULL (stays NULL — MySQL backfill, not a
     // blanket coalesce); k1/k5 untouched → serve the default
     val w1 = frame(Seq(ev("U", 5, 2, "g1", 2.0), ev("U", 6, 3, "g2", null)),
       "grp", withAmt = true)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runCdcPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state",
-      defaultCols = Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50")))
+    StreamingOps.runCdcPass(spark, FileCdcSource(w1.schema, s"$base/in"),
+      s"$base/ckpt", PassSpec(OneTable(s"$base/state"),
+        ddl = Ddl(defaults =
+          Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50")))))
     // attach: g1 = (2, 7.50 + 2.00); g2 = (2, NULL + 7.50)
     StreamingOps.mvAttachSum(spark, s"$base/state", s"$base/mv",
       groupCol = "grp", measureCol = "amt")

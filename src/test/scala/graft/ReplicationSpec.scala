@@ -1,5 +1,7 @@
 package graft
 
+import graft.sources.FileCdcSource
+import graft.streaming.{FanOut, OneTable, PassSpec}
 import org.apache.spark.sql.functions._
 
 /** End-to-end lifecycle of the [[Replication]] facade — the reference's
@@ -666,15 +668,15 @@ class ReplicationSpec extends SparkTestBase {
     val live = frame(Seq(("I", 1L, 1L, 0L, 10.0, "A"),
       ("U", 2L, 1L, 0L, 11.0, "B")))
     StreamingOps.writeWave(live, s"$base/in_live", 0)
-    StreamingOps.runCdcPass(spark, live.schema, s"$base/in_live",
-      s"$base/ckpt_live", s"$root/orders")
+    StreamingOps.runCdcPass(spark, FileCdcSource(live.schema, s"$base/in_live"),
+      s"$base/ckpt_live", PassSpec(OneTable(s"$root/orders")))
     // shadow fill: COMPOSITE key — same okey, two lines, both live
     val shadow = frame(Seq(("I", 1L, 1L, 1L, 5.0, "X"),
       ("I", 2L, 1L, 2L, 6.0, "Y")))
     StreamingOps.writeWave(shadow, s"$base/in_gho", 0)
-    StreamingOps.runCdcPass(spark, shadow.schema, s"$base/in_gho",
-      s"$base/ckpt_gho", s"$root/_orders_gho",
-      keyCols = Seq("okey", "line_no"))
+    StreamingOps.runCdcPass(spark,
+      FileCdcSource(shadow.schema, s"$base/in_gho"), s"$base/ckpt_gho",
+      PassSpec(OneTable(s"$root/_orders_gho", Seq("okey", "line_no"))))
     Replication.renameTables(root,
       Seq("orders" -> "_orders_del", "_orders_gho" -> "orders"))
     // the swapped-in `orders` collapses per (okey, line_no): two rows
@@ -1136,8 +1138,9 @@ class ReplicationSpec extends SparkTestBase {
     graft.streaming.StreamingOps.writeWave(txnDf(Seq(
       TxnEv("I", 1, 1, 10.0, "O", 0))), s"$cold/in", 0)
     graft.streaming.StreamingOps.runCdcPass(spark,
-      txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 0))).schema,
-      s"$cold/in", s"$cold/ckpt", s"$cold/state")
+      FileCdcSource(txnDf(Seq(TxnEv("I", 1, 1, 1.0, "O", 0))).schema,
+        s"$cold/in"),
+      s"$cold/ckpt", PassSpec(OneTable(s"$cold/state")))
     assert(Replication.replicaStatus(spark, s"$cold/state")
       .secondsBehindSource.isEmpty)
   }
@@ -1919,6 +1922,87 @@ class ReplicationSpec extends SparkTestBase {
         Map("t_ord" -> ordTruth, "t_line" -> lineTruth), dirs)
     }
     assert(e.getMessage.contains("keyed by"))
+    // FLOAT keys: grouping normalizes -0.0 to 0.0 and every NaN to one
+    // NaN, so each pair below is ONE key — in a one-table sync and in a
+    // heterogeneous-key topology alike (each pair spans both waves)
+    val fb = tmp()
+    val nan = Double.NaN
+    val fl = spark.createDataFrame(Seq(
+        ("I", 1L, "t_f", 1L, 0.0, 1.0), ("U", 2L, "t_f", 1L, -0.0, 2.0),
+        ("I", 3L, "t_f", 2L, nan, 3.0), ("U", 4L, "t_f", 2L, nan, 4.0),
+        ("I", 5L, "t_l", 7L, -0.0, 5.0), ("U", 6L, "t_l", 7L, 0.0, 6.0),
+        ("I", 7L, "t_l", 8L, nan, 7.0), ("U", 8L, "t_l", 8L, nan, 8.0)))
+      .toDF("op", "seq", "table", "okey", "fk", "price")
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+      .withColumn("status", lit("S"))
+    Seq(0, 1).foreach { w =>
+      graft.streaming.StreamingOps.writeWave(
+        fl.filter(col("seq") % 2 === (1 - w)), s"$fb/in", w)
+      graft.streaming.StreamingOps.writeWave(
+        fl.filter(col("seq") % 2 === (1 - w) && col("table") === "t_f"),
+        s"$fb/in1", w)
+    }
+    def prices(dir: String) = Replication.appliedState(spark, dir)
+      .select(col("price")).collect().map(_.getDouble(0)).sorted.toSeq
+    Replication.incrementalSync(spark, fl.schema, s"$fb/in1",
+      s"$fb/ckpt1", s"$fb/one", keyCols = Seq("fk"))
+    assert(prices(s"$fb/one") == Seq(2.0, 4.0))
+    Replication.incrementalSyncMulti(spark, fl.schema, s"$fb/in",
+      s"$fb/ckpt", Map("t_f" -> s"$fb/sf", "t_l" -> s"$fb/sl"),
+      keyColsByTable = Map("t_f" -> Seq("fk"), "t_l" -> Seq("okey", "fk")))
+    assert(prices(s"$fb/sf") == Seq(2.0, 4.0))
+    assert(prices(s"$fb/sl") == Seq(6.0, 8.0))
+  }
+
+  test("one apply pass: a one-table sync and a one-entry topology serve " +
+      "the same state and differ only in their documented progress") {
+    // one txn-gated, composite-key log whose row filter excludes some
+    // events (seq 3, 6); txn 3 never commits
+    val base = tmp()
+    def ev(op: String, seq: Long, okey: Long, line: Long, price: Double,
+        txn: Long) = (op, seq, okey, line, price, txn)
+    val log = spark.createDataFrame(Seq(
+        ev("I", 1, 1, 1, 10.0, 1), ev("I", 2, 1, 2, 20.0, 1),
+        ev("I", 3, 2, 1, 500.0, 1), ev("C", 4, -1, -1, 0.0, 1),
+        ev("U", 5, 1, 1, 11.0, 2), ev("U", 6, 1, 2, 900.0, 2),
+        ev("D", 7, 2, 1, 0.0, 2), ev("C", 8, -1, -1, 0.0, 2),
+        ev("I", 9, 3, 1, 30.0, 3)))
+      .toDF("op", "seq", "okey", "line_no", "price", "txn")
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+      .withColumn("status", lit("S"))
+      .withColumn("table", lit("t"))
+    graft.streaming.StreamingOps.writeWave(
+      log.filter(col("seq") <= 4), s"$base/in", 0)
+    graft.streaming.StreamingOps.writeWave(
+      log.filter(col("seq") > 4), s"$base/in", 1)
+    val keys = Seq("okey", "line_no")
+    val p = "price < 100"
+    val one = Replication.incrementalSync(spark, log.schema, s"$base/in",
+      s"$base/ckpt1", s"$base/s1", txnCol = Some("txn"), keyCols = keys,
+      rowFilter = Some(p))
+    val topo = Replication.incrementalSyncMulti(spark, log.schema,
+      s"$base/in", s"$base/ckpt2", Map("t" -> s"$base/s2"),
+      txnCol = Some("txn"), keyCols = keys, rowFilters = Map("t" -> p))("t")
+    def served(d: String) = Replication.appliedState(spark, d)
+      .collect().map(_.toSeq).toSet
+    assert(served(s"$base/s1") == served(s"$base/s2"))
+    assert(served(s"$base/s1").size == 2)
+    Seq("_schema", "_keycols").foreach(f => assert(
+      graft.streaming.StateFs.readSmall(s"$base/s1/$f") ==
+        graft.streaming.StateFs.readSmall(s"$base/s2/$f"), f))
+    // rows: consumed (all 9) vs applied to the table (seq 1, 2, 5, 7)
+    assert(one.rowsApplied == 9L && topo.rowsApplied == 4L, s"$one / $topo")
+    // position: resolved (through commit marker 8) vs applied (delete 7)
+    assert(one.lastSeq.contains(8L) && topo.lastSeq.contains(7L),
+      s"$one / $topo")
+    assert(one.epochs == topo.epochs && one.pendingRows == 1L &&
+      topo.pendingRows == 1L && one.sourceMaxSeq == topo.sourceMaxSeq,
+      s"$one / $topo")
+    // the pending tail: under the state dir vs under the checkpoint
+    assert(graft.streaming.StateFs.exists(s"$base/s1/_pending") &&
+      !graft.streaming.StateFs.exists(s"$base/ckpt1/_pending"))
+    assert(graft.streaming.StateFs.exists(s"$base/ckpt2/_pending") &&
+      !graft.streaming.StateFs.exists(s"$base/s2/_pending"))
   }
 
   test("composite PK consistency check: a tuple-level mismatch is caught") {
@@ -3182,8 +3266,9 @@ class ReplicationSpec extends SparkTestBase {
       TxnEv("I", 4, 3, 4.0, "O", 0), TxnEv("D", 5, 2, 9.0, "O", 0)))
       .drop("txn")
     graft.streaming.StreamingOps.writeWave(log, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPass(spark, log.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state")
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt",
+      PassSpec(OneTable(s"$base/state")))
     // hard view: tombstone winners dropped
     val hard = graft.streaming.StreamingOps
       .readLatestState(spark, s"$base/state")
@@ -3213,9 +3298,10 @@ class ReplicationSpec extends SparkTestBase {
       .withColumn("table",
         when(col("okey") % 2 === 0, "t_shard_0").otherwise("t_shard_1"))
     graft.streaming.StreamingOps.writeWave(log, s"$base/in", 0)
-    graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-      s"$base/in", s"$base/ckpt", Map("t_main" -> s"$base/state_main"),
-      routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))
+    graft.streaming.StreamingOps.runCdcPass(spark,
+      FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt",
+      PassSpec(FanOut(Map("t_main" -> s"$base/state_main"),
+        routes = Map("t_shard_0" -> "t_main", "t_shard_1" -> "t_main"))))
     val served = graft.streaming.StreamingOps
       .readLatestState(spark, s"$base/state_main")
       .select(col("okey"), col("price")).collect()
@@ -3224,17 +3310,18 @@ class ReplicationSpec extends SparkTestBase {
     assert(served == Map(2L -> 7.0, 4L -> 1.0))
     // a route must land on a replicated table…
     val e1 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-        s"$base/in", s"$base/ckpt2", Map("t_main" -> s"$base/s2"),
-        routes = Map("t_shard_0" -> "t_mian"))
+      graft.streaming.StreamingOps.runCdcPass(spark,
+        FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt2",
+        PassSpec(FanOut(Map("t_main" -> s"$base/s2"),
+          routes = Map("t_shard_0" -> "t_mian"))))
     }
     assert(e1.getMessage.contains("t_mian"))
     // …and a routed-away source must not itself be a destination
     val e2 = intercept[IllegalArgumentException] {
-      graft.streaming.StreamingOps.runCdcPassMulti(spark, log.schema,
-        s"$base/in", s"$base/ckpt3",
-        Map("t_main" -> s"$base/s3", "t_shard_0" -> s"$base/s4"),
-        routes = Map("t_shard_0" -> "t_main"))
+      graft.streaming.StreamingOps.runCdcPass(spark,
+        FileCdcSource(log.schema, s"$base/in"), s"$base/ckpt3",
+        PassSpec(FanOut(Map("t_main" -> s"$base/s3",
+          "t_shard_0" -> s"$base/s4"), routes = Map("t_shard_0" -> "t_main"))))
     }
     assert(e2.getMessage.contains("t_shard_0"))
   }
