@@ -184,8 +184,9 @@ object Replication {
     * `binlog_row_image=MINIMAL` stream: each batch completes into full
     * row images against the prior state at apply time (see
     * StreamingOps.completePartialImagesMulti), so the replica and every
-    * downstream consumer hold full rows. */
-  /** `ddlSql` is the RAW-TEXT alternative to the structured DDL
+    * downstream consumer hold full rows.
+    *
+    * `ddlSql` is the RAW-TEXT alternative to the structured DDL
     * arguments: the gap's `QueryEvent` statements as the binlog ships
     * them — `(binlog position, SQL text)` pairs — parsed and folded
     * onto `renameCols`/`defaultCols`/`dropCols`/`truncateAtSeq` by
@@ -320,8 +321,9 @@ object Replication {
     * group-partitioned snapshot (kept under `mvDir/_snap`). `enrich`
     * (sum mode only) joins each delta image against broadcast static
     * dimensions before grouping — the join-MV shape. Returns the pass's
-    * progress and the SERVED view. */
-  /** `renameCols`/`defaultCols` are the MV-across-DDL surface in BOTH
+    * progress and the SERVED view.
+    *
+    * `renameCols`/`defaultCols` are the MV-across-DDL surface in BOTH
     * modes — the same RENAME COLUMN / ADD COLUMN … DEFAULT declarations
     * [[incrementalSync]] takes. The state side stays lazy; a rename
     * hitting the view's group column migrates the O(groups) view
@@ -342,19 +344,17 @@ object Replication {
       : (SyncProgress, DataFrame) = {
     if (minMax) require(measureCol == "price",
       "a custom measure is sum-mode surface — the min/max view is fixed " +
-        "to price (declare an arbitrary view via runMvRecomputePass)")
-    val src = sources.FileCdcSource(schema, inDir)
-    val (rows, epochs, lastSeq, pending, srcMax) =
-      if (minMax) streaming.StreamingOps.runMvMinMaxPassSource(spark, src,
-        ckptDir, stateDir, s"$mvDir/_snap", mvDir, keyCols, groupCol,
-        txnCol = txnCol, trackSeq = true,
-        renameCols = renameCols, defaultCols = defaultCols)
-      else streaming.StreamingOps.runMvSumPassSource(spark, src,
-        ckptDir, stateDir, mvDir, keyCols, groupCol, enrich,
-        txnCol = txnCol, trackSeq = true, measureCol = measureCol,
-        renameCols = renameCols, defaultCols = defaultCols)
-    (SyncProgress(rows, epochs, lastSeq, pending, srcMax),
-      streaming.StreamingOps.readMv(spark, mvDir))
+        "to price (declare an arbitrary view via a RecomputeView)")
+    import streaming.{Ddl, MvSpec, RecomputeView, SumView}
+    val view =
+      if (minMax) RecomputeView.minMax(s"$mvDir/_snap", groupCol)
+      else SumView(groupCol, measureCol, enrich)
+    val r = streaming.StreamingOps.runMvPass(spark,
+      sources.FileCdcSource(schema, inDir), ckptDir,
+      MvSpec(stateDir, mvDir, view, keyCols, txnCol,
+        Ddl(renameCols, defaults = defaultCols), trackSeq = true))
+    (SyncProgress(r.rowsConsumed, r.epochs(), r.resolvedSeq, r.pendingRows,
+      r.seenSeq), streaming.StreamingOps.readMv(spark, mvDir))
   }
 
   /** One-call operational readout of a replica state dir — the SHOW
@@ -471,15 +471,6 @@ object Replication {
     def consistent: Boolean = groupsDiverged == 0
   }
 
-  /** Does the maintained SUM view still equal the group-by over the
-    * served state? The one divergence a correctly-running pass cannot
-    * prevent: a row-level REPAIR ([[repairSync]]) writes correction
-    * epochs straight into the state dir — the next MV batch's old-image
-    * lookup will read them, but the view's AGGREGATE was never adjusted
-    * by the correction delta, so the view is permanently off by exactly
-    * that delta until rebuilt. The operator flow is repair → check →
-    * [[viewRebuild]] if red. One aggregate scan of the state + one read
-    * of the O(groups) view, compared null-safe per group. */
   /** Fail loudly — by name — when `mvDir` does not hold a SUM view of
     * the expected (groupCol, n_rows, total) shape: a minMax-mode view
     * (n_rows, mn, mx) or a mismatched groupCol would otherwise surface
@@ -500,6 +491,15 @@ object Replication {
         "this is a different view")
   }
 
+  /** Does the maintained SUM view still equal the group-by over the
+    * served state? The one divergence a correctly-running pass cannot
+    * prevent: a row-level REPAIR ([[repairSync]]) writes correction
+    * epochs straight into the state dir — the next MV batch's old-image
+    * lookup will read them, but the view's AGGREGATE was never adjusted
+    * by the correction delta, so the view is permanently off by exactly
+    * that delta until rebuilt. The operator flow is repair → check →
+    * [[viewRebuild]] if red. One aggregate scan of the state + one read
+    * of the O(groups) view, compared null-safe per group. */
   def viewConsistencyCheck(spark: SparkSession, stateDir: String,
       mvDir: String, groupCol: String = "status"): ViewCheckReport = {
     requireSumView(mvDir, groupCol)
@@ -988,8 +988,9 @@ object Replication {
     * tables whose PKs differ — a header table keyed by order id next
     * to a lines table keyed by (order id, line no) — and the single
     * fan-out job collapses each table under its own key (see
-    * StreamingOps.runCdcPass). */
-  /** `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
+    * StreamingOps.runCdcPass).
+    *
+    * `ddlSql` is the RAW-TEXT DDL surface for the TOPOLOGY, mirroring
     * [[incrementalSync]]'s: the gap's QueryEvents fold through
     * [[streaming.DdlSql.foldTopology]] scoped to the replicated set —
     * column verbs fold ENVELOPE-WIDE (one binlog, one shared envelope,
@@ -1480,9 +1481,10 @@ object Replication {
   def repairSync(spark: SparkSession, src: DataFrame, stateDir: String,
       keyCols: Seq[String] = Seq("okey"),
       pendingRoot: Option[String] = None): RepairReport = {
-    val (i, u, d) = streaming.StreamingOps.repairState(spark, src, stateDir,
-      keyCols, pendingRoot)
-    RepairReport(i, u, d)
+    streaming.StreamingOps.repairState(spark,
+      streaming.OneTable(stateDir, keyCols),
+      Map(streaming.OneTable.Table -> src), pendingRoot)
+      .apply(streaming.OneTable.Table)
   }
 
   /** One key-hash chunk's verdict from [[consistencyCheckChunked]]. */
@@ -1554,11 +1556,12 @@ object Replication {
       if (nChunks <= B && B % nChunks == 0)
         Some((0L until B).filter(b => dirtyChunks.contains(b % nChunks)).toSeq)
       else None
-    val (i, u, d) = streaming.StreamingOps.repairState(spark, src, stateDir,
-      keyCols, pendingRoot,
+    streaming.StreamingOps.repairState(spark,
+      streaming.OneTable(stateDir, keyCols),
+      Map(streaming.OneTable.Table -> src), pendingRoot,
       restrict = Some(chunkOf(keyCols, nChunks).isin(dirtyChunks: _*)),
       restrictBuckets = buckets)
-    RepairReport(i, u, d)
+      .apply(streaming.OneTable.Table)
   }
 
   /** Topology-level repair for a multi-table sync
@@ -1580,9 +1583,9 @@ object Replication {
       pendingRoot: Option[String] = None,
       keyColsByTable: Map[String, Seq[String]] = Map.empty)
       : Map[String, RepairReport] =
-    streaming.StreamingOps.repairStateMulti(spark, srcByTable, stateDirs,
-      keyCols, pendingRoot, keyColsByTable)
-      .map { case (t, (i, u, d)) => t -> RepairReport(i, u, d) }
+    streaming.StreamingOps.repairState(spark,
+      streaming.FanOut(stateDirs, keyCols, keyColsByTable), srcByTable,
+      pendingRoot)
 
   /** Outcome of a source↔destination consistency check (§3.1 #3). */
   final case class ConsistencyReport(nSrc: Long, nDst: Long,

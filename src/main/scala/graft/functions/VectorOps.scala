@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   * unequal lengths truncate to the shorter input (DuckDB's list_zip pads
   * with NULL instead). Neither case is reachable from the 64-d embeddings
   * table; revisit both if this expression is reused on looser schemas.
-  */
-/** @param approx marks the APPROXIMATE variant (`cosine_sim_approx`):
+  *
+  * @param approx marks the APPROXIMATE variant (`cosine_sim_approx`):
   *   numerically identical, but when used as a join predicate it
   *   licenses [[graft.plans.ApproxSimJoinRewrite]] to prune candidate
   *   pairs via LSH bucketing — pairs no bucket co-locates may be

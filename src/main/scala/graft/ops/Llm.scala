@@ -222,28 +222,6 @@ object Llm {
                           WHERE jaccard >= 0.6)"""
   }
 
-  /** The L2a confirmed-near-dup-pair pipeline (a_id, b_id, jaccard ≥ 0.6),
-    * shared by llm_dedup_minhash (which just orders it) and
-    * llm_dedup_clusters (which runs connected components over it).
-    *
-    * split(text) runs once per row; each WORD is md5-hashed once and
-    * every downstream value (shingle hashes, signatures, band keys,
-    * Jaccard sets) is 64-bit arithmetic over long arrays — no shingle
-    * string is ever built. The (doc_id, sh) table is pinned with a LAZY
-    * persist(MEMORY_AND_DISK), so the band fan-out and the Jaccard
-    * confirm share ONE tokenize+hash pass without the separate eager
-    * materialization job a localCheckpoint would run (measured ~1.5 s of
-    * the query's cost at sf0.1); at cluster scale the disk tier of the
-    * same StorageLevel (or a staged parquet write) plays this role.
-    *
-    * NOTE no size(sh)-based filter here: a Filter on the derived array
-    * gets predicate-pushed below the projection, inlining the whole hash
-    * pipeline into the condition (three copies of the word-hash transform
-    * re-evaluated per shingle — an O(words·shingles) blowup measured at
-    * 8x the query cost). Empty-shingle docs instead self-exclude through
-    * NULL band keys: array_min of an empty array is NULL,
-    * null-propagating concat makes bv NULL, and a NULL equi-join key
-    * never matches — identical to the oracle's `||`. */
   /** (doc_id, sh): hashed distinct 3-shingle sets of a (doc_id, text)
     * frame — the minhash set form every dedup stage computes on. */
   private[graft] def shingleTableOf(docs: DataFrame): DataFrame =
@@ -269,8 +247,9 @@ object Llm {
 
   /** Exact-Jaccard confirm over candidate (a_id, b_id) pairs: each side
     * rejoins its shingle set from `sh` AFTER candidate dedup, so the
-    * wide arrays never ride the band join or the distinct. */
-  /** `broadcastPairs = true` PINS the candidate side (and its first-join
+    * wide arrays never ride the band join or the distinct.
+    *
+    * `broadcastPairs = true` PINS the candidate side (and its first-join
     * result) as the broadcast build side, so the shingle table streams
     * through both probes without ever riding an exchange — the
     * incremental-ingest regime, where the contract is candidates ≪
@@ -290,6 +269,28 @@ object Llm {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
+  /** The L2a confirmed-near-dup-pair pipeline (a_id, b_id, jaccard ≥ 0.6),
+    * shared by llm_dedup_minhash (which just orders it) and
+    * llm_dedup_clusters (which runs connected components over it).
+    *
+    * split(text) runs once per row; each WORD is md5-hashed once and
+    * every downstream value (shingle hashes, signatures, band keys,
+    * Jaccard sets) is 64-bit arithmetic over long arrays — no shingle
+    * string is ever built. The (doc_id, sh) table is pinned with a LAZY
+    * persist(MEMORY_AND_DISK), so the band fan-out and the Jaccard
+    * confirm share ONE tokenize+hash pass without the separate eager
+    * materialization job a localCheckpoint would run (measured ~1.5 s of
+    * the query's cost at sf0.1); at cluster scale the disk tier of the
+    * same StorageLevel (or a staged parquet write) plays this role.
+    *
+    * NOTE no size(sh)-based filter here: a Filter on the derived array
+    * gets predicate-pushed below the projection, inlining the whole hash
+    * pipeline into the condition (three copies of the word-hash transform
+    * re-evaluated per shingle — an O(words·shingles) blowup measured at
+    * 8x the query cost). Empty-shingle docs instead self-exclude through
+    * NULL band keys: array_min of an empty array is NULL,
+    * null-propagating concat makes bv NULL, and a NULL equi-join key
+    * never matches — identical to the oracle's `||`. */
   private def minhashConfirmedPairs(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.CacheRegistry.track(
       shingleTableOf(docsWithNearDups(s, dir))

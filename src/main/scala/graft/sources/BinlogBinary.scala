@@ -1116,8 +1116,6 @@ object BinlogBinary {
     sealEvent(tsSec, GTID_LIST_MARIA, pos, b.toByteArray)
   }
 
-  /** One Xid event — the COMMIT marker (payload: `xid(8 LE)`; the
-    * [[parseXids]] inverse). */
   /** One ROWS_QUERY event (type 29, `binlog_rows_query_log_events=
     * ON`): the statement's original SQL riding ahead of its row
     * events — payload is the legacy 1-byte length (capped at 255;
@@ -1150,6 +1148,8 @@ object BinlogBinary {
       logName: String = "bin.000001"): Array[Byte] =
     sealEvent(tsSec, HEARTBEAT, pos, logName.getBytes("UTF-8"))
 
+  /** One Xid event — the COMMIT marker (payload: `xid(8 LE)`; the
+    * [[parseXids]] inverse). */
   def xidEvent(pos: Long, tsSec: Long, xid: Long): Array[Byte] = {
     val b = new java.io.ByteArrayOutputStream()
     var x = xid

@@ -1,6 +1,11 @@
 package graft.streaming
 
+import graft.Tables.D2
 import graft.streaming.StreamingOps.ColumnDefault
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
+  StructField, StructType}
 
 /** The destination shape of a CDC pass: which state dir each table
   * applies to and how each is keyed. */
@@ -132,7 +137,8 @@ final case class PassSpec(topology: Topology,
 
 /** What one table took from a pass: rows applied (events after the
   * gate, filters and completion, before the collapse), delta epochs
-  * written, and the newest applied seq. */
+  * written, and the newest applied seq. An MV pass reports its state
+  * dir's entry as rows consumed and the resolved seq. */
 final case class Applied(rows: Long, epochs: Long, maxSeq: Option[Long])
 
 /** The outcome of one CDC pass.
@@ -154,4 +160,62 @@ final case class PassResult(rowsConsumed: Long, tables: Map[String, Applied],
   /** Delta epochs written to `table`'s state dir. */
   def epochs(table: String = OneTable.Table): Long =
     tables.get(table).fold(0L)(_.epochs)
+}
+
+/** The per-group view an MV pass keeps in step with its state dir. The
+  * group column names a column of the image frame the view aggregates
+  * (after `enrich`, for a [[SumView]]). */
+sealed trait MvView {
+  def groupCol: String
+  /** The served view's schema, `groupCol` first. */
+  def mvSchema: StructType
+}
+
+/** A RETRACTABLE view, `groupCol → (n_rows, total = sum(measureCol))`,
+  * maintained by signed per-batch deltas: each touched key contributes
+  * f(new image) − f(old image), never a recompute. `enrich` maps both
+  * delta sides before grouping — a broadcast join against static
+  * dimensions (the join-MV shape) or a derived group key. */
+final case class SumView(groupCol: String = "status",
+    measureCol: String = "price",
+    enrich: DataFrame => DataFrame = identity) extends MvView {
+  def mvSchema: StructType = StructType(Seq(
+    StructField(groupCol, StringType), StructField("n_rows", LongType),
+    StructField("total", D2)))
+}
+
+/** A NON-RETRACTABLE view (min/max, top-K, medians): the batch's DIRTY
+  * groups recompute from a collapsed snapshot of the table partitioned
+  * by `groupCol` under `snap`, while untouched groups' view rows carry
+  * forward. `recompute` maps a set of groups' snapshot rows (collapsed,
+  * alive, envelope-shaped) to their view rows, one or many per group;
+  * `mvSchema` declares the view with `groupCol` first. */
+final case class RecomputeView(groupCol: String, snap: String,
+    mvSchema: StructType, recompute: DataFrame => DataFrame) extends MvView
+
+object RecomputeView {
+  /** `groupCol → (n_rows, mn = min(price), mx = max(price))`. */
+  def minMax(snap: String, groupCol: String = "status"): RecomputeView =
+    RecomputeView(groupCol, snap,
+      StructType(Seq(StructField(groupCol, StringType),
+        StructField("n_rows", LongType), StructField("mn", DoubleType),
+        StructField("mx", DoubleType))),
+      rows => rows.groupBy(col(groupCol)).agg(count(lit(1)).as("n_rows"),
+        min(col("price")).as("mn"), max(col("price")).as("mx")))
+}
+
+/** Everything one MV pass maintains: the table's `state` dir (keyed by
+  * `keyCols`) and the `view` served from `mv`. `txnCol` gates both on
+  * transaction boundaries, `trackSeq` reports positions under the CDC
+  * pass's contract ([[PassResult]]), and `ddl` carries the column verbs
+  * of [[Ddl]]. A TRUNCATE cannot be applied to a view incrementally, so
+  * `ddl.truncateAt` refuses. */
+final case class MvSpec(state: String, mv: String, view: MvView,
+    keyCols: Seq[String] = Seq("okey"),
+    txnCol: Option[String] = None,
+    ddl: Ddl = Ddl(),
+    trackSeq: Boolean = false) {
+  require(ddl.truncateAt.isEmpty,
+    "an MV pass cannot apply TRUNCATE TABLE to its view incrementally — " +
+      "re-attach the view (mvAttach) after syncing the truncate")
 }

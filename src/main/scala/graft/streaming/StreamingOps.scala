@@ -779,15 +779,6 @@ object StreamingOps {
     "ALTER TABLE orders RENAME COLUMN channel TO chan",
     "ALTER TABLE `orders` ADD COLUMN `note` VARCHAR(32) DEFAULT 'none'")
 
-  /** The ONE transaction-gated dump scenario behind every transport's
-    * txn query: positions seq*1e8+okey+1 (strictly per-key monotone;
-    * each wave's rows sit strictly between their txn's GTID stamp at
-    * n*1e8 and its Xid at (n+1)*1e8-1), transactions 1-2 committed,
-    * txn 3 — the delete wave — stamped but Xid-less, held back
-    * entirely; collapsing into [[binlogTxnSql]]'s shape. `render`
-    * writes the positioned rows; `writeStamps` writes the GTID/Xid
-    * punctuation in the transport's framing (text lines or wire
-    * events); `parseTxn` decodes dir → txn-stamped envelope. */
   /** The txn scenarios' shared TABLE_MAP. */
   private val txnScenarioCols: BCols = Seq(
     "okey" -> org.apache.spark.sql.types.LongType,
@@ -953,6 +944,15 @@ object StreamingOps {
     ()
   }
 
+  /** The ONE transaction-gated dump scenario behind every transport's
+    * txn query: positions seq*1e8+okey+1 (strictly per-key monotone;
+    * each wave's rows sit strictly between their txn's GTID stamp at
+    * n*1e8 and its Xid at (n+1)*1e8-1), transactions 1-2 committed,
+    * txn 3 — the delete wave — stamped but Xid-less, held back
+    * entirely; collapsing into [[binlogTxnSql]]'s shape. `render`
+    * writes the positioned rows; `writeStamps` writes the GTID/Xid
+    * punctuation in the transport's framing (text lines or wire
+    * events); `parseTxn` decodes dir → txn-stamped envelope. */
   private def binlogTxnScenario(s: SparkSession, dir: String,
       render: (DataFrame, BCols, String) => Unit,
       writeStamps: (String, String) => Unit,
@@ -1137,16 +1137,6 @@ object StreamingOps {
           .otherwise(acc)
     }
     writeWaves(ev, in, waveCol, ranges.size, Seq(col("event_id")))
-  }
-
-  /** Fold a frame's max(`seq`) into a running horizon — the ONE
-    * trackSeq position-bookkeeping primitive shared by the CDC passes
-    * and both MV passes (one 1-row aggregate per call; the contract
-    * notes live on runCdcPass). */
-  private def foldMaxSeq(df: DataFrame, into: Option[Long]): Option[Long] = {
-    val r = df.agg(max(col("seq"))).collect()(0)
-    if (r.isNullAt(0)) into
-    else Some(into.fold(r.getLong(0))(math.max(_, r.getLong(0))))
   }
 
   /** A replication position: max `seq` and max event time (`ts` as
@@ -1566,25 +1556,8 @@ object StreamingOps {
           val out = (if (keepHistory || partialImageCol.isDefined) routed
             else collapseTables(routed, keyFor))
             .withColumn(BucketCol, tableBucket(keyFor))
-          oneState match {
-            case Some(state) =>
-              out.write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-            case None =>
-              val epochStage = s"$stage/epoch=$epochId"
-              out.write.mode("overwrite").partitionBy("table")
-                .parquet(epochStage)
-              admitted.foreach { t =>
-                val dest = s"${stateDirs(t)}/epoch=$epochId"
-                StateFs.deleteRecursive(dest) // idempotent replay
-                // the writer percent-escapes special chars in partition
-                // dir names — look the staged dir up under the ESCAPED name
-                StateFs.moveDir(s"$epochStage/table=" +
-                  org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                    .escapePathName(t), dest)
-              }
-              // the moves left only write-job metadata (_SUCCESS)
-              StateFs.deleteRecursive(epochStage)
-          }
+          writeEpochs(out, topology, admitted, s"$stage/epoch=$epochId",
+            _ => epochId)
           admitted.foreach { t =>
             acc(t) = acc(t).copy(epochs = acc(t).epochs + 1)
           }
@@ -1603,6 +1576,35 @@ object StreamingOps {
     PassResult(rows, tables, resolved.seq, seen.seq,
       pendingCount(s, pendRoot, txnCol))
   }
+
+  /** Write one epoch of `out` (envelope rows plus the bucket column, and
+    * `table` for a fan-out) to each of `tables`' state dirs, at
+    * `epochOf(table)`. A one-table topology overwrites `state/epoch=N`
+    * directly; a fan-out writes ONE `partitionBy("table")` dir at
+    * `stage` and renames each table's subdir into its state dir — a
+    * metadata move, since staging shares the state dirs' durable
+    * filesystem in production. A replay deletes and re-renames, so a
+    * partially applied crash heals. */
+  private def writeEpochs(out: DataFrame, topology: Topology,
+      tables: Seq[String], stage: String, epochOf: String => Long): Unit =
+    topology match {
+      case OneTable(state, _) =>
+        out.write.mode("overwrite")
+          .parquet(s"$state/epoch=${epochOf(OneTable.Table)}")
+      case _ =>
+        try {
+          out.write.mode("overwrite").partitionBy("table").parquet(stage)
+          tables.foreach { t =>
+            val dest = s"${topology.stateDirs(t)}/epoch=${epochOf(t)}"
+            StateFs.deleteRecursive(dest) // idempotent replay
+            // the writer percent-escapes special chars in partition dir
+            // names — look the staged dir up under the ESCAPED name
+            StateFs.moveDir(s"$stage/table=" +
+              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+                .escapePathName(t), dest)
+          }
+        } finally StateFs.deleteRecursive(stage) // only job metadata left
+    }
 
   /** The topology collapse: latest-wins per (table, primary key) — one
     * shuffle however many tables. A homogeneous topology groups on the
@@ -1718,8 +1720,9 @@ object StreamingOps {
     * untouched. Crash order is safe at every step: the floor is written
     * after the baseline publishes and before old epochs are deleted —
     * between those instants the original tombstone rows still win their
-    * keys by seq, so nothing resurrects even without the floor. */
-  /** `pendingRoot` points the purge-floor computation at the dir whose
+    * keys by seq, so nothing resurrects even without the floor.
+    *
+    * `pendingRoot` points the purge-floor computation at the dir whose
     * `_pending` subdir holds this state's uncommitted txn tail — the
     * state dir itself for single-table passes (the default), the shared
     * CHECKPOINT dir for multi-table topologies (one topology-level tail
@@ -1962,269 +1965,196 @@ object StreamingOps {
   private def writePurgeFloor(state: String, v: Long): Unit =
     StateFs.writeAtomic(s"$state/_purge_floor", v.toString)
 
-  /** Row-level REPAIR of a diverged state dir (the reference's
+  /** Row-level REPAIR of a diverged topology (the reference's
     * consistency-fix flow, §3.1 #3's completion — the alternative is a
-    * full re-snapshot): diff the source-of-truth table against the
-    * served state with ONE null-safe full-outer join, and write every
-    * divergence as ONE correction epoch — op="I" for keys the state
-    * lost, op="U" for keys whose served values drifted, op="D"
-    * tombstones for keys the source no longer has. The correction rows
-    * all carry seq = (newest applied seq) + 1 — strictly above every
-    * per-key maximum, so each wins its key's collapse; equal seqs
-    * across DIFFERENT keys are fine (collapse is per key), which is
-    * what makes the repair fully distributed with no global row
-    * numbering. "Newest applied seq" also counts the txn-gated PENDING
-    * tail (`pendingRoot`, defaulting to the state dir): a correction at
-    * applied-max + 1 could otherwise TIE with a still-pending event
-    * when its commit later arrives, and max_by would pick the winner
-    * arbitrarily. The epoch id is a fresh unique NEGATIVE (the
-    * compaction-baseline scheme): it can never collide with a resumed
-    * stream's non-negative batch ids, and the purge-floor gate exempts
-    * it (a repair must apply even below a published floor — its seq is
-    * above the floor anyway). `src` must carry the key and EXACTLY the
-    * served value columns; a column the source gained that the state
-    * never saw fails as loudly as a column the source lost — silently
-    * ignoring it would leave the documented check→repair loop
-    * inconsistent forever with a zero-row report.
+    * full re-snapshot): diff each table's source of truth
+    * (`truthByTable`, keyed like `topology.stateDirs`) against its served
+    * state with ONE null-safe full-outer join over the (table, key)
+    * space, and write every divergence as one correction epoch per
+    * touched table — op="I" for keys the state lost, op="U" for keys
+    * whose served values drifted, op="D" tombstones for keys the source
+    * no longer has. A topology repair heals every table or none.
     *
-    * Returns (inserted, updated, deleted). */
-  private[graft] def repairState(s: SparkSession, src: DataFrame,
-      state: String, keyCols: Seq[String] = Seq("okey"),
+    * The join keys each row under ITS table's key definition: on the
+    * key columns themselves when every table shares one key (a one-table
+    * repair joins exactly as its collapse groups), on a
+    * [[tableKeyStruct]] when the keys differ — so a header table keyed
+    * by order id heals in the same pass as a lines table keyed by
+    * (order id, line no). Either way the join normalizes floating-point
+    * keys the way the collapse does: `-0.0` meets `0.0`, `NaN` meets
+    * `NaN`.
+    *
+    * Every correction carries ONE topology-wide seq (the binlog has one
+    * sequence): max(applied seq over every table, pending seq) + 1 —
+    * strictly above every per-key maximum, so each correction wins its
+    * key's collapse; equal seqs across DIFFERENT keys are fine (collapse
+    * is per key), which keeps the repair fully distributed with no
+    * global row numbering. The pending tail counts because a correction
+    * at applied-max + 1 could otherwise TIE with a still-pending event
+    * when its commit arrives. It lives at `pendingRoot`, defaulting to a
+    * one-table dir's own state dir; a txn-gated fan-out roots it at its
+    * ckpt dir. Each epoch id is a fresh unique NEGATIVE (the
+    * compaction-baseline scheme): it never collides with a resumed
+    * stream's batch ids, and the purge-floor gate exempts it. Epochs
+    * carry the bucket column like every state write and land through
+    * [[writeEpochs]].
+    *
+    * Every table must serve one envelope (the fan-out invariant), and
+    * each truth must carry exactly the served columns, one row per key:
+    * a column the source gained fails as loudly as one it lost —
+    * silently ignoring it would leave the check→repair loop inconsistent
+    * forever with a zero-row report. `restrict` (a key-derived
+    * predicate) gates both diff sides to the dirty chunks of a chunked
+    * check, and `restrictBuckets` pushes the matching bucket set into
+    * the state scan — pure IO pruning; `restrict` still gates exactly.
+    *
+    * Returns each table's report; zero-divergence tables report
+    * (0, 0, 0) and receive no epoch. */
+  private[graft] def repairState(s: SparkSession, topology: Topology,
+      truthByTable: Map[String, DataFrame],
       pendingRoot: Option[String] = None,
       restrict: Option[Column] = None,
-      restrictBuckets: Option[Seq[Long]] = None): (Long, Long, Long) = {
+      restrictBuckets: Option[Seq[Long]] = None)
+      : Map[String, graft.Replication.RepairReport] = {
+    val stateDirs = topology.stateDirs
+    val keyFor = topology.keyFor
+    require(truthByTable.keySet == stateDirs.keySet,
+      s"repair sources ${truthByTable.keySet.toSeq.sorted.mkString(",")} " +
+        s"!= topology tables ${stateDirs.keySet.toSeq.sorted.mkString(",")}" +
+        " — a topology repair heals every table or none")
+    require(stateDirs.nonEmpty, "empty topology")
+    val oneState = topology match {
+      case OneTable(state, _) => Some(state)
+      case _ => None
+    }
+    val one = oneState.isDefined
+    def of(t: String) = if (one) "" else s" for '$t'"
+    val tables = stateDirs.keys.toSeq.sorted
     // the key is the STATE DIR's property ([[readKeyCols]]); a repair
     // declaring a different one would diff apples against oranges
-    val published = readKeyCols(state)
-    require(keyCols == published,
-      s"state dir is keyed by (${published.mkString(", ")}) but the repair " +
-        s"declares (${keyCols.mkString(", ")})")
-    // a chunk-restricted repair additionally pushes the dirty chunks'
-    // BUCKET set into the state scan (chunk ids are bucket ids when the
-    // chunk count divides StateBuckets — Replication derives the
-    // mapping): the served-side diff input then prunes files/row groups
-    // instead of collapsing the whole table. `restrict` still does the
-    // exact per-key gating; the buckets are pure IO pruning.
-    val dst = readLatestState(s, state, buckets = restrictBuckets)
-    val valueCols = dst.columns.toSeq.filterNot((keyCols :+ "op").contains)
-    val missingCols = valueCols.filterNot(src.columns.contains)
-    require(missingCols.isEmpty,
-      s"repair source lacks served column(s): ${missingCols.mkString(", ")} — " +
-        "a repair cannot invent values; re-snapshot instead")
-    val gainedCols = src.columns.toSeq.filterNot((keyCols ++ valueCols).contains)
-    require(gainedCols.isEmpty,
-      s"repair source carries column(s) the destination never saw: " +
-        s"${gainedCols.mkString(", ")} — a row-level repair cannot retrofit " +
-        "schema; replicate the DDL (or re-snapshot) first")
-    val raw = readStateDir(s, state)
-    val m = raw.agg(max(col("seq"))).collect()(0)
-    val appliedMax = if (m.isNullAt(0)) 0L else m.getLong(0)
-    val pendingMax = latestPendingBelow(pendingRoot.getOrElse(state),
-        Long.MaxValue)
-      .flatMap { p =>
-        val r = s.read.parquet(p).agg(max(col("seq"))).collect()(0)
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }.getOrElse(0L)
-    val repairSeq = math.max(appliedMax, pendingMax) + 1L
-    val epoch = math.min(-1L, StateFs.epochIds(state).minOption.getOrElse(0L) - 1L)
-    // chunk-restricted repair (the pt-table-checksum fix flow): the
-    // SAME key-derived predicate gates both sides before the diff, so
-    // the expensive full-outer join runs over the dirty chunks only —
-    // keys outside them can never enter, let alone be "repaired"
-    val sv = restrict.foldLeft(
-      src.select((keyCols ++ valueCols).map(col): _*))(_.filter(_))
-    val dv = restrict.foldLeft(
-      dst.select((keyCols ++ valueCols).map(col): _*))(_.filter(_))
-    // the diff's full-outer join REQUIRES unique source keys (a duplicate
-    // would fan out its key's row and let max_by pick an arbitrary
-    // winner) — asserted on the RESTRICTED source, so a chunked repair's
-    // guard scans only the dirty chunks it will diff
-    val uniq = sv.agg(count(lit(1)),
-      count_distinct(col(keyCols.head), keyCols.tail.map(col): _*)).collect()(0)
-    require(uniq.getLong(0) == uniq.getLong(1),
-      s"repair source holds ${uniq.getLong(0)} rows over ${uniq.getLong(1)} " +
-        s"distinct (${keyCols.mkString(", ")}) values — the source of truth " +
-        "must be one row per key")
-    val joined = sv.withColumn("__s", lit(true)).as("s")
-      .join(dv.withColumn("__d", lit(true)).as("d"),
-        keyCols.map(k => col(s"s.$k") <=> col(s"d.$k")).reduce(_ && _),
-        "full_outer")
-    val sStruct = struct(valueCols.map(c => col(s"s.$c")): _*)
-    val dStruct = struct(valueCols.map(c => col(s"d.$c")): _*)
-    val diff = joined.withColumn("op",
-        when(col("d.__d").isNull, "I")
-          .when(col("s.__s").isNull, "D")
-          .when(!(sStruct <=> dStruct), "U"))
-      .filter(col("op").isNotNull)
-      .select((col("op") +:
-        keyCols.map(k => coalesce(col(s"s.$k"), col(s"d.$k")).as(k)) :+
-        lit(repairSeq).as("seq")) ++
-        valueCols.map(c => when(col("op") =!= "D", col(s"s.$c")).as(c)): _*)
-      // pinned BEFORE the epoch write — the diff may derive from this
-      // very state dir (src built off appliedState is legal); the counts
-      // action materializes it, so the write never re-reads a state the
-      // repair itself is mutating
-      .persist()
-    try {
-      val counts = diff.groupBy(col("op")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (counts.nonEmpty)
-        bucketed(envelope(diff), keyCols).write.mode("overwrite")
-          .parquet(s"$state/epoch=$epoch")
-      (counts.getOrElse("I", 0L), counts.getOrElse("U", 0L),
-        counts.getOrElse("D", 0L))
-    } finally { diff.unpersist(); () }
-  }
-
-  /** Topology-level REPAIR — the multi-table completion of
-    * [[repairState]] at a [[FanOut]] topology's scale: ONE null-safe
-    * full-outer diff over the (table, key) space heals N diverged
-    * per-table state dirs in a single call. Per-table truth frames
-    * union in with a routing column, the served states union the same
-    * way, the single diff job emits every divergence, and ONE
-    * partitioned write fans the corrections back out — each table
-    * receives its own correction epoch (unique negative id) via a
-    * metadata rename, exactly the multi-pass staging mechanic. The
-    * txn-gated pending tail is consulted ONCE for the whole topology
-    * (`pendingRoot` = the sync's ckpt dir — where a FanOut pass
-    * roots `_pending`), never once per table, and the correction seq
-    * is a single topology-wide number (the binlog has one sequence):
-    * max(applied seq over ALL tables, pending seq) + 1. All state dirs
-    * must share one served envelope — the FanOut invariant
-    * (one binlog, one fan-out) — and each table's source must be one
-    * row per key, both asserted loudly. Tables may carry DIFFERENT
-    * primary keys (`keyColsByTable`, the [[FanOut]] declaration):
-    * the diff joins on a per-table-encoded key tuple, so a header table
-    * keyed by order id heals in the same single pass as a lines table
-    * keyed by (order id, line no).
-    *
-    * Returns per-table (inserted, updated, deleted); zero-divergence
-    * tables report (0, 0, 0) and receive no epoch. */
-  private[graft] def repairStateMulti(s: SparkSession,
-      srcByTable: Map[String, DataFrame], stateDirs: Map[String, String],
-      keyCols: Seq[String] = Seq("okey"), pendingRoot: Option[String] = None,
-      keyColsByTable: Map[String, Seq[String]] = Map.empty)
-      : Map[String, (Long, Long, Long)] = {
-    require(srcByTable.keySet == stateDirs.keySet,
-      s"repair sources ${srcByTable.keySet.toSeq.sorted.mkString(",")} != " +
-        s"topology tables ${stateDirs.keySet.toSeq.sorted.mkString(",")} — " +
-        "a topology repair heals every table or none")
-    require(stateDirs.nonEmpty, "empty topology")
-    val tables = stateDirs.keys.toSeq.sorted
-    // per-table PRIMARY KEYS (the FanOut declaration shape):
-    // each table's declared key must match its state dir's published one
-    val keyFor: Map[String, Seq[String]] =
-      tables.map(t => t -> keyColsByTable.getOrElse(t, keyCols)).toMap
     tables.foreach { t =>
       val published = readKeyCols(stateDirs(t))
       require(keyFor(t) == published,
-        s"state dir for '$t' is keyed by (${published.mkString(", ")}) but " +
+        s"state dir${of(t)} is keyed by (${published.mkString(", ")}) but " +
           s"the repair declares (${keyFor(t).mkString(", ")})")
     }
-    val dsts = tables.map(t => t -> readLatestState(s, stateDirs(t))).toMap
-    // ONE topology envelope: every table serves the same column SET
-    // (which of them are key differs per table); fixed order from the
-    // first table for every union/struct below
+    val dsts = tables.map(t =>
+      t -> readLatestState(s, stateDirs(t), buckets = restrictBuckets)).toMap
+    // ONE envelope: every table serves the same column set (which of
+    // them are key differs per table), in the first table's order
     val allCols = dsts(tables.head).columns.toSeq.filterNot(_ == "op")
     tables.foreach { t =>
       val cols = dsts(t).columns.toSet - "op"
       require(cols == allCols.toSet,
-        s"state dir for '$t' serves (${cols.toSeq.sorted.mkString(", ")}) " +
+        s"state dir${of(t)} serves (${cols.toSeq.sorted.mkString(", ")}) " +
           s"but the topology envelope is (${allCols.sorted.mkString(", ")}) " +
           "— repair the schema drift first")
-      val src = srcByTable(t)
+      val src = truthByTable(t)
       val missing = allCols.filterNot(src.columns.contains)
       require(missing.isEmpty,
-        s"repair source for '$t' lacks served column(s): " +
-          s"${missing.mkString(", ")} — a repair cannot invent values")
+        s"repair source${of(t)} lacks served column(s): " +
+          s"${missing.mkString(", ")} — a repair cannot invent values; " +
+          "re-snapshot instead")
       val gained = src.columns.toSeq.filterNot(allCols.contains)
       require(gained.isEmpty,
-        s"repair source for '$t' carries column(s) the destination never " +
-          s"saw: ${gained.mkString(", ")} — replicate the DDL first")
+        s"repair source${of(t)} carries column(s) the destination never " +
+          s"saw: ${gained.mkString(", ")} — a row-level repair cannot " +
+          "retrofit schema; replicate the DDL (or re-snapshot) first")
     }
-    // each row's key tuple encoded under ITS table's key definition
-    // (scan-local to_json projection — the fan-out pass's heterogeneous
-    // collapse's mechanic), so one join key spans per-table key shapes;
-    // null key fields encode distinctly, preserving null-safe matching
-    def keyed(df: DataFrame, t: String): DataFrame =
-      df.select(allCols.map(col): _*)
-        .withColumn("__tbl", lit(t))
-        .withColumn("__key", to_json(struct(keyFor(t).map(col): _*)))
-    val srcAll = tables.map(t => keyed(srcByTable(t), t))
-      .reduce(_.unionByName(_))
-    // per-table key uniqueness in ONE aggregate over the unioned source
-    srcAll.groupBy(col("__tbl"))
-      .agg(count(lit(1)).as("n"), count_distinct(col("__key")).as("nd"))
-      .collect().foreach(r => require(r.getLong(1) == r.getLong(2),
-        s"repair source for '${r.getString(0)}' holds ${r.getLong(1)} rows " +
-          s"over ${r.getLong(2)} distinct key tuples — one row per key"))
-    val dstAll = tables.map(t => keyed(dsts(t), t)).reduce(_.unionByName(_))
-    // topology seq ceiling: the union of every table's raw seq column in
-    // one 1-row aggregate, plus the SINGLE topology pending tail
-    val am = tables.map(t => readStateDir(s, stateDirs(t)).select(col("seq")))
-      .reduce(_.union(_)).agg(max(col("seq"))).collect()(0)
-    val appliedMax = if (am.isNullAt(0)) 0L else am.getLong(0)
-    val pendingMax = pendingRoot
+    // a one-table diff carries no `table` column, so its join and write
+    // are exactly the one-table pass's
+    def side(df: DataFrame, t: String): DataFrame = {
+      val d = restrict.foldLeft(df.select(allCols.map(col): _*))(_.filter(_))
+      if (one) d else d.withColumn("table", lit(t))
+    }
+    val sv = tables.map(t => side(truthByTable(t), t)).reduce(_.unionByName(_))
+    val dv = tables.map(t => side(dsts(t), t)).reduce(_.unionByName(_))
+    val homogeneous = keyFor.values.toSet.size == 1
+    val keyCols = keyFor.values.head
+    val keyOf =
+      if (homogeneous) struct(keyCols.map(col): _*)
+      else tableKeyStruct(keyFor, dv.schema)
+    // the diff's full-outer join REQUIRES unique source keys (a duplicate
+    // would fan out its key's row and let max_by pick an arbitrary
+    // winner) — asserted per table in ONE aggregate over the (restricted)
+    // source, so a chunked repair's guard scans only the dirty chunks
+    val byTable = if (one) Nil else Seq(col("table"))
+    sv.groupBy(byTable: _*)
+      .agg(count(lit(1)), count_distinct(keyOf)).collect().foreach { r =>
+        val t = if (one) OneTable.Table else r.getString(0)
+        val (n, nd) = (r.getLong(byTable.size), r.getLong(byTable.size + 1))
+        require(n == nd,
+          s"repair source${of(t)} holds $n rows over $nd distinct key " +
+            "values — the source of truth must be one row per key")
+      }
+    val appliedMax = {
+      val m = tables.map(t => readStateDir(s, stateDirs(t)).select(col("seq")))
+        .reduce(_.union(_)).agg(max(col("seq"))).collect()(0)
+      if (m.isNullAt(0)) 0L else m.getLong(0)
+    }
+    val pendingMax = pendingRoot.orElse(oneState)
       .flatMap(latestPendingBelow(_, Long.MaxValue))
       .flatMap { p =>
         val r = s.read.parquet(p).agg(max(col("seq"))).collect()(0)
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }.getOrElse(0L)
     val repairSeq = math.max(appliedMax, pendingMax) + 1L
-    val joined = srcAll.withColumn("__s", lit(true)).as("s")
-      .join(dstAll.withColumn("__d", lit(true)).as("d"),
-        col("s.__tbl") === col("d.__tbl") && col("s.__key") === col("d.__key"),
-        "full_outer")
-    // key columns are equal on every matched row (the join key encodes
-    // them), so a full-envelope struct compare detects exactly value
-    // drift — no per-table value-column split needed
-    val sStruct = struct(allCols.map(c => col(s"s.$c")): _*)
-    val dStruct = struct(allCols.map(c => col(s"d.$c")): _*)
-    // which tables treat column c as KEY (for the correction select: a
-    // tombstone must carry ITS table's key columns from the d side)
-    val keyTablesOf: Map[String, Seq[String]] =
-      allCols.map(c => c -> tables.filter(t => keyFor(t).contains(c))).toMap
-    val rowTbl = coalesce(col("s.__tbl"), col("d.__tbl"))
+    val on = byTable.map(_ => col("s.table") === col("d.table")) ++
+      (if (homogeneous) keyCols.map(k => col(s"s.$k") <=> col(s"d.$k"))
+       else Seq(col("s.__key") <=> col("d.__key")))
+    def keyed(df: DataFrame) =
+      if (homogeneous) df else df.withColumn("__key", keyOf)
+    val joined = keyed(sv).withColumn("__s", lit(true)).as("s")
+      .join(keyed(dv).withColumn("__d", lit(true)).as("d"),
+        on.reduce(_ && _), "full_outer")
+    // columns every table keys on are matched by the join; the rest are
+    // compared (a column keying only SOME tables is equal on matched rows)
+    val valueCols = allCols.filterNot(c => tables.forall(keyFor(_).contains(c)))
+    val sStruct = struct(valueCols.map(c => col(s"s.$c")): _*)
+    val dStruct = struct(valueCols.map(c => col(s"d.$c")): _*)
+    val rowTable = coalesce(col("s.table"), col("d.table"))
     val diff = joined.withColumn("op",
         when(col("d.__d").isNull, "I")
           .when(col("s.__s").isNull, "D")
           .when(!(sStruct <=> dStruct), "U"))
       .filter(col("op").isNotNull)
-      .select((Seq(col("op"), rowTbl.as("__tbl"), lit(repairSeq).as("seq")) ++
+      .select((Seq(col("op"), lit(repairSeq).as("seq")) ++
+        byTable.map(_ => rowTable.as("table")) ++
         allCols.map { c =>
-          val kt = keyTablesOf(c)
-          val isKeyHere =
-            if (kt.isEmpty) lit(false) else rowTbl.isin(kt: _*)
-          when(isKeyHere, coalesce(col(s"s.$c"), col(s"d.$c")))
-            .otherwise(when(col("op") =!= "D", col(s"s.$c"))).as(c)
+          // a tombstone carries ITS table's key columns from the d side
+          val owners = tables.filter(keyFor(_).contains(c))
+          val key = coalesce(col(s"s.$c"), col(s"d.$c"))
+          val value = when(col("op") =!= "D", col(s"s.$c"))
+          (if (owners.size == tables.size) key
+           else if (owners.isEmpty) value
+           else when(rowTable.isin(owners: _*), key).otherwise(value)).as(c)
         }): _*)
-      // pinned for the same reason as repairState: the diff derives from
-      // the very state dirs the corrections will mutate
+      // pinned BEFORE the epoch write — the diff may derive from these
+      // very state dirs (a truth built off appliedState is legal); the
+      // counts action materializes it, so the write never re-reads a
+      // state the repair itself is mutating
       .persist()
     try {
-      val counts = diff.groupBy(col("__tbl"), col("op")).count().collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      val touched = counts.keySet.map(_._1)
+      val counts = diff.groupBy(byTable :+ col("op"): _*).count().collect()
+        .map { r =>
+          val t = if (one) OneTable.Table else r.getString(0)
+          (t, r.getString(byTable.size)) -> r.getLong(byTable.size + 1)
+        }.toMap
+      val touched = tables.filter(t => counts.keys.exists(_._1 == t))
       if (touched.nonEmpty) {
-        // one staged partitioned write, then a metadata rename per table
-        // — underscore-hidden inside a state root so no reader ever sees
-        // it (state dirs and their staging share a filesystem in
-        // production, so the rename never degrades to a copy)
-        val stage = s"${stateDirs(tables.head)}/_repairing"
-        try {
-          diff.write.mode("overwrite").partitionBy("__tbl").parquet(stage)
-          touched.foreach { t =>
-            val epoch = math.min(-1L,
-              StateFs.epochIds(stateDirs(t)).minOption.getOrElse(0L) - 1L)
-            val src = s"$stage/__tbl=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                .escapePathName(t)
-            StateFs.moveDir(src, s"${stateDirs(t)}/epoch=$epoch")
-          }
-        } finally StateFs.deleteRecursive(stage)
+        val out = (if (one) envelope(diff)
+          else diff.select((envelopeCols ++ extraCols(diff) :+ "table")
+            .map(col): _*))
+          .withColumn(BucketCol, tableBucket(keyFor))
+        // underscore-hidden inside a state root, so no reader sees it
+        writeEpochs(out, topology, touched,
+          s"${stateDirs(tables.head)}/_repairing",
+          t => math.min(-1L,
+            StateFs.epochIds(stateDirs(t)).minOption.getOrElse(0L) - 1L))
       }
-      tables.map(t => t -> ((counts.getOrElse((t, "I"), 0L),
-        counts.getOrElse((t, "U"), 0L), counts.getOrElse((t, "D"), 0L)))).toMap
+      tables.map(t => t -> graft.Replication.RepairReport(
+        counts.getOrElse((t, "I"), 0L), counts.getOrElse((t, "U"), 0L),
+        counts.getOrElse((t, "D"), 0L))).toMap
     } finally { diff.unpersist(); () }
   }
 
@@ -2278,16 +2208,16 @@ object StreamingOps {
   // AggregatingMergeTree-fed-by-MV topology), except the source is a
   // FULL CDC stream (updates + deletes), so the MV needs true
   // incremental view maintenance, not insert-only accumulation (ST10).
-  // Two regimes, the two that exist in the IVM literature:
-  //   - runMvSumPass: RETRACTABLE aggregates (count/sum) maintained by
+  // One pass, runMvPass, covers the two regimes of the IVM literature:
+  //   - SumView: RETRACTABLE aggregates (count/sum) maintained by
   //     per-batch deltas — each touched key contributes f(new image) −
   //     f(old image); work is O(batch) + one bounded old-image lookup,
   //     NEVER a recompute;
-  //   - runMvMinMaxPass: NON-RETRACTABLE aggregates (min/max) — deleting
-  //     a group's current min cannot be undone from the aggregate alone,
-  //     so dirty GROUPS (the groups the batch's old or new images touch)
-  //     are recomputed from a group-partitioned snapshot while untouched
-  //     groups carry forward; work is O(batch) + O(Σ dirty-group size).
+  //   - RecomputeView: NON-RETRACTABLE aggregates (min/max, top-K) —
+  //     deleting a group's current min cannot be undone from the
+  //     aggregate alone, so dirty GROUPS are recomputed from a
+  //     group-partitioned snapshot while untouched groups carry forward;
+  //     work is O(batch) + O(Σ dirty-group size).
   // ───────────────────────────────────────────────────────────────────
 
   /** STRICT BEFORE-IMAGE apply gate (binlog_row_image=FULL carries each
@@ -2592,39 +2522,6 @@ object StreamingOps {
   private[graft] def readMv(s: SparkSession, mv: String): DataFrame =
     readMvEpoch(s, mv, StateFs.epochIds(mv).max)
 
-  /** RETRACTABLE-aggregate MV maintenance (ST30): per group
-    * (`groupCol`, e.g. `status`), `n_rows = count(*)` and
-    * `total = sum(price)` over the LATEST state of the replicated table,
-    * maintained per micro-batch from deltas only.
-    *
-    * Per batch: fold the batch to per-key winners (`bw`, O(batch)), look
-    * up those keys' old images ([[mvOldImages]]), write the state epoch
-    * delta (the destination table advances exactly as [[runCdcPass]]'s
-    * default path), then update the MV:
-    *
-    *   delta(group) = Σ_alive(new images) − Σ_alive(old images)
-    *   mv_K = merge(mv_{K-1}, delta), groups reaching n_rows = 0 dropped
-    *
-    * The per-key deltas telescope across batches — Σ_batches (f(new) −
-    * f(old)) = f(final) − f(initial) in exact DECIMAL(18,2) arithmetic —
-    * so the served MV equals the group-by over the final latest state
-    * bit-for-bit, which is what the oracle checks. An update that moves
-    * a key between groups retracts from the old group and adds to the
-    * new one in the same batch; a delete retracts only.
-    *
-    * Crash safety: the MV is epoch-keyed like every sink here — epoch K
-    * writes `mv/epoch=K` reading only strictly-older snapshots, so an
-    * at-least-once replay recomputes the identical snapshot; snapshots
-    * two or more epochs old are pruned (a replay can only be of the
-    * newest epoch). The MV itself is O(groups) — metadata-sized next to
-    * the table — while per-batch work is O(batch) + the bounded
-    * old-image lookup; nothing scans the full table, ever.
-    *
-    * Cardinality regime: each epoch rewrites the MV snapshot — O(groups)
-    * — which is the right trade for DIMENSION-sized group keys (status,
-    * nation, month: the ClickHouse MV norm). A key-cardinality "view"
-    * (one row per customer) is just the table itself — serve it from
-    * the state dir's collapse instead; an MV adds nothing there. */
   /** Migrate the MV dir itself across a RENAME COLUMN DDL that hits its
     * group column: the published `_schema` renames in place and the
     * newest snapshot physically rewrites under the new name. EAGER where
@@ -2778,263 +2675,64 @@ object StreamingOps {
     }
 
   /** CREATE MATERIALIZED VIEW … POPULATE over an EXISTING replica — the
-    * attach-an-MV-later operator flow (the seeded path, [[mvSeedSum]],
-    * covers a FRESH destination; this covers a table that has already
-    * lived through syncs and DDL). One group-by over the served state —
-    * DDL record applied, so pre-DDL rows count their DEFAULT — written
-    * as the view snapshot AT the state's newest epoch id: the next
-    * maintenance pass (same checkpoint as the syncs) gets a strictly
-    * larger batch id, finds this snapshot as its prior, and continues
-    * incrementally with no special case. O(table scan) exactly once, at
-    * attach — the POPULATE cost every engine pays. */
-  private[graft] def mvAttachSum(s: SparkSession, state: String, mv: String,
-      groupCol: String = "status", measureCol: String = "price",
-      enrich: DataFrame => DataFrame = identity): Unit = {
+    * attach-an-MV-later operator flow ([[mvSeed]] covers a FRESH
+    * destination; this covers a table that has already lived through
+    * syncs and DDL). The view populates from the served state — DDL
+    * record applied, so pre-DDL rows count their DEFAULT — AT the
+    * state's newest epoch id: the next [[runMvPass]] (same checkpoint as
+    * the syncs) gets a strictly larger batch id, finds this snapshot as
+    * its prior, and continues incrementally with no special case.
+    * O(table scan) exactly once, at attach — the POPULATE cost every
+    * engine pays. */
+  private[graft] def mvAttach(s: SparkSession, state: String, mv: String,
+      view: MvView): Unit = {
     val at = StateFs.epochIds(state).maxOption.getOrElse(
       throw new IllegalStateException(
         s"$state holds no epochs — attach an MV after the first sync " +
-          "(or seed a fresh pair with mvSeedSum)"))
-    val mvDf = enrich(readLatestState(s, state))
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(dec2(col(measureCol))).cast(D2).as("total"))
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=$at")
+          "(or seed a fresh pair with mvSeed)"))
+    mvPopulate(s, readLatestState(s, state, keepSeq = true), mv, view, at)
   }
 
-  /** [[mvAttachSum]] for the DIRTY-GROUP family: attach a
-    * recompute-regime MV (min/max, top-K — anything
-    * non-delta-maintainable) to an EXISTING replica. Seeds the
-    * group-partitioned snapshot from the served state (rows carry their
-    * winning `seq`, the DDL record applied), the pointer map (every
-    * group → the state's newest epoch id), and the view via one
-    * `recompute` over the full snapshot — the one O(table) pass the
-    * regime ever pays, at attach (the POPULATE cost). A later
-    * [[runMvRecomputePass]] on the sync's checkpoint gets a strictly
-    * larger batch id, resolves this snapshot through the pointer map,
-    * and continues dirty-group-bounded with no special case. */
-  private[graft] def mvAttachRecompute(s: SparkSession, state: String,
-      snap: String, mv: String, groupCol: String,
-      recompute: DataFrame => DataFrame): Unit = {
-    val at = StateFs.epochIds(state).maxOption.getOrElse(
-      throw new IllegalStateException(
-        s"$state holds no epochs — attach an MV after the first sync " +
-          "(or seed a fresh pair with mvSeedRecompute)"))
-    val base = readLatestState(s, state, keepSeq = true)
-    ensureStateSchema(snap, base.schema)
-    base.write.mode("overwrite").partitionBy(groupCol)
-      .parquet(s"$snap/epoch=$at")
-    val pinned = s.read.schema(base.schema).parquet(s"$snap/epoch=$at")
-    val groups = pinned.select(col(groupCol)).filter(col(groupCol).isNotNull)
-      .distinct().collect().map(_.getString(0))
-    StateFs.writeAtomic(s"$snap/_ptr/epoch=$at",
-      groups.map(g => s"$g\t$at").mkString("\n"))
-    val mvDf = recompute(pinned)
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=$at")
-  }
-
-  /** [[mvAttachRecompute]] specialized to the min/max view shape
-    * ([[runMvMinMaxPass]]'s) — the attach companion of ST31. */
-  private[graft] def mvAttachMinMax(s: SparkSession, state: String,
-      snap: String, mv: String, groupCol: String = "status"): Unit =
-    mvAttachRecompute(s, state, snap, mv, groupCol,
-      rows => rows.groupBy(col(groupCol))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("price")).as("mn"), max(col("price")).as("mx")))
-
-  private[graft] def runMvSumPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      enrich: DataFrame => DataFrame = identity,
-      measureCol: String = "price",
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty): (Long, Long) = {
-    val r = runMvSumPassSource(s, FileCdcSource(schema, in), ckpt, state, mv,
-      keyCols, groupCol, enrich, measureCol = measureCol,
-      renameCols = renameCols, defaultCols = defaultCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvSumPass]] over an arbitrary [[CdcSource]] transport — the
-    * MV maintains identically from files, a MemoryStream, or a real
-    * Kafka+Debezium feed (spec-proved over the memory transport). */
-  /** `measureCol` names the summed column of the ENRICHED image frame
-    * (default the envelope's `price`). `renameCols`/`defaultCols`
-    * declare the same DDL record the CDC passes take
-    * ([[applyRenameDdl]]/[[applyDefaultDdl]]): the STATE side stays
-    * lazy (pre-rename epochs serve via history coalesce, pre-DDL rows
-    * serve the default at read time — the old-image lookup reads
-    * through [[readStateDir]], so retraction deltas subtract exactly
-    * what each row SERVED), while the MV side migrates eagerly when a
-    * rename hits its group column ([[migrateMvRename]] — the view is
-    * O(groups), one tiny rewrite). */
-  private[graft] def runMvSumPassSource(s: SparkSession, source: CdcSource,
-      ckpt: String, state: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      enrich: DataFrame => DataFrame = identity,
-      txnCol: Option[String] = None,
-      trackSeq: Boolean = false,
-      measureCol: String = "price",
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
-    val schema = source.schema
-    // a rename that hits the VIEW's group column migrates the view
-    // BEFORE its schema is (re)published below — the snapshot rewrite
-    // plus in-place schema rename; on any other rename this is a no-op
-    migrateMvRename(s, mv, renameCols)
-    val mvSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(groupCol, StringType),
-      org.apache.spark.sql.types.StructField("n_rows",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("total", D2)))
-    ensureStateSchema(mv, mvSchema)
-    // pin the state dir's schema up front: the per-batch old-image read
-    // must not pay a mergeSchema footer sweep per trigger. The txn id
-    // is bookkeeping, not payload — it never reaches state (the gate
-    // drops it), so it must not enter the published schema either.
-    val envSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(f => txnCol.contains(f.name)))
-    // the MV pass owns its state dir exactly like runCdcPass does —
-    // publish the key so compaction/repair/consistency tooling collapses
-    // on the declared (possibly composite) key, not the historical
-    // single-key fallback
-    ensureKeyCols(state, keyCols)
-    val envStateSchema = collapse(envelope(s.createDataFrame(
-      new java.util.ArrayList[Row](), envSchema)), keyCols).schema
-    // DDL metadata settles in runCdcPass's order: renames first
-    // (carry published history to the new name), then the schema union,
-    // then defaults (the column must ride the incoming envelope)
-    applyRenameDdl(state, renameCols, envStateSchema)
-    ensureStateSchema(state, envStateSchema)
-    applyDefaultDdl(state, defaultCols, envStateSchema)
-    // position bookkeeping, same contract as runCdcPass's trackSeq: the
-    // applied horizon advances through applied events AND resolved commit
-    // markers; the seen horizon reads the raw batch so txn-held events
-    // surface as lag, not as silence
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
-    val (rows, epochs) = runSourcePass(s, source, ckpt) {
-      (batch, epochId) =>
-        // pin the batch: the old-image semi-join's broadcast subtree is
-        // OUTSIDE the images cache and would re-scan the file source
-        // (inflating numInputRows — the runCdcPass multi-action rule)
-        val bdf = batch.toDF().persist()
-        // TRANSACTION-BOUNDARY gate, when declared: the MV must never
-        // observe half a transaction — the SAME ready/carry split the
-        // CDC passes use ([[txnGate]], pending tail under the state
-        // root) holds uncommitted events back from the images, so a
-        // straddling txn's rows enter the view only in the epoch its
-        // commit marker arrives, atomically with the table itself
-        var txnFull = Option.empty[DataFrame]
-        val ready = txnCol match {
-          case None => bdf
-          case Some(tc) =>
-            val (r, f) = txnGate(s, bdf, tc, state, epochId)
-            txnFull = Some(f)
-            r.drop(tc)
-        }
-        if (trackSeq) {
-          maxSeq = foldMaxSeq(ready, maxSeq)
-          txnCol.foreach(_ =>
-            maxSeq = foldMaxSeq(bdf.filter(col("op") === "C"), maxSeq))
-          srcMaxSeq = foldMaxSeq(bdf, srcMaxSeq)
-        }
-        val images = mvImages(s, state, epochId, ready, keyCols)
-          .persist()
-        try {
-          // the destination table's own delta — same fold as runCdcPass
-          bucketed(mvView(images, "bwin", keyCols), keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          // delta as ONE signed aggregate: +f(new image) − f(old image)
-          // per touched key, exploded from the images frame — no second
-          // shuffle, no two-sided join. `enrich` is the JOIN-MV hook
-          // (ST32): a pure per-image lookup against STATIC dimensions
-          // (broadcast), applied to both delta sides at once —
-          // Δ(R ⋈ S) = ΔR ⋈ S when S is fixed, so only touched images
-          // ever join, never the table. groupCol names a column of the
-          // ENRICHED frame. (A null old struct — a first-seen key —
-          // explodes to null fields and drops with the tombstones.)
-          val signed = images.select(explode(array(
-              struct(lit(1L).as("sign"), col("new").as("img")),
-              struct(lit(-1L).as("sign"), col("old").as("img")))).as("se"))
-            .select(col("se.sign").as("sign"), col("se.img.*"))
-            .filter(col("op").isNotNull && col("op") =!= "D")
-          val delta = enrich(signed)
-            .groupBy(col(groupCol))
-            .agg(sum(col("sign")).as("dn"),
-              sum(col("sign") * dec2(col(measureCol))).cast(D2).as("dt"))
-          val mvPrior = latestMvBelow(s, mv, epochId)
-            .getOrElse(s.createDataFrame(
-              new java.util.ArrayList[Row](), mvSchema))
-          val mvNew = mvPrior.join(delta, Seq(groupCol), "full_outer")
-            .select(col(groupCol),
-              (coalesce(col("n_rows"), lit(0L)) +
-                coalesce(col("dn"), lit(0L))).as("n_rows"),
-              (coalesce(col("total"), lit(0).cast(D2)) +
-                coalesce(col("dt"), lit(0).cast(D2))).cast(D2).as("total"))
-            .filter(col("n_rows") > 0)
-          mvNew.write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-          StateFs.epochIds(mv).filter(_ < epochId - 1)
-            .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
-        } finally {
-          images.unpersist(); txnFull.foreach(_.unpersist())
-          bdf.unpersist(); ()
-        }
-    }
-    (rows, epochs, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
-  }
-
-  /** Seed a destination state dir + SUM MV from an existing SNAPSHOT
-    * table (the `--full`-then-`--increment` operator flow, MV included):
-    * the snapshot lands as the BASELINE epoch (`epoch=-1`, `op='I'`,
+  /** Seed a destination state dir + MV from an existing SNAPSHOT table
+    * (the `--full`-then-`--increment` operator flow, MV included): the
+    * snapshot lands as the BASELINE epoch (`epoch=-1`, `op='I'`,
     * `seq=0` — the compaction convention: negative epochs are folded
-    * baselines, exempt from the purge gate), and the MV's first
-    * snapshot is one group-by over it. A subsequent [[runMvSumPass]]
-    * continues incrementally with NO special case: its old-image lookup
-    * reads `epoch < 0` like any prior delta, and `latestMvBelow(0)`
-    * finds the seeded view. `snapshot` must carry the key plus the
-    * envelope payload columns (`price`, `status`, `ts`, extras) — one
-    * row per key, asserted. */
-  private[graft] def mvSeedSum(s: SparkSession, snapshot: DataFrame,
-      state: String, mv: String, keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      enrich: DataFrame => DataFrame = identity): Unit = {
-    val base = mvSeedState(s, snapshot, state, keyCols)
-    val mvDf = enrich(base)
-      .groupBy(col(groupCol))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(dec2(col("price"))).cast(D2).as("total"))
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=-1")
-  }
+    * baselines, exempt from the purge gate), and the view populates from
+    * it at that epoch. A subsequent [[runMvPass]] continues with NO
+    * special case: its old-image lookup reads `epoch < 0` like any prior
+    * delta, and `latestMvBelow(0)` finds the seeded view. `snapshot`
+    * must carry the key plus the envelope payload columns (`price`,
+    * `status`, `ts`, extras) — one row per key, asserted. */
+  private[graft] def mvSeed(s: SparkSession, snapshot: DataFrame,
+      state: String, mv: String, view: MvView,
+      keyCols: Seq[String] = Seq("okey")): Unit =
+    mvPopulate(s, mvSeedState(s, snapshot, state, keyCols), mv, view, -1L)
 
-  /** [[mvSeedSum]] for the dirty-group family ([[runMvRecomputePass]]):
-    * seeds the state baseline, the group-partitioned snapshot (every
-    * group's pointer at epoch −1), and the view itself via `recompute`
-    * over the full seeded snapshot — the ONE full-table recompute the
-    * regime ever pays. */
-  private[graft] def mvSeedRecompute(s: SparkSession, snapshot: DataFrame,
-      state: String, snap: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"), groupCol: String = "status",
-      recompute: DataFrame => DataFrame): Unit = {
-    val base = mvSeedState(s, snapshot, state, keyCols)
-    ensureStateSchema(snap, base.schema)
-    base.write.mode("overwrite").partitionBy(groupCol)
-      .parquet(s"$snap/epoch=-1")
-    val groups = s.read.schema(base.schema).parquet(s"$snap/epoch=-1")
-      .select(col(groupCol)).filter(col(groupCol).isNotNull)
-      .distinct().collect().map(_.getString(0))
-    StateFs.writeAtomic(s"$snap/_ptr/epoch=-1",
-      groups.map(g => s"$g\t-1").mkString("\n"))
-    val mvDf = recompute(
-      s.read.schema(base.schema).parquet(s"$snap/epoch=-1"))
-    ensureStateSchema(mv, mvDf.schema)
-    mvDf.write.mode("overwrite").parquet(s"$mv/epoch=-1")
+  /** Populate `view` from `base` (collapsed, alive rows carrying their
+    * winning `seq`) as the MV snapshot at epoch `at`. A [[RecomputeView]]
+    * also writes its group-partitioned snapshot and pointer map (every
+    * group → `at`) and recomputes the view over the full snapshot — the
+    * one O(table) recompute the regime ever pays. */
+  private def mvPopulate(s: SparkSession, base: DataFrame, mv: String,
+      view: MvView, at: Long): Unit = {
+    val rows = view match {
+      case SumView(g, measure, enrich) =>
+        enrich(base).groupBy(col(g))
+          .agg(count(lit(1)).as("n_rows"),
+            sum(dec2(col(measure))).cast(D2).as("total"))
+      case RecomputeView(g, snap, _, recompute) =>
+        ensureStateSchema(snap, base.schema)
+        base.write.mode("overwrite").partitionBy(g)
+          .parquet(s"$snap/epoch=$at")
+        val pinned = s.read.schema(base.schema).parquet(s"$snap/epoch=$at")
+        val groups = pinned.select(col(g)).filter(col(g).isNotNull)
+          .distinct().collect().map(_.getString(0))
+        StateFs.writeAtomic(s"$snap/_ptr/epoch=$at",
+          groups.map(v => s"$v\t$at").mkString("\n"))
+        recompute(pinned)
+    }
+    ensureStateSchema(mv, rows.schema)
+    rows.write.mode("overwrite").parquet(s"$mv/epoch=$at")
   }
 
   /** Shared seeding step: snapshot → baseline state epoch, returned in
@@ -3056,7 +2754,226 @@ object StreamingOps {
     s.read.schema(envl.schema).parquet(s"$state/epoch=-1")
   }
 
-  /** Pointer map for the group-partitioned snapshot ([[runMvMinMaxPass]]):
+  /** THE MV maintenance pass (ST30/ST31): play the change stream opened
+    * by `source`, advance the table in `spec.state` exactly as a
+    * one-table [[runCdcPass]] fold would, and keep `spec.view` in step
+    * per micro-batch from deltas only — nothing scans the full table,
+    * ever.
+    *
+    * Per batch, in order:
+    *  1. the batch is pinned (the old-image semi-join's broadcast subtree
+    *     would otherwise re-scan the source and inflate numInputRows);
+    *  2. the TXN GATE ([[txnGate]], pending tail under the state dir):
+    *     the view never observes half a transaction — a straddling
+    *     transaction's rows enter it in the epoch its commit marker
+    *     arrives, atomically with the table itself;
+    *  3. under `trackSeq`, ONE [[horizons]] aggregate over the raw batch:
+    *     the SEEN horizon and the RESOLVED one (every event without a
+    *     txn gate; the commit markers with one — a transaction's events
+    *     precede its marker, so the newest marker bounds every event the
+    *     gate releases). The contract is [[PassResult]]'s, shared with a
+    *     tracked one-table [[runCdcPass]], and so are the `_lag` marks
+    *     the time horizons persist as ([[writeLagMarks]]);
+    *  4. [[mvImages]]: per touched key, the batch winner, the old image
+    *     and the new one, in one shuffle;
+    *  5. the bucketed state-epoch delta (the batch winners);
+    *  6. the view step, by regime:
+    *     - [[SumView]] — RETRACTABLE aggregates: delta(group) =
+    *       Σ_alive(new images) − Σ_alive(old images), merged onto the
+    *       prior snapshot, groups reaching n_rows = 0 dropped. The
+    *       per-key deltas telescope across batches in exact
+    *       DECIMAL(18,2) arithmetic, so the served view equals the
+    *       group-by over the final state bit-for-bit. An update that
+    *       moves a key between groups retracts from one and adds to the
+    *       other in the same batch;
+    *     - [[RecomputeView]] — NON-RETRACTABLE aggregates (deleting a
+    *       group's current min cannot be undone from the aggregate): the
+    *       DIRTY groups (those the batch's old or new images touch)
+    *       rewrite their partitions of the group-partitioned snapshot —
+    *       prior rows resolved through the pointer map ([[readSnapPtr]])
+    *       minus the touched keys, plus the alive new images, in one
+    *       partitionBy write — and recompute from them, while untouched
+    *       groups' partitions are never read and their view rows carry
+    *       forward. Per-batch cost is O(batch) + O(Σ dirty-group size).
+    *       At 100 TB the snapshot is the table itself in
+    *       group-partitioned layout — why ClickHouse puts the MV's GROUP
+    *       BY key first in the target table's ORDER BY;
+    *  7. the view snapshot `mv/epoch=K`, then the MV prune.
+    *
+    * Crash safety is the epoch-keyed sink discipline: epoch K writes its
+    * state delta, snapshot partitions, pointer map and view under
+    * `epoch=K`, reading only strictly-older artifacts, so an
+    * at-least-once replay recomputes identical output. View snapshots
+    * two or more epochs old are pruned, and snapshot epochs no longer
+    * referenced by the newest two pointer maps (a replay can only be of
+    * the newest epoch).
+    *
+    * DDL settles before the stream starts, in [[runCdcPass]]'s order: a
+    * rename hitting the view's group column migrates the O(groups) view
+    * eagerly ([[migrateMvRename]]) and a recompute view's snapshot by
+    * directory moves ([[migrateSnapRename]]); then the state side renames
+    * lazily, drops, widens and records defaults. The old-image lookup
+    * reads through the DDL record, so retraction deltas subtract exactly
+    * what each row SERVED, and pre-DDL snapshot partitions pass the same
+    * drop and default gates ([[applyDdlGates]]).
+    *
+    * Cardinality regime: each epoch rewrites the view snapshot —
+    * O(groups), the right trade for DIMENSION-sized group keys (status,
+    * nation, month). A key-cardinality "view" is the table itself —
+    * serve it from the state dir's collapse instead. */
+  private[graft] def runMvPass(s: SparkSession, source: CdcSource,
+      ckpt: String, spec: MvSpec): PassResult = {
+    import spec._
+    val recomputed = view match {
+      case rv: RecomputeView => Some(rv)
+      case _: SumView => None
+    }
+    migrateMvRename(s, mv, ddl.renames)
+    recomputed.foreach(rv => migrateSnapRename(rv.snap, ddl.renames,
+      rv.groupCol))
+    ensureStateSchema(mv, view.mvSchema)
+    // the state (and snapshot) schema: the collapse's output over the
+    // envelope minus the txn column, which the gate consumes — published
+    // up front so per-batch reads stay pinned
+    val envSchema = org.apache.spark.sql.types.StructType(
+      source.schema.fields.filterNot(f => txnCol.contains(f.name)))
+    val stateSchema = collapse(envelope(s.createDataFrame(
+      new java.util.ArrayList[Row](), envSchema)), keyCols).schema
+    recomputed.foreach(rv => ensureStateSchema(rv.snap, stateSchema))
+    ensureKeyCols(state, keyCols)
+    applyRenameDdl(state, ddl.renames, stateSchema)
+    applyDropDdl(state, ddl.drops, stateSchema,
+      readds = ddl.defaults.map { case (c, d) => c -> d.atSeq })
+    ensureStateSchema(state, stateSchema)
+    applyDefaultDdl(state, ddl.defaults, stateSchema)
+    var seen = NoHorizon
+    var resolved = NoHorizon
+    val (rows, epochs) = runSourcePass(s, source, ckpt) { (batch, epochId) =>
+      val bdf = batch.toDF().persist()
+      val pins = scala.collection.mutable.ListBuffer[DataFrame](bdf)
+      try {
+        val ready = txnCol.fold(bdf) { tc =>
+          val (r, full) = txnGate(s, bdf, tc, state, epochId)
+          pins += full
+          r
+        }
+        if (trackSeq) {
+          val hs = horizons(bdf,
+            Seq(lit(true), txnCol.fold(lit(true))(_ => col("op") === "C")))
+          seen = seen.max(hs(0))
+          resolved = resolved.max(hs(1))
+        }
+        val images = mvImages(s, state, epochId, ready, keyCols).persist()
+        pins += images
+        bucketed(mvView(images, "bwin", keyCols), keyCols)
+          .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
+        val prior = latestMvBelow(s, mv, epochId)
+        val next = view match {
+          case v: SumView => sumViewStep(v, images, prior.getOrElse(
+            s.createDataFrame(new java.util.ArrayList[Row](), v.mvSchema)))
+          case v: RecomputeView => recomputeViewStep(s, v, images, state,
+            keyCols, stateSchema, epochId, prior, pins)
+        }
+        next.write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
+        StateFs.epochIds(mv).filter(_ < epochId - 1)
+          .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
+      } finally pins.foreach(_.unpersist())
+    }
+    // the time horizons persist beside the state, as a one-table sync's
+    if (trackSeq) writeLagMarks(state, resolved.ts, seen.ts)
+    PassResult(rows,
+      if (epochs == 0) Map.empty
+      else Map(OneTable.Table -> Applied(rows, epochs, resolved.seq)),
+      resolved.seq, seen.seq, pendingCount(s, state, txnCol))
+  }
+
+  /** The [[SumView]] step: the delta as ONE signed aggregate, +f(new
+    * image) − f(old image) per touched key, exploded from the images
+    * frame — no second shuffle, no two-sided join — merged onto the
+    * prior view. `enrich` is the JOIN-MV hook (ST32): a pure per-image
+    * lookup against STATIC dimensions, applied to both delta sides at
+    * once — Δ(R ⋈ S) = ΔR ⋈ S when S is fixed, so only touched images
+    * ever join. (A null old struct — a first-seen key — explodes to null
+    * fields and drops with the tombstones.) */
+  private def sumViewStep(v: SumView, images: DataFrame,
+      prior: DataFrame): DataFrame = {
+    val signed = images.select(explode(array(
+        struct(lit(1L).as("sign"), col("new").as("img")),
+        struct(lit(-1L).as("sign"), col("old").as("img")))).as("se"))
+      .select(col("se.sign").as("sign"), col("se.img.*"))
+      .filter(col("op").isNotNull && col("op") =!= "D")
+    val delta = v.enrich(signed)
+      .groupBy(col(v.groupCol))
+      .agg(sum(col("sign")).as("dn"),
+        sum(col("sign") * dec2(col(v.measureCol))).cast(D2).as("dt"))
+    prior.join(delta, Seq(v.groupCol), "full_outer")
+      .select(col(v.groupCol),
+        (coalesce(col("n_rows"), lit(0L)) +
+          coalesce(col("dn"), lit(0L))).as("n_rows"),
+        (coalesce(col("total"), lit(0).cast(D2)) +
+          coalesce(col("dt"), lit(0).cast(D2))).cast(D2).as("total"))
+      .filter(col("n_rows") > 0)
+  }
+
+  /** The [[RecomputeView]] step: advance the group-partitioned snapshot
+    * by the batch's dirty groups and recompute only those; untouched
+    * groups' view rows carry forward from `prior`. A quiet batch (e.g.
+    * delete-only of already-absent keys) carries the whole view. The
+    * fresh partitions are pinned on `pins`: the snapshot write and the
+    * recompute both consume them. */
+  private def recomputeViewStep(s: SparkSession, v: RecomputeView,
+      images: DataFrame, state: String, keyCols: Seq[String],
+      snapSchema: org.apache.spark.sql.types.StructType, epochId: Long,
+      prior: Option[DataFrame],
+      pins: scala.collection.mutable.ListBuffer[DataFrame]): DataFrame = {
+    val RecomputeView(groupCol, snap, mvSchema, recompute) = v
+    // dirty groups: a handful per batch (≤ 2×|batch| values) — driver-
+    // side METADATA, from ONE pass over the persisted images frame
+    // (group values are non-null for alive rows — the group key is a
+    // dimension column; a null would not partition)
+    val dirty = images.select(explode(array(
+        col(s"old.$groupCol"), col(s"new.$groupCol"))).as("g"))
+      .filter(col("g").isNotNull)
+      .distinct().collect().map(_.getString(0)).toSet
+    if (dirty.isEmpty)
+      return prior.getOrElse(
+        s.createDataFrame(new java.util.ArrayList[Row](), mvSchema))
+    val ptr = readSnapPtr(snap, epochId)
+    val newA = mvView(images, "new", keyCols).filter(col("op") =!= "D")
+      .select(snapSchema.fieldNames.map(col).toSeq: _*)
+    // prior rows of the dirty groups: one pruned, schema-pinned read per
+    // distinct pointer epoch, through the state's drop and default gates
+    // (snapshot rows carry their winning `seq` for exactly this)
+    val priorRows = dirty.flatMap(g => ptr.get(g).map(g -> _))
+      .groupBy(_._2).map { case (e, gs) =>
+        applyDdlGates(state,
+          s.read.schema(snapSchema).parquet(s"$snap/epoch=$e")
+            .filter(col(groupCol).isin(gs.map(_._1).toSeq: _*)))
+      }.reduceOption(_.unionByName(_))
+      .map(_.join(broadcast(images.select(keyCols.map(col): _*)),
+        keyCols, "left_anti"))
+    val fresh = priorRows.fold(newA)(_.unionByName(newA)).persist()
+    pins += fresh
+    fresh.write.mode("overwrite").partitionBy(groupCol)
+      .parquet(s"$snap/epoch=$epochId")
+    val newPtr = ptr ++ dirty.map(_ -> epochId)
+    StateFs.writeAtomic(s"$snap/_ptr/epoch=$epochId",
+      newPtr.map { case (g, e) => s"$g\t$e" }.mkString("\n"))
+    // prune: keep epochs referenced by the newest two pointer maps (the
+    // replay window), drop the rest
+    val keep = (newPtr.values.toSet ++ ptr.values.toSet) + epochId
+    StateFs.epochIds(snap).filterNot(keep.contains)
+      .foreach(e => StateFs.deleteRecursive(s"$snap/epoch=$e"))
+    StateFs.epochFileIds(s"$snap/_ptr").filter(_ < epochId - 1)
+      .foreach(e => StateFs.deleteRecursive(s"$snap/_ptr/epoch=$e"))
+    // `fresh` IS exactly the dirty groups' new partitions
+    val recomputedRows = recompute(fresh)
+    prior.map(_.filter(!col(groupCol).isin(dirty.toSeq: _*)))
+      .getOrElse(recomputedRows.filter(lit(false)))
+      .unionByName(recomputedRows)
+  }
+
+  /** Pointer map for a [[RecomputeView]]'s group-partitioned snapshot:
     * `group → epoch whose partition holds the group's current rows`.
     * Epoch-keyed under `snap/_ptr/epoch=K` (tab-separated lines), read
     * strictly-below like every replay-safe artifact here. */
@@ -3067,267 +2984,6 @@ object StreamingOps {
         val Array(g, e) = l.split('\t'); g -> e.toLong
       }.toMap).getOrElse(Map.empty)
 
-  /** NON-RETRACTABLE-aggregate MV maintenance (ST31): per group,
-    * `n_rows`, `mn = min(price)`, `mx = max(price)` over the latest
-    * state. Deleting (or updating away) a group's current minimum cannot
-    * be repaired from the aggregate alone — the classic IVM
-    * non-retractability — so the maintenance unit is the DIRTY GROUP:
-    *
-    *   dirty = groups of the batch's old images ∪ new images (alive)
-    *
-    * The engine keeps a COLLAPSED SNAPSHOT of the table partitioned by
-    * the MV's group column, advanced per batch by rewriting ONLY dirty
-    * groups' partitions: prior rows of the dirty group (resolved through
-    * a tiny group→epoch pointer map, [[readSnapPtr]]) minus the touched
-    * keys, plus the batch's alive new images — one partitionBy write for
-    * all dirty groups. Untouched groups' partitions are never read,
-    * never rewritten: per-batch cost is O(batch) + O(Σ dirty-group
-    * size), the best possible for min/max under deletes without a
-    * per-value index. The MV row for a dirty group is recomputed from
-    * its fresh partition (its size bounds the cost); untouched rows
-    * carry forward unchanged.
-    *
-    * Crash safety is the same epoch-keyed discipline: snapshot
-    * partitions land under `snap/epoch=K/<group>=…`, the pointer map
-    * and MV under their own `epoch=K`, all reading strictly-older state,
-    * so an at-least-once replay reconverges; snapshot epochs no longer
-    * referenced by the newest or previous pointer map are pruned. At
-    * 100 TB the snapshot is the destination table itself in
-    * group-partitioned layout — the partition pruning this buys is
-    * exactly why ClickHouse puts the MV's GROUP BY key first in the
-    * target table's ORDER BY. */
-  private[graft] def runMvMinMaxPass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty): (Long, Long) = {
-    val r = runMvMinMaxPassSource(s, FileCdcSource(schema, in), ckpt,
-      state, snap, mv, keyCols, groupCol,
-      renameCols = renameCols, defaultCols = defaultCols,
-      dropCols = dropCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvMinMaxPass]] over an arbitrary [[CdcSource]], with the full
-    * position bookkeeping (applied/seen seq horizons) of the CDC passes
-    * — what the Replication facade consumes for [[SyncProgress]]. */
-  private[graft] def runMvMinMaxPassSource(s: SparkSession,
-      source: CdcSource,
-      ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String] = Seq("okey"),
-      groupCol: String = "status",
-      txnCol: Option[String] = None,
-      trackSeq: Boolean = false,
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
-    val mvSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(groupCol, StringType),
-      org.apache.spark.sql.types.StructField("n_rows",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("mn", DoubleType),
-      org.apache.spark.sql.types.StructField("mx", DoubleType)))
-    runMvRecomputePassSource(s, source, ckpt, state, snap, mv, keyCols,
-      groupCol, mvSchema,
-      snapRows => snapRows.groupBy(col(groupCol))
-        .agg(count(lit(1)).as("n_rows"),
-          min(col("price")).as("mn"), max(col("price")).as("mx")),
-      txnCol = txnCol, trackSeq = trackSeq,
-      renameCols = renameCols, defaultCols = defaultCols,
-      dropCols = dropCols)
-  }
-
-  /** The GENERAL dirty-group MV pass [[runMvMinMaxPass]] is an instance
-    * of: any per-group view that is NOT delta-maintainable (min/max,
-    * top-K, distinct lists, medians) advances by recomputing ONLY the
-    * batch's dirty groups from the group-partitioned snapshot;
-    * `recompute` maps the dirty groups' fresh snapshot rows (collapsed,
-    * alive, envelope-shaped, already partition-pruned) to their MV rows
-    * — one or MANY rows per group (top-K emits K) — and `mvSchema`
-    * declares the view's shape with `groupCol` first. Untouched groups'
-    * MV rows carry forward untouched; everything else (snapshot
-    * advance, pointer map, replay safety, pruning) is the machinery
-    * documented on [[runMvMinMaxPass]]. */
-  private[graft] def runMvRecomputePass(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      in: String, ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String], groupCol: String,
-      mvSchema: org.apache.spark.sql.types.StructType,
-      recompute: DataFrame => DataFrame,
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty): (Long, Long) = {
-    val r = runMvRecomputePassSource(s, FileCdcSource(schema, in), ckpt,
-      state, snap, mv, keyCols, groupCol, mvSchema, recompute,
-      renameCols = renameCols, defaultCols = defaultCols,
-      dropCols = dropCols)
-    (r._1, r._2)
-  }
-
-  /** [[runMvRecomputePass]] over an arbitrary [[CdcSource]]. */
-  private[graft] def runMvRecomputePassSource(s: SparkSession,
-      source: CdcSource,
-      ckpt: String, state: String, snap: String, mv: String,
-      keyCols: Seq[String], groupCol: String,
-      mvSchema: org.apache.spark.sql.types.StructType,
-      recompute: DataFrame => DataFrame,
-      txnCol: Option[String] = None,
-      trackSeq: Boolean = false,
-      renameCols: Map[String, String] = Map.empty,
-      defaultCols: Map[String, ColumnDefault] = Map.empty,
-      dropCols: Map[String, Long] = Map.empty)
-      : (Long, Long, Option[Long], Long, Option[Long]) = {
-    val schema = org.apache.spark.sql.types.StructType(
-      source.schema.fields.filterNot(f => txnCol.contains(f.name)))
-    // DDL settles in [[runMvSumPassSource]]'s order, extended to the
-    // dirty-group family's THIRD dir: a rename hitting the view's group
-    // column migrates the view (snapshot rewrite — O(groups)) AND the
-    // group-partitioned snapshot (directory moves only — the group
-    // column never enters the data files) BEFORE either schema
-    // (re)publishes below; then the state renames carry published
-    // history, the schema union widens, and defaults record last
-    migrateMvRename(s, mv, renameCols)
-    migrateSnapRename(snap, renameCols, groupCol)
-    ensureStateSchema(mv, mvSchema)
-    // the snapshot's schema: the collapse's output columns (derived from
-    // a driver-side probe so any keyCols order works) — published so
-    // partition reads stay pinned even for an all-rows-gone epoch
-    val snapSchema = collapse(envelope(s.createDataFrame(
-      new java.util.ArrayList[Row](), schema)), keyCols).schema
-    ensureStateSchema(snap, snapSchema)
-    ensureKeyCols(state, keyCols) // published key, as in runCdcPass
-    applyRenameDdl(state, renameCols, snapSchema)
-    applyDropDdl(state, dropCols, snapSchema,
-      readds = defaultCols.map { case (c, d) => c -> d.atSeq })
-    ensureStateSchema(state, snapSchema) // pinned old-image reads
-    applyDefaultDdl(state, defaultCols, snapSchema)
-    // read-time DDL gates for PRE-DDL snapshot partitions — the state
-    // read path's rules applied to the snapshot, in the same order.
-    // DROP gate first: a column dropped and RE-ADDED must not leak a
-    // row's stale pre-drop value out of an old snapshot partition —
-    // rows last written at or below the newest drop position serve
-    // NULL. DEFAULT fill second (so a re-add with DEFAULT backfills
-    // the gated rows): a row last written at or below the declaring
-    // position serves the declared default (its snapshot epoch
-    // predates the column, so the pinned read surfaces NULL); a
-    // post-DDL row — explicit NULL included — serves what it wrote.
-    // Snapshot rows carry their winning `seq` precisely for this
-    // replay. The record of truth is the STATE dir's `_drops` /
-    // `_defaults` logs, so DDL declared in an earlier pass keeps
-    // gating here without being re-passed.
-    def fillSnapDefaults(df: DataFrame): DataFrame =
-      applyDdlGates(state, df)
-    // position bookkeeping — see the sum pass's trackSeq note
-    var maxSeq = Option.empty[Long]
-    var srcMaxSeq = Option.empty[Long]
-    val (rows, epochs) = runSourcePass(s, source, ckpt) {
-      (batch, epochId) =>
-        // pin the batch (see the sum pass's note on the semi-join's
-        // broadcast subtree re-scanning the source)
-        val bdf = batch.toDF().persist()
-        // transaction gate, same contract as the sum pass's
-        var txnFull = Option.empty[DataFrame]
-        val ready = txnCol match {
-          case None => bdf
-          case Some(tc) =>
-            val (r, f) = txnGate(s, bdf, tc, state, epochId)
-            txnFull = Some(f)
-            r.drop(tc)
-        }
-        if (trackSeq) {
-          maxSeq = foldMaxSeq(ready, maxSeq)
-          txnCol.foreach(_ =>
-            maxSeq = foldMaxSeq(bdf.filter(col("op") === "C"), maxSeq))
-          srcMaxSeq = foldMaxSeq(bdf, srcMaxSeq)
-        }
-        val images = mvImages(s, state, epochId, ready, keyCols)
-          .persist()
-        try {
-          bucketed(mvView(images, "bwin", keyCols), keyCols)
-            .write.mode("overwrite").parquet(s"$state/epoch=$epochId")
-          val alive = (df: DataFrame) => df.filter(col("op") =!= "D")
-          val newA = alive(mvView(images, "new", keyCols))
-          // dirty groups: a handful per batch (≤ 2×|batch| values,
-          // group-cardinality-bounded) — driver-side METADATA, like the
-          // multi-table pass's table discovery; ONE pass over the
-          // persisted images frame covers both delta sides
-          // (group values are non-null for alive rows — the MV group
-          // key is a dimension column; a null would not partition)
-          val dirty = images.select(explode(array(
-              col(s"old.$groupCol"), col(s"new.$groupCol"))).as("g"))
-            .filter(col("g").isNotNull)
-            .distinct().collect().map(_.getString(0)).toSet
-          if (dirty.nonEmpty) {
-            val ptr = readSnapPtr(snap, epochId)
-            // prior rows of the dirty groups, resolved per pointer
-            // epoch — one pruned, schema-pinned read per distinct
-            // source epoch
-            val priorParts = dirty.flatMap(g => ptr.get(g).map(g -> _))
-              .groupBy(_._2).map { case (e, gs) =>
-                fillSnapDefaults(
-                  s.read.schema(snapSchema).parquet(s"$snap/epoch=$e")
-                    .filter(col(groupCol).isin(gs.map(_._1).toSeq: _*)))
-              }.toSeq
-            val priorRows = priorParts
-              .reduceOption(_.unionByName(_))
-              .map(_.join(broadcast(images.select(keyCols.map(col): _*)),
-                keyCols, "left_anti"))
-            // pinned: the snapshot write AND the MV recompute both
-            // consume it — without the cache the recompute would re-run
-            // the prior-partition read + anti-join (or re-read the files
-            // just written, paying a scan per batch for nothing)
-            val fresh = priorRows
-              .map(_.unionByName(newA.select(
-                snapSchema.fieldNames.map(col).toSeq: _*)))
-              .getOrElse(newA.select(
-                snapSchema.fieldNames.map(col).toSeq: _*))
-              .persist()
-            try {
-              fresh.write.mode("overwrite").partitionBy(groupCol)
-                .parquet(s"$snap/epoch=$epochId")
-              val newPtr = ptr ++ dirty.map(_ -> epochId)
-              StateFs.writeAtomic(s"$snap/_ptr/epoch=$epochId",
-                newPtr.map { case (g, e) => s"$g\t$e" }.mkString("\n"))
-              // prune: keep epochs referenced by the newest two pointer
-              // maps (the replay window), drop the rest
-              val keep = (newPtr.values.toSet ++ ptr.values.toSet) + epochId
-              StateFs.epochIds(snap).filterNot(keep.contains)
-                .foreach(e => StateFs.deleteRecursive(s"$snap/epoch=$e"))
-              StateFs.epochFileIds(s"$snap/_ptr").filter(_ < epochId - 1)
-                .foreach(e => StateFs.deleteRecursive(s"$snap/_ptr/epoch=$e"))
-              // recompute ONLY the dirty groups — `fresh` IS exactly
-              // their new partitions (at scale a reader recomputing
-              // later would take the partition-pruned, schema-pinned
-              // read of snap/epoch=K instead; same rows)
-              val recomputed = recompute(fresh)
-              val carried = latestMvBelow(s, mv, epochId)
-                .map(_.filter(!col(groupCol).isin(dirty.toSeq: _*)))
-                .getOrElse(recomputed.filter(lit(false)))
-              carried.unionByName(recomputed)
-                .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-            } finally { fresh.unpersist(); () }
-          } else {
-            // quiet batch (e.g. delete-only of already-absent keys):
-            // the MV still advances an epoch for replay bookkeeping
-            latestMvBelow(s, mv, epochId)
-              .getOrElse(s.createDataFrame(
-                new java.util.ArrayList[Row](), mvSchema))
-              .write.mode("overwrite").parquet(s"$mv/epoch=$epochId")
-          }
-          StateFs.epochIds(mv).filter(_ < epochId - 1)
-            .foreach(e => StateFs.deleteRecursive(s"$mv/epoch=$e"))
-        } finally {
-          images.unpersist(); txnFull.foreach(_.unpersist())
-          bdf.unpersist(); ()
-        }
-    }
-    (rows, epochs, maxSeq, pendingCount(s, state, txnCol), srcMaxSeq)
-  }
-
   /** Read-time collapse of all epoch deltas into the latest state (A8
     * semantics; seq is globally monotone per key, so max_by(seq) across
     * epochs is total), tombstones dropped. The published `_schema` (or
@@ -3336,8 +2992,9 @@ object StreamingOps {
     * through to the served state); when a tombstone-GC'ing compaction
     * has published a purge floor, re-delivered already-folded epochs
     * (non-baseline, seq at or below the floor) are ignored so purged
-    * deletes cannot resurrect. */
-  /** `keepSeq` appends each served row's winning `seq` to the output —
+    * deletes cannot resurrect.
+    *
+    * `keepSeq` appends each served row's winning `seq` to the output —
     * the collapse-with-position shape the MV attach paths snapshot
     * (their dirty-group machinery replays positions); the serving
     * default stays position-free. */
@@ -4972,7 +4629,7 @@ object StreamingOps {
           lit(1000L).as("seq"), col("ts"), lit(-424242L).as("okey"),
           lit(1.23).as("price"), lit("PHANTOM").as("status")))
         .write.mode("overwrite").parquet(s"$tmp/state/epoch=99")
-      repairState(s, truth, s"$tmp/state")
+      repairState(s, OneTable(s"$tmp/state"), Map(OneTable.Table -> truth))
       readLatestState(s, s"$tmp/state")
     }),
 
@@ -5029,7 +4686,7 @@ object StreamingOps {
     // multi-table consistency-fix flow live: the one-binlog→2-tables
     // fan-out applies, then BOTH destinations diverge differently
     // (t_even drifts prices, t_odd loses keys to a corrupting delete
-    // wave AND gains a phantom row); ONE repairStateMulti call — one
+    // wave AND gains a phantom row); ONE repairState call — one
     // diff job, one staged fan-out write, the pending tail consulted
     // once — must put the whole topology back to exactly the per-table
     // batch collapses.
@@ -5082,7 +4739,7 @@ object StreamingOps {
           lit(1000L).as("seq"), col("ts"), lit(-777L).as("okey"),
           lit(9.99).as("price"), lit("PHANTOM").as("status")))
         .write.mode("overwrite").parquet(s"$tmp/state_odd/epoch=99")
-      repairStateMulti(s, truthBy, dirs)
+      repairState(s, FanOut(dirs), truthBy)
       dirs.toSeq.sortBy(_._1).map { case (t, d) =>
         readLatestState(s, d).withColumn("tbl", lit(t))
       }.reduce(_.unionByName(_))
@@ -5438,14 +5095,15 @@ object StreamingOps {
       val tmp = tmpDir()
       val snap = log.filter(col("seq") === 1)
         .select(col("okey"), col("price"), col("status"), col("ts"))
-      mvSeedSum(s, snap, s"$tmp/state", s"$tmp/mv")
+      mvSeed(s, snap, s"$tmp/state", s"$tmp/mv", SumView())
       // the post-snapshot tail waves are immutable — shared across
       // passes like every wave fixture (the seed dirs stay per-query:
       // the resumed pass mutates them)
       val in = sharedWaves(dir, "cdclog_tail2w")(i =>
         writeWaves(log.filter(col("seq") > 1), i, col("seq") - 2, 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv")
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv", SumView()))
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -5464,7 +5122,8 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv")
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv", SumView()))
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -5521,7 +5180,7 @@ object StreamingOps {
     // COLUMN … DEFAULT (the measured column `amt`, added mid-stream —
     // pre-DDL rows must COUNT THE DEFAULT, not 0), the operator then
     // attaches a sum MV over the evolved table (CREATE MV … POPULATE,
-    // mvAttachSum — one group-by over the served state, defaults
+    // mvAttach — one group-by over the served state, defaults
     // filled), and maintenance continues through a RENAME of the group
     // column (grp → seg): the state side serves pre-rename epochs via
     // rename-history coalesce — so the delete wave's retraction deltas
@@ -5551,16 +5210,17 @@ object StreamingOps {
         PassSpec(OneTable(s"$tmp/state"),
           ddl = Ddl(defaults = Map("amt" -> ColumnDefault(1L, "5.00")))))
       // the operator creates the MV over the table AS EVOLVED
-      mvAttachSum(s, s"$tmp/state", s"$tmp/mv",
-        groupCol = "grp", measureCol = "amt")
+      mvAttach(s, s"$tmp/state", s"$tmp/mv",
+        SumView(groupCol = "grp", measureCol = "amt"))
       // wave 2 (seq 3): deletes, with the group column RENAMED grp→seg
       val w2 = log.filter(col("seq") === 3)
         .withColumn("seg", lit(null).cast(StringType))
         .withColumn("amt", lit(null).cast(DoubleType))
       writeWave(w2, in, 2)
-      runMvSumPass(s, w2.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
-        groupCol = "seg", measureCol = "amt",
-        renameCols = Map("grp" -> "seg"))
+      runMvPass(s, FileCdcSource(w2.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv",
+          SumView(groupCol = "seg", measureCol = "amt"),
+          ddl = Ddl(renames = Map("grp" -> "seg"))))
       readMv(s, s"$tmp/mv")
         .select(col("seg"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -5590,9 +5250,9 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclogdim_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
-        groupCol = "grp",
-        enrich = img => img.join(broadcast(dim), Seq("custkey")))
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv", SumView(groupCol = "grp",
+          enrich = img => img.join(broadcast(dim), Seq("custkey")))))
       readMv(s, s"$tmp/mv")
         .select(col("grp"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -5619,14 +5279,14 @@ object StreamingOps {
         org.apache.spark.sql.types.StructField("okey",
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("price", DoubleType)))
-      runMvRecomputePass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        s"$tmp/snap", s"$tmp/mv", Seq("okey"), "status", mvSchema,
-        rows => rows.withColumn("rnk", row_number().over(
-            Window.partitionBy(col("status"))
-              .orderBy(desc("price"), col("okey"))).cast(
-            org.apache.spark.sql.types.LongType))
-          .filter(col("rnk") <= 3)
-          .select(col("status"), col("rnk"), col("okey"), col("price")))
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv", RecomputeView("status",
+          s"$tmp/snap", mvSchema, rows => rows.withColumn("rnk",
+              row_number().over(Window.partitionBy(col("status"))
+                .orderBy(desc("price"), col("okey"))).cast(
+              org.apache.spark.sql.types.LongType))
+            .filter(col("rnk") <= 3)
+            .select(col("status"), col("rnk"), col("okey"), col("price")))))
       readMv(s, s"$tmp/mv").orderBy(col("status"), col("rnk"))
     }),
 
@@ -5643,9 +5303,10 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvSumPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state", s"$tmp/mv",
-        groupCol = "ym",
-        enrich = img => img.withColumn("ym", date_format(col("ts"), "yyyy-MM")))
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv", SumView(groupCol = "ym",
+          enrich = img =>
+            img.withColumn("ym", date_format(col("ts"), "yyyy-MM")))))
       readMv(s, s"$tmp/mv")
         .select(col("ym"), col("n_rows"),
           col("total").cast(DoubleType).as("total"))
@@ -5662,8 +5323,9 @@ object StreamingOps {
       val in = sharedWaves(dir, "cdclog_mv2w")(i =>
         writeWaves(log, i, when(col("seq") === 1, 0).otherwise(1), 2,
           Seq(col("okey"))))
-      runMvMinMaxPass(s, log.schema, in, s"$tmp/ckpt", s"$tmp/state",
-        s"$tmp/snap", s"$tmp/mv")
+      runMvPass(s, FileCdcSource(log.schema, in), s"$tmp/ckpt",
+        MvSpec(s"$tmp/state", s"$tmp/mv",
+          RecomputeView.minMax(s"$tmp/snap")))
       readMv(s, s"$tmp/mv")
         .select(col("status"), col("n_rows"), col("mn"), col("mx"))
         .orderBy(col("status"))

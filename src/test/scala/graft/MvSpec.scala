@@ -1,7 +1,8 @@
 package graft
 
 import graft.sources.FileCdcSource
-import graft.streaming.{Ddl, FanOut, OneTable, PassSpec}
+import graft.streaming.{Ddl, FanOut, OneTable, PassResult, PassSpec,
+  RecomputeView, SumView}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -56,6 +57,14 @@ class MvSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
 
+  /** One MV pass over `b`'s wave dir into its state and view dirs. */
+  private def mvPass(schema: org.apache.spark.sql.types.StructType,
+      b: String, view: streaming.MvView, keyCols: Seq[String] = Seq("okey"),
+      ddl: Ddl = Ddl()): PassResult =
+    StreamingOps.runMvPass(spark, FileCdcSource(schema, s"$b/in"),
+      s"$b/ckpt", streaming.MvSpec(s"$b/state", s"$b/mv", view, keyCols,
+        ddl = ddl))
+
   /** Write each epoch's events as one wave file. */
   private def writeEpochs(base: String, epochs: Seq[Seq[MvEv]]): Unit =
     epochs.zipWithIndex.foreach { case (evs, i) =>
@@ -64,14 +73,12 @@ class MvSpec extends SparkTestBase {
 
   private def runSum(base: String, epochs: Seq[Seq[MvEv]]): Unit = {
     writeEpochs(base, epochs)
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, SumView())
   }
 
   private def runMinMax(base: String, epochs: Seq[Seq[MvEv]]): Unit = {
     writeEpochs(base, epochs)
-    StreamingOps.runMvMinMaxPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, RecomputeView.minMax(s"$base/snap"))
   }
 
   test("sum MV: inserts, group-moving update, delete — equals recompute") {
@@ -104,8 +111,7 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
     StreamingOps.writeWave(evDf(e2), s"$base/in", 2) // duplicate delivery
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, SumView())
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2))
   }
 
@@ -166,9 +172,8 @@ class MvSpec extends SparkTestBase {
     val e2 = Seq(MvEv("D", 6, 4, 0.00, null))
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
-    StreamingOps.runMvRecomputePass(spark, evDf(Seq.empty).schema,
-      s"$base/in", s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      Seq("okey"), "status", mvSchema, top2)
+    mvPass(evDf(Seq.empty).schema, base,
+      RecomputeView("status", s"$base/snap", mvSchema, top2))
     val got = StreamingOps.readMv(spark, s"$base/mv").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -191,9 +196,8 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     StreamingOps.writeWave(e1, s"$base/in", 0)
     StreamingOps.writeWave(e2, s"$base/in", 1)
-    StreamingOps.runMvSumPass(spark, e1.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "grp",
-      enrich = img => img.join(broadcast(dim), Seq("custkey")))
+    mvPass(e1.schema, base, SumView(groupCol = "grp",
+      enrich = img => img.join(broadcast(dim), Seq("custkey"))))
     val served = StreamingOps.readMv(spark, s"$base/mv").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), BigDecimal(r.getDecimal(2)))))
       .toMap
@@ -212,10 +216,9 @@ class MvSpec extends SparkTestBase {
     val snapshot = evDf(e1).drop("op", "seq") // one alive row per key
     // SUM regime
     val b1 = tmp()
-    StreamingOps.mvSeedSum(spark, snapshot, s"$b1/state", s"$b1/mv")
+    StreamingOps.mvSeed(spark, snapshot, s"$b1/state", s"$b1/mv", SumView())
     writeEpochs(b1, Seq(e2, e3))
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$b1/in",
-      s"$b1/ckpt", s"$b1/state", s"$b1/mv")
+    mvPass(evDf(Seq.empty).schema, b1, SumView())
     assert(servedSum(s"$b1/mv") == refSum(all))
     // DIRTY-GROUP regime (top-2)
     val mvSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -235,12 +238,11 @@ class MvSpec extends SparkTestBase {
         .filter(col("rnk") <= 2)
         .select(col("status"), col("rnk"), col("okey"), col("price"))
     val b2 = tmp()
-    StreamingOps.mvSeedRecompute(spark, snapshot, s"$b2/state", s"$b2/snap",
-      s"$b2/mv", Seq("okey"), "status", top2)
+    StreamingOps.mvSeed(spark, snapshot, s"$b2/state", s"$b2/mv",
+      RecomputeView("status", s"$b2/snap", mvSchema, top2))
     writeEpochs(b2, Seq(e2, e3))
-    StreamingOps.runMvRecomputePass(spark, evDf(Seq.empty).schema,
-      s"$b2/in", s"$b2/ckpt", s"$b2/state", s"$b2/snap", s"$b2/mv",
-      Seq("okey"), "status", mvSchema, top2)
+    mvPass(evDf(Seq.empty).schema, b2,
+      RecomputeView("status", s"$b2/snap", mvSchema, top2))
     val got = StreamingOps.readMv(spark, s"$b2/mv").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSet
@@ -299,8 +301,9 @@ class MvSpec extends SparkTestBase {
       s"$base/ckpt", PassSpec(FanOut(dirs)))
     // per-shard views seeded from each shard's served slice
     dirs.values.foreach { d =>
-      StreamingOps.mvSeedSum(spark,
-        StreamingOps.readLatestState(spark, d).drop("op"), s"$d-st", s"$d-mv")
+      StreamingOps.mvSeed(spark,
+        StreamingOps.readLatestState(spark, d).drop("op"), s"$d-st", s"$d-mv",
+        SumView())
     }
     val merged = dirs.values.toSeq.sorted
       .map(d => StreamingOps.readMv(spark, s"$d-mv"))
@@ -368,9 +371,10 @@ class MvSpec extends SparkTestBase {
       waves.zipWithIndex.foreach { case (w, i) =>
         StreamingOps.writeWave(df(w), s"$base/in", i)
       }
-      StreamingOps.runMvSumPassSource(spark,
+      StreamingOps.runMvPass(spark,
         graft.sources.FileCdcSource(df(events).schema, s"$base/in"),
-        s"$base/ckpt", s"$base/state", s"$base/mv", txnCol = Some("txn"))
+        s"$base/ckpt", streaming.MvSpec(s"$base/state", s"$base/mv",
+          SumView(), txnCol = Some("txn")))
       assert(servedSum(s"$base/mv") == committedMv(events),
         s"seed ${5151L + s}: gated MV diverged from committed replay")
     }
@@ -522,8 +526,7 @@ class MvSpec extends SparkTestBase {
       .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
         col("status"), col("line_no"))
     StreamingOps.writeWave(ev, s"$base/in", 0)
-    StreamingOps.runMvSumPass(spark, ev.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", keyCols = Seq("okey", "line_no"))
+    mvPass(ev.schema, base, SumView(), keyCols = Seq("okey", "line_no"))
     assert(StreamingOps.readKeyCols(s"$base/state") == Seq("okey", "line_no"),
       "an MV-built state dir must publish its key like runCdcPass does — " +
         "compaction/repair would otherwise collapse on the wrong key")
@@ -532,27 +535,34 @@ class MvSpec extends SparkTestBase {
     assert(Replication.appliedState(spark, s"$base/state").count() == 2L)
   }
 
+  /** Envelope rows carrying a `txn` column (deletes ship no price). */
+  private def txnEv(rows: Seq[(String, Long, Long, Double, String, Long)]) =
+    spark.createDataFrame(rows.map(r =>
+        (r._1, r._2, r._3, Option(r._4).filterNot(_ => r._1 == "D"),
+          Option(r._5), r._6)))
+      .toDF("op", "seq", "okey", "price", "status", "txn")
+      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
+      .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
+        col("status"), col("txn"))
+
+  // wave 0: txn 1 (2 inserts) + its commit + HALF of txn 2 (no marker)
+  private def txnWave0 = txnEv(Seq(("I", 1, 1, 10.00, "A", 1L),
+    ("I", 2, 2, 20.00, "B", 1L), ("C", 3, -1, 0.0, null, 1L),
+    ("U", 4, 1, 11.00, "B", 2L)))
+  // wave 1: rest of txn 2 + its commit, and txn 3 with NO commit ever
+  private def txnWave1 = txnEv(Seq(("D", 5, 2, 0.0, null, 2L),
+    ("C", 6, -1, 0.0, null, 2L), ("I", 7, 3, 5.00, "A", 3L)))
+
   test("txn-gated MV: straddling txn lands atomically, uncommitted txn never shows") {
-    def ev(rows: Seq[(String, Long, Long, Double, String, Long)]) =
-      spark.createDataFrame(rows.map(r =>
-          (r._1, r._2, r._3, Option(r._4).filterNot(_ => r._1 == "D"),
-            Option(r._5), r._6)))
-        .toDF("op", "seq", "okey", "price", "status", "txn")
-        .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("seq")))
-        .select(col("op"), col("seq"), col("ts"), col("okey"), col("price"),
-          col("status"), col("txn"))
-    // wave 0: txn 1 (2 inserts) + its commit + HALF of txn 2 (no marker)
-    val w0 = ev(Seq(("I", 1, 1, 10.00, "A", 1L), ("I", 2, 2, 20.00, "B", 1L),
-      ("C", 3, -1, 0.0, null, 1L), ("U", 4, 1, 11.00, "B", 2L)))
-    // wave 1: rest of txn 2 + its commit, and txn 3 with NO commit ever
-    val w1 = ev(Seq(("D", 5, 2, 0.0, null, 2L), ("C", 6, -1, 0.0, null, 2L),
-      ("I", 7, 3, 5.00, "A", 3L)))
+    val w0 = txnWave0
+    val w1 = txnWave1
     val base = tmp()
     StreamingOps.writeWave(w0, s"$base/in", 0)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvSumPassSource(spark,
+    StreamingOps.runMvPass(spark,
       graft.sources.FileCdcSource(w0.schema, s"$base/in"),
-      s"$base/ckpt", s"$base/state", s"$base/mv", txnCol = Some("txn"))
+      s"$base/ckpt", streaming.MvSpec(s"$base/state", s"$base/mv",
+        SumView(), txnCol = Some("txn")))
     // committed view: txn1 ∪ txn2 = k1 moved A→B at 11.00, k2 deleted;
     // txn3's k3 must be INVISIBLE (no commit marker ever arrived)
     assert(servedSum(s"$base/mv") == Map("B" -> ((1L, BigDecimal("11.00")))))
@@ -569,13 +579,13 @@ class MvSpec extends SparkTestBase {
     val b2 = tmp()
     StreamingOps.writeWave(w0, s"$b2/in", 0)
     StreamingOps.writeWave(w1, s"$b2/in", 1)
-    StreamingOps.runMvRecomputePassSource(spark,
+    StreamingOps.runMvPass(spark,
       graft.sources.FileCdcSource(w0.schema, s"$b2/in"),
-      s"$b2/ckpt", s"$b2/state", s"$b2/snap", s"$b2/mv",
-      Seq("okey"), "status", mvSchema,
-      rows => rows.groupBy(col("status")).agg(count(lit(1)).as("n_rows"),
-        min(col("price")).as("mn"), max(col("price")).as("mx")),
-      txnCol = Some("txn"))
+      s"$b2/ckpt", streaming.MvSpec(s"$b2/state", s"$b2/mv",
+        RecomputeView("status", s"$b2/snap", mvSchema,
+          rows => rows.groupBy(col("status")).agg(count(lit(1)).as("n_rows"),
+            min(col("price")).as("mn"), max(col("price")).as("mx"))),
+        txnCol = Some("txn")))
     assert(servedMinMax(s"$b2/mv") == Map("B" -> ((1L, 11.00, 11.00))))
     // and the FACADE exposes the gate: same waves through
     // incrementalSyncWithView(txnCol), same committed view, and the
@@ -593,6 +603,57 @@ class MvSpec extends SparkTestBase {
       s"the abandoned txn must surface in progress: $progress")
   }
 
+  test("MV position contract: a txn-gated MV pass reports what a one-table CDC pass reports") {
+    // the same waves, ending in txn 3's uncommitted tail, through both
+    // passes: rows consumed, the resolved position (commit marker 6), the
+    // seen position (7), the pending tail and the time marks must agree
+    val base = tmp()
+    StreamingOps.writeWave(txnWave0, s"$base/in", 0)
+    StreamingOps.writeWave(txnWave1, s"$base/in", 1)
+    val src = FileCdcSource(txnWave0.schema, s"$base/in")
+    val mv = StreamingOps.runMvPass(spark, src, s"$base/ckpt_mv",
+      streaming.MvSpec(s"$base/state_mv", s"$base/mv", SumView(),
+        txnCol = Some("txn"), trackSeq = true))
+    val cdc = StreamingOps.runCdcPass(spark, src, s"$base/ckpt_cdc",
+      PassSpec(OneTable(s"$base/state_cdc"), txnCol = Some("txn"),
+        trackSeq = true))
+    def position(r: PassResult) =
+      (r.rowsConsumed, r.resolvedSeq, r.seenSeq, r.pendingRows)
+    assert(position(mv) == position(cdc), s"MV $mv vs CDC $cdc")
+    assert(position(mv) == ((7L, Some(6L), Some(7L), 1L)), s"$mv")
+    // and the time horizons persist alike (`_lag`, read by replicaStatus)
+    assert(StreamingOps.readLagMarks(s"$base/state_mv") ==
+      StreamingOps.readLagMarks(s"$base/state_cdc"))
+    assert(StreamingOps.readLagMarks(s"$base/state_mv")._2.isDefined)
+    def served(d: String) = Replication.appliedState(spark, d)
+      .collect().map(_.toSeq).toSet
+    assert(served(s"$base/state_mv") == served(s"$base/state_cdc"))
+  }
+
+  test("seeded sum MV over a custom measure equals the group-by over the state") {
+    // the seed and the pass both sum the declared measure: key 3 stays
+    // untouched after the seed, so its seeded `qty` must still count
+    val snapshot = evDf(Seq(MvEv("I", 1, 1, 7.00, "A"),
+        MvEv("I", 2, 2, 3.00, "A"), MvEv("I", 3, 3, 5.00, "B")))
+      .drop("op", "seq").withColumn("qty", col("okey") * 10.0 + 0.5)
+    val wave = evDf(Seq(MvEv("U", 4, 2, 8.00, "B"),
+        MvEv("I", 5, 4, 2.00, "A"), MvEv("D", 6, 1, 0.00, null)))
+      .withColumn("qty", when(col("op") =!= "D", col("okey") * 100.0 + 0.25))
+    val base = tmp()
+    val view = SumView(measureCol = "qty")
+    StreamingOps.mvSeed(spark, snapshot, s"$base/state", s"$base/mv", view)
+    StreamingOps.writeWave(wave, s"$base/in", 0)
+    mvPass(wave.schema, base, view)
+    def groupSum(c: String) = Replication.appliedState(spark, s"$base/state")
+      .groupBy(col("status"))
+      .agg(count(lit(1)), sum(Tables.dec2(col(c))).cast(Tables.D2))
+      .collect().map(r => r.getString(0) ->
+        ((r.getLong(1), BigDecimal(r.getDecimal(2))))).toMap
+    assert(servedSum(s"$base/mv") == groupSum("qty"),
+      s"served ${servedSum(s"$base/mv")} vs ${groupSum("qty")}")
+    assert(groupSum("qty") != groupSum("price"), "fixture cannot tell them apart")
+  }
+
   test("MV ingest continues across a state compaction (the bounded-lookup claim)") {
     // the old-image lookup's cost contract is "compacted baseline +
     // recent deltas"; prove the pass keeps maintaining correctly after
@@ -603,16 +664,14 @@ class MvSpec extends SparkTestBase {
     val e3 = Seq(MvEv("I", 6, 4, 2.00, "B"), MvEv("D", 7, 2, 0.00, null))
     val base = tmp()
     writeEpochs(base, Seq(e1, e2))
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, SumView())
     // fold the state's epochs into a baseline (tombstone GC on)
     StreamingOps.compactState(spark, s"$base/state",
       tombstoneHorizon = Some(0))
     // deliver one more wave through the SAME checkpoint — the pass
     // resumes, and the old-image lookup now reads baseline + new delta
     StreamingOps.writeWave(evDf(e3), s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, SumView())
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2 ++ e3))
   }
 
@@ -635,8 +694,7 @@ class MvSpec extends SparkTestBase {
       graft.streaming.StreamingOps.writeWave(export, s"$dn/in", w - 1)
       lastPos = prog.lastSeq.get
     }
-    StreamingOps.runMvSumPass(spark, Tables.cdcLog(spark, sf).schema,
-      s"$dn/in", s"$dn/ckpt", s"$dn/state", s"$dn/mv")
+    mvPass(Tables.cdcLog(spark, sf).schema, dn, SumView())
     // the chained MV equals the group-by over the UPSTREAM final state
     val expect = Replication.appliedState(spark, s"$up/state")
       .groupBy(col("status"))
@@ -652,8 +710,7 @@ class MvSpec extends SparkTestBase {
     val base = tmp()
     (1 to 3).foreach(w => graft.streaming.StreamingOps.writeWave(
       log.filter(col("seq") === w), s"$base/in", w - 1))
-    StreamingOps.runMvSumPass(spark, log.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", keyCols = Seq("okey", "line_no"))
+    mvPass(log.schema, base, SumView(), keyCols = Seq("okey", "line_no"))
     import org.apache.spark.sql.expressions.Window
     val expect = log.withColumn("rn", row_number().over(
         Window.partitionBy(col("okey"), col("line_no"))
@@ -685,8 +742,8 @@ class MvSpec extends SparkTestBase {
         .select(col("op"), col("seq"), col("ts"), col("okey"),
           col("price"), col("status")))
     val base = tmp()
-    StreamingOps.runMvSumPassSource(spark, src, s"$base/ckpt",
-      s"$base/state", s"$base/mv")
+    StreamingOps.runMvPass(spark, src, s"$base/ckpt",
+      streaming.MvSpec(s"$base/state", s"$base/mv", SumView()))
     assert(servedSum(s"$base/mv") == refSum(e1 ++ e2),
       "the MV must maintain identically over a memory transport")
   }
@@ -709,7 +766,7 @@ class MvSpec extends SparkTestBase {
 
   test("attach a minmax MV to an existing replica; dirty-group maintenance continues") {
     // the recompute-family POPULATE flow: two plain sync passes build the
-    // replica, mvAttachMinMax seeds snapshot+pointer+view from the served
+    // replica, mvAttach seeds snapshot+pointer+view from the served
     // state, then a delete of a group's current MAX arrives — the dirty
     // group must recompute from the attached snapshot (the carried rows
     // were never written by an MV pass), untouched groups carry forward
@@ -725,16 +782,15 @@ class MvSpec extends SparkTestBase {
     StreamingOps.runCdcPass(spark,
       FileCdcSource(evDf(Seq.empty).schema, s"$base/in"), s"$base/ckpt",
       PassSpec(OneTable(s"$base/state")))
-    StreamingOps.mvAttachMinMax(spark, s"$base/state", s"$base/snap",
-      s"$base/mv")
+    StreamingOps.mvAttach(spark, s"$base/state", s"$base/mv",
+      RecomputeView.minMax(s"$base/snap"))
     assert(servedMinMax(s"$base/mv") == refMinMax(e1 ++ e2),
       s"attach view: ${servedMinMax(s"$base/mv")}")
     // wave 3: delete A's max (k2@40) and insert into B — A recomputes
     // from the attached snapshot minus k2, B from snapshot plus k4
     val e3 = Seq(MvEv("D", 5, 2, 0.00, null), MvEv("I", 6, 4, 7.00, "B"))
     StreamingOps.writeWave(evDf(e3), s"$base/in", 2)
-    StreamingOps.runMvMinMaxPass(spark, evDf(Seq.empty).schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv")
+    mvPass(evDf(Seq.empty).schema, base, RecomputeView.minMax(s"$base/snap"))
     val all = e1 ++ e2 ++ e3
     assert(servedMinMax(s"$base/mv") == refMinMax(all),
       s"post-attach maintenance: ${servedMinMax(s"$base/mv")} vs ${refMinMax(all)}")
@@ -764,17 +820,15 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "g1"), ("I", 2L, 2L, 5.0, "g2")),
       "grp")
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvSumPass(spark, w0.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "grp")
+    mvPass(w0.schema, base, SumView(groupCol = "grp"))
     // the pre-rename MV content — what the crashed swap's trash held
     val preRows = StreamingOps.readMv(spark, s"$base/mv").collect().toSeq
     val preCols = StreamingOps.readMv(spark, s"$base/mv").schema
     // committed rename grp→seg (k1's price moves to 12 in the same pass)
     val w1 = frame(Seq(("U", 3L, 1L, 12.0, "g1")), "seg")
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvSumPass(spark, w1.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "seg",
-      renameCols = Map("grp" -> "seg"))
+    mvPass(w1.schema, base, SumView(groupCol = "seg"),
+      ddl = Ddl(renames = Map("grp" -> "seg")))
     assert(servedSum(s"$base/mv") == Map(
       "g1" -> ((1L, BigDecimal("12.00"))),
       "g2" -> ((1L, BigDecimal("5.00")))))
@@ -791,9 +845,8 @@ class MvSpec extends SparkTestBase {
     // then swap seg→zone over the LIVE data — never the stale copy
     val w2 = frame(Seq(("I", 4L, 3L, 2.0, "g2")), "zone")
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, w2.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "zone",
-      renameCols = Map("seg" -> "zone"))
+    mvPass(w2.schema, base, SumView(groupCol = "zone"),
+      ddl = Ddl(renames = Map("seg" -> "zone")))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "zone")
     assert(servedSum(s"$base/mv") == Map(
       "g1" -> ((1L, BigDecimal("12.00"))),
@@ -808,9 +861,8 @@ class MvSpec extends SparkTestBase {
     val w3 = frame(Seq(("I", 5L, 4L, 1.0, "g1")), "zone")
     StreamingOps.writeWave(w3, s"$base/in", 3)
     val e = intercept[IllegalArgumentException] {
-      StreamingOps.runMvSumPass(spark, w3.schema, s"$base/in",
-        s"$base/ckpt", s"$base/state", s"$base/mv", groupCol = "zone",
-        renameCols = Map("zone" -> "region"))
+      mvPass(w3.schema, base, SumView(groupCol = "zone"),
+        ddl = Ddl(renames = Map("zone" -> "region")))
     }
     assert(e.getMessage.contains("pre-claim-protocol"))
   }
@@ -833,16 +885,13 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, 10.0, "g1"), ("I", 2L, 2L, 30.0, "g1"),
       ("I", 3L, 3L, 5.0, "g2")), "grp")
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvMinMaxPass(spark, w0.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      groupCol = "grp")
+    mvPass(w0.schema, base, RecomputeView.minMax(s"$base/snap", "grp"))
     // pass 2: RENAME grp→seg; delete g1's max (k2) — g1 recomputes from
     // the MIGRATED snapshot partition, g2 carries untouched
     val w1 = frame(Seq(("D", 4L, 2L, 0.0, null)), "seg")
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvMinMaxPass(spark, w1.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      groupCol = "seg", renameCols = Map("grp" -> "seg"))
+    mvPass(w1.schema, base, RecomputeView.minMax(s"$base/snap", "seg"),
+      ddl = Ddl(renames = Map("grp" -> "seg")))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "seg",
       "the view's group column must migrate with the rename")
     assert(servedMinMax(s"$base/mv") == Map(
@@ -853,9 +902,7 @@ class MvSpec extends SparkTestBase {
     val w2 = frame(Seq(("I", 5L, 4L, 7.0, "g2"), ("U", 6L, 1L, 12.0, "g2")),
       "seg")
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvMinMaxPass(spark, w2.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      groupCol = "seg")
+    mvPass(w2.schema, base, RecomputeView.minMax(s"$base/snap", "seg"))
     assert(servedMinMax(s"$base/mv") == Map("g2" -> ((3L, 5.0, 12.0))),
       s"post-rename maintenance: ${servedMinMax(s"$base/mv")}")
   }
@@ -889,9 +936,7 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, "g1", null), ("I", 2L, 2L, "g1", null),
       ("I", 3L, 3L, "g2", null)), withAmt = false)
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvRecomputePass(spark, w0.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      Seq("okey"), "grp", mvSchema, rec)
+    mvPass(w0.schema, base, RecomputeView("grp", s"$base/snap", mvSchema, rec))
     // pass 2: ADD COLUMN amt DEFAULT 7.50 at position 3; k2 writes 2.00,
     // k3 writes an explicit NULL. g1's recompute reads k1 from the
     // PRE-DDL snapshot partition — the fill must serve 7.50, so
@@ -899,10 +944,9 @@ class MvSpec extends SparkTestBase {
     val w1 = frame(Seq(("U", 4L, 2L, "g1", 2.0), ("U", 5L, 3L, "g2", null)),
       withAmt = true)
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvRecomputePass(spark, w1.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      Seq("okey"), "grp", mvSchema, rec,
-      defaultCols = Map("amt" -> StreamingOps.ColumnDefault(3L, "7.50")))
+    mvPass(w1.schema, base,
+      RecomputeView("grp", s"$base/snap", mvSchema, rec),
+      ddl = Ddl(defaults = Map("amt" -> StreamingOps.ColumnDefault(3L, "7.50"))))
     val served = StreamingOps.readMv(spark, s"$base/mv").collect()
       .map(r => r.getString(0) ->
         ((r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Double]))))
@@ -918,7 +962,7 @@ class MvSpec extends SparkTestBase {
     // serve the re-add default for rows untouched since before the drop
     // — never the stale bytes still on disk. (Untouched groups carry
     // their pre-DDL view forward — the recompute family's documented
-    // contract; a value-rewriting DDL needs mvAttachRecompute to
+    // contract; a value-rewriting DDL needs mvAttach to
     // rebuild, the POPULATE path.)
     import org.apache.spark.sql.types.{StructType, StructField, StringType,
       LongType, DoubleType}
@@ -940,19 +984,16 @@ class MvSpec extends SparkTestBase {
     val w0 = frame(Seq(("I", 1L, 1L, "g1", 100.0), ("I", 2L, 2L, "g1", 200.0),
       ("I", 3L, 3L, "g2", 300.0)))
     StreamingOps.writeWave(w0, s"$base/in", 0)
-    StreamingOps.runMvRecomputePass(spark, w0.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      Seq("okey"), "grp", mvSchema, rec)
+    mvPass(w0.schema, base, RecomputeView("grp", s"$base/snap", mvSchema, rec))
     // pass 2: DROP amt at position 3, RE-ADD DEFAULT 7.50 at position 4;
     // k2 rewrites amt=2.00 (seq 5), dirtying g1 — whose recompute reads
     // k1's snapshot row (physically 100.0): gate to NULL, fill 7.50
     val w1 = frame(Seq(("U", 5L, 2L, "g1", 2.0)))
     StreamingOps.writeWave(w1, s"$base/in", 1)
-    StreamingOps.runMvRecomputePass(spark, w1.schema, s"$base/in",
-      s"$base/ckpt", s"$base/state", s"$base/snap", s"$base/mv",
-      Seq("okey"), "grp", mvSchema, rec,
-      dropCols = Map("amt" -> 3L),
-      defaultCols = Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50")))
+    mvPass(w1.schema, base,
+      RecomputeView("grp", s"$base/snap", mvSchema, rec),
+      ddl = Ddl(drops = Map("amt" -> 3L),
+        defaults = Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50"))))
     val served = StreamingOps.readMv(spark, s"$base/mv").collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(served == Map("g1" -> ((2L, 7.5)), "g2" -> ((1L, 300.0))),
@@ -996,8 +1037,8 @@ class MvSpec extends SparkTestBase {
         ddl = Ddl(defaults =
           Map("amt" -> StreamingOps.ColumnDefault(4L, "7.50")))))
     // attach: g1 = (2, 7.50 + 2.00); g2 = (2, NULL + 7.50)
-    StreamingOps.mvAttachSum(spark, s"$base/state", s"$base/mv",
-      groupCol = "grp", measureCol = "amt")
+    StreamingOps.mvAttach(spark, s"$base/state", s"$base/mv",
+      SumView(groupCol = "grp", measureCol = "amt"))
     def served(): Map[String, (Long, BigDecimal)] = servedSum(s"$base/mv")
     assert(served() == Map(
       "g1" -> (2L, BigDecimal("9.50")), "g2" -> (2L, BigDecimal("7.50"))),
@@ -1006,9 +1047,8 @@ class MvSpec extends SparkTestBase {
     // subtract the DEFAULT it served, 7.50, not 0)
     val w2 = frame(Seq(ev("D", 7, 1, null, null)), "seg", withAmt = true)
     StreamingOps.writeWave(w2, s"$base/in", 2)
-    StreamingOps.runMvSumPass(spark, w2.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "seg", measureCol = "amt",
-      renameCols = Map("grp" -> "seg"))
+    mvPass(w2.schema, base, SumView(groupCol = "seg", measureCol = "amt"),
+      ddl = Ddl(renames = Map("grp" -> "seg")))
     assert(StreamingOps.readMv(spark, s"$base/mv").columns.head == "seg",
       "the view's group column must migrate with the rename")
     assert(served() == Map(
@@ -1019,8 +1059,7 @@ class MvSpec extends SparkTestBase {
     val w3 = frame(Seq(ev("I", 8, 4, "g2", 1.25), ev("U", 9, 2, "g2", 2.0)),
       "seg", withAmt = true)
     StreamingOps.writeWave(w3, s"$base/in", 3)
-    StreamingOps.runMvSumPass(spark, w3.schema, s"$base/in", s"$base/ckpt",
-      s"$base/state", s"$base/mv", groupCol = "seg", measureCol = "amt")
+    mvPass(w3.schema, base, SumView(groupCol = "seg", measureCol = "amt"))
     assert(served() == Map(
       "g2" -> (4L, BigDecimal("10.75"))),
       s"maintenance must continue on the migrated view: ${served()}")

@@ -1952,6 +1952,35 @@ class ReplicationSpec extends SparkTestBase {
       keyColsByTable = Map("t_f" -> Seq("fk"), "t_l" -> Seq("okey", "fk")))
     assert(prices(s"$fb/sf") == Seq(2.0, 4.0))
     assert(prices(s"$fb/sl") == Seq(6.0, 8.0))
+    // a truth holding the OTHER zero of a float key diffs as the same
+    // key (the repair joins like the collapse groups): nothing to
+    // repair, and the row keeps serving — through the one-table facade
+    // and a one-entry topology alike
+    Replication.incrementalSyncMulti(spark, fl.schema, s"$fb/in1",
+      s"$fb/ckpt3", Map("t_f" -> s"$fb/sf1"),
+      keyColsByTable = Map("t_f" -> Seq("fk")))
+    def signedZeros(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("fk")).collect().map(_.getDouble(0))
+        .filter(_ == 0.0).map(z => 1.0 / z > 0).toSeq
+    def flipped(dir: String) = {
+      val served = Replication.appliedState(spark, dir).drop("op")
+      val truth = served.withColumn("fk",
+        when(col("fk") === 0.0, -col("fk")).otherwise(col("fk")))
+        .localCheckpoint()
+      assert(signedZeros(truth).size == 1 &&
+        signedZeros(truth) != signedZeros(served), s"$dir: fixture")
+      truth
+    }
+    val none = Replication.RepairReport(0, 0, 0)
+    val oneRep = Replication.repairSync(spark, flipped(s"$fb/one"),
+      s"$fb/one", Seq("fk"))
+    assert(oneRep == none, s"one-table: $oneRep")
+    val topoRep = Replication.repairSyncMulti(spark,
+      Map("t_f" -> flipped(s"$fb/sf1")), Map("t_f" -> s"$fb/sf1"),
+      keyColsByTable = Map("t_f" -> Seq("fk")))
+    assert(topoRep == Map("t_f" -> none), s"topology: $topoRep")
+    assert(prices(s"$fb/one") == Seq(2.0, 4.0))
+    assert(prices(s"$fb/sf1") == Seq(2.0, 4.0))
   }
 
   test("one apply pass: a one-table sync and a one-entry topology serve " +
@@ -2849,6 +2878,15 @@ class ReplicationSpec extends SparkTestBase {
       s"t_even: ${reports("t_even")}")
     assert(reports("t_odd") == Replication.RepairReport(1, 0, 1),
       s"t_odd: ${reports("t_odd")}")
+    // each correction epoch carries the bucket column like every other
+    // state write, so bucket-gated probes prune it instead of reading it
+    for (dir <- dirs.values) {
+      val fix = graft.streaming.StateFs.epochIds(dir).min
+      val rows = spark.read.parquet(s"$dir/epoch=$fix")
+      assert(fix < 0 && rows.columns.contains("_bucket") &&
+        rows.filter(col("_bucket").isNull).count() == 0L,
+        s"$dir/epoch=$fix: ${rows.columns.mkString(", ")}")
+    }
     // both tables converged: the user-facing consistency check passes
     for ((t, dir) <- dirs) {
       val check = Replication.consistencyCheck(truthBy(t),

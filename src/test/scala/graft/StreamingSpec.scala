@@ -713,8 +713,8 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet ==
       Set(Seq(1L, 15.0, "B")),
       "the CDC pass must apply identically over a custom transport")
-    StreamingOps.runMvSumPassSource(spark, custom, s"$base/ckpt_mv",
-      s"$base/state_mv", s"$base/mv")
+    StreamingOps.runMvPass(spark, custom, s"$base/ckpt_mv",
+      streaming.MvSpec(s"$base/state_mv", s"$base/mv", streaming.SumView()))
     assert(StreamingOps.readMv(spark, s"$base/mv")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
       Set(("B", 1L)),
